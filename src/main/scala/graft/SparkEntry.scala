@@ -576,7 +576,6 @@ object SparkEntry {
     * codegen'd [[graft.ext.FloatCosineSimilarity]] kernel.
     */
   def q21SimTopK(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     Similarity.bruteForceTopK(embQueries(spark, dir), Tables.embeddings(spark, dir), 5,
       scorer = graft.ext.VectorKernels.CosineF)
       .orderBy(col("query_id"), col("rank"))
@@ -590,7 +589,6 @@ object SparkEntry {
     * surface is q22b's SRP-blocked path.
     */
   def q22CosineNearDup(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     Similarity.cosineNearDupPairs(
       Tables.embeddings(spark, dir).filter(col("vec_id") < 800),
       "vec_id", "embedding", 0.4,
@@ -612,7 +610,6 @@ object SparkEntry {
     * dataset — a full hash-checked row for the LSH scale path.
     */
   def q22bSrpNearDup(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val twins = base.select(
       (col("vec_id") + 100000).as("vec_id"),
@@ -631,7 +628,6 @@ object SparkEntry {
     * ExtSpec pins recall on planted clusters.
     */
   def q23IvfTopK(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     val clustered = Similarity.kmeansLabels(
       Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
       "vec_id", "embedding", k = 10, iters = 3,
@@ -654,7 +650,6 @@ object SparkEntry {
     * stays rows-only.
     */
   def q23bIvfRecall(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     val clustered = Similarity.kmeansLabels(
       Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
       "vec_id", "embedding", k = 10, iters = 3,
@@ -2626,7 +2621,6 @@ object SparkEntry {
     * co-cluster; recall loss would fail the row.
     */
   def q101SemanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val twins = base.select(
       (col("vec_id") + 100000).as("vec_id"),
@@ -2967,7 +2961,6 @@ object SparkEntry {
     * hash-checked recall contract.
     */
   def q109IvfAdcTopK(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // the two quantizer trainings are independent action sequences
     // over the same frame — overlap them (guide §2.6)
@@ -2997,7 +2990,6 @@ object SparkEntry {
     * regression fails the gate.
     */
   def q109bIvfAdcContract(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // independent trainings — overlap (guide §2.6), results unchanged
     val (clustered, cbs) = overlapped(
@@ -3045,7 +3037,6 @@ object SparkEntry {
     * 0.79/0.70/0.54 — `tools/AnnProbe` reprints these) with margin.
     */
   def q110AdcRefineContract(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val cbs = graft.ext.Features.pqTrainCodebooks(
       base, "vec_id", "embedding", m = 16, k = 16, iters = 3)
@@ -3088,7 +3079,6 @@ object SparkEntry {
     * the index, decided at the SCAN.
     */
   def q111AnnIndexRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // independent trainings — overlap (guide §2.6), results unchanged
     val (clustered, cbs) = overlapped(
@@ -3138,7 +3128,6 @@ object SparkEntry {
     * 0.64/0.65/0.48 — `tools/AnnProbe` reprints all series).
     */
   def q114IvfPqRefinePipeline(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // independent trainings — overlap (guide §2.6), results unchanged
     val (clustered, cbs) = overlapped(
@@ -3184,7 +3173,6 @@ object SparkEntry {
     * returns row-identical results to the batch index's.
     */
   def q113StreamIndexIngest(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // independent trainings — overlap (guide §2.6), results unchanged
     val (centroids, cbs) = overlapped(
@@ -3242,7 +3230,6 @@ object SparkEntry {
     * present before and gone after.
     */
   def q115CompactIndex(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val tmp = tempDir("graft-q115")
     // three independent setup legs (kmeans training, PQ training, the
@@ -3456,7 +3443,6 @@ object SparkEntry {
     * equality plus exactly k rows per query.
     */
   def q121StreamQueryServe(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // independent trainings — overlap (guide §2.6), results unchanged
     val (clustered, cbs) = overlapped(
@@ -3753,7 +3739,6 @@ object SparkEntry {
     */
   def q128HardNegatives(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.ext.VectorKernels.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val q = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
@@ -4032,7 +4017,6 @@ object SparkEntry {
   def q137HybridRetrieval(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    graft.ext.VectorKernels.register(spark)
     val bm = Text.bm25TopK(Tables.documents(spark, dir), "doc_id", "text",
       Seq(("disc", Seq("vector", "spark")), ("stop", Seq("the", "a")),
         ("mixed", Seq("merge", "window", "customer"))), k = 50)
@@ -4386,7 +4370,6 @@ object SparkEntry {
     * corpus-dependent number).
     */
   def q148NprobeSweep(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     val clustered = Similarity.kmeansLabels(
       Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
       "vec_id", "embedding", k = 10, iters = 3,
@@ -4446,7 +4429,6 @@ object SparkEntry {
     * over the partitioned corpus (see the operator's 100 TB note).
     */
   def q151MarginMine(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     val emb = Tables.embeddings(spark, dir)
     def sideIs(side: Int) = pmod(col("vec_id"), lit(2)) === side
     val src = emb.filter(sideIs(0) && col("vec_id") < 40)
@@ -5631,7 +5613,6 @@ object SparkEntry {
     * serve q121, compact q115, delete here).
     */
   def q200IndexDelete(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // independent trainings — overlap (guide §2.6), results unchanged
     val (clustered, cbs) = overlapped(
@@ -5859,7 +5840,6 @@ object SparkEntry {
     * are the stable artifact.
     */
   def q203SqAdcContract(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val stats = graft.ext.Features.dimMinMax(base, "embedding")
     val codes = graft.ext.Features.quantizeVectors(base, "vec_id", "embedding", stats)
@@ -5926,7 +5906,6 @@ object SparkEntry {
     * in the retriever.
     */
   def q205MmrRerank(spark: SparkSession, dir: String): DataFrame = {
-    graft.ext.VectorKernels.register(spark)
     val corpus = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val cand = Similarity.bruteForceTopK(embQueries(spark, dir), corpus, 20,
       scorer = graft.ext.VectorKernels.CosineF)

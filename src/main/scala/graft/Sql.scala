@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SQL entry point — the reference delegates analyst queries to Athena
   * over the Gold layer (SURVEY.md §3.2); here the same surface is
-  * `spark.sql` over registered temp views of the testdata tables (plus
-  * the vector kernels for similarity SQL).
+  * `spark.sql` over registered temp views of the testdata tables.
   */
 object Sql {
 
@@ -15,7 +14,6 @@ object Sql {
       val df = if (n == "events") Tables.events(spark, dir) else Tables.load(spark, dir, n)
       df.createOrReplaceTempView(n)
     }
-    ext.VectorKernels.register(spark)
   }
 
   def query(spark: SparkSession, dir: String, sql: String): DataFrame = {

@@ -92,9 +92,8 @@ object Verify {
       val sess = spark.newSession()
       pool.submit(new Runnable {
         def run(): Unit = {
-          // library code that self-registers kernels binds to the
-          // thread-local ACTIVE session; point it at this dump's
-          // session so registration and analysis see the same registry
+          // SQLConf.get and anything else that reads the thread-local
+          // ACTIVE session must see this dump's session, not the parent
           SparkSession.setActiveSession(sess)
           try dump(name, fn, sess)
           finally SparkSession.clearActiveSession()

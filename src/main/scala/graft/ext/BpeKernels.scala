@@ -1,11 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.KernelColumns.{column, expr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -118,31 +118,13 @@ case class AdjacentPairs(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Registration + Column surface for the BPE kernels. */
+/** Column surface for the BPE kernels. */
 object BpeKernels {
-  private val mergeName = "graft_bpe_merge_once"
-  private val pairsName = "graft_adjacent_pairs"
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      mergeName, exprs => GreedyPairMerge(
-        exprs(0),
-        exprs(1).eval(null).toString,
-        exprs(2).eval(null).toString), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      pairsName, exprs => AdjacentPairs(exprs(0)), "built-in")
-  }
 
   /** Greedy single-rule merge over an `array<string>` symbol column. */
-  def mergeOnce(syms: Column, bx: String, by: String): Column = {
-    register(SparkSession.active)
-    call_function(mergeName, syms, lit(bx), lit(by))
-  }
+  def mergeOnce(syms: Column, bx: String, by: String): Column =
+    column(GreedyPairMerge(expr(syms), bx, by))
 
   /** Adjacent (x, y) symbol pairs of an `array<string>` column. */
-  def adjacentPairs(syms: Column): Column = {
-    register(SparkSession.active)
-    call_function(pairsName, syms)
-  }
+  def adjacentPairs(syms: Column): Column = column(AdjacentPairs(expr(syms)))
 }

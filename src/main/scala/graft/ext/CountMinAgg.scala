@@ -2,13 +2,13 @@ package graft.ext
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, KernelColumns}
+import org.apache.spark.sql.KernelColumns.expr
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Mergeable COUNT-MIN sketch AGGREGATE (Cormode & Muthukrishnan,
@@ -110,24 +110,11 @@ case class CountMinAgg(
 }
 
 object CountMinAgg {
-  private val name = "graft_cms_agg"
   val Width = 4096
 
-  /** Idempotent registration on the active session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => CountMinAgg(
-        exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int],
-        exprs(2).eval(null).asInstanceOf[Int]).toAggregateExpression(),
-      "built-in")
-
   /** Aggregate Column: count-min sketch of the group's `item`s. */
-  def cmsAgg(item: Column, depth: Int): Column = {
-    register(SparkSession.active)
-    call_function(name, item, lit(depth), lit(Width))
-  }
+  def cmsAgg(item: Column, depth: Int): Column =
+    KernelColumns.aggregate(CountMinAgg(expr(item), depth, Width))
 
   /** Point-estimate of `key`'s frequency from a sketch column: min over
     * rows of the key's counter — same bucket derivation as the update

@@ -239,12 +239,9 @@ object Features {
     // Encoding is the codegen'd [[graft.ext.FloatPqEncode]] kernel
     // (one compiled pass, codebooks as one reference object instead
     // of m·k·sub plan literals); FeaturesSpec pins it value-identical
-    // to [[pqEncodeHof]], the interpreted chain it replaced. Register
-    // on df's OWN session — under a multi-session harness (Verify's
-    // per-dump sessions) SparkSession.active may be a different one.
-    { VectorKernels.register(df.sparkSession)
-      df.select((col(idCol) +: carryCols.map(col)) :+
-        VectorKernels.pqEncodeCodes(col(vecCol), codebooks).as("codes"): _*) }
+    // to [[pqEncodeHof]], the interpreted chain it replaced.
+    df.select((col(idCol) +: carryCols.map(col)) :+
+      VectorKernels.pqEncodeCodes(col(vecCol), codebooks).as("codes"): _*)
 
   /** The original HOF/literal formulation — the kernel's semantic
     * referee (FeaturesSpec pins kernel ≡ chain).
@@ -316,7 +313,6 @@ object Features {
       queries: DataFrame, // (query_id, query_vec)
       codebooks: IndexedSeq[IndexedSeq[Seq[Float]]],
       k: Int): DataFrame = {
-    VectorKernels.register(codes.sparkSession) // the adcScore kernel
     val scored = codes.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("adc_score", round(adcScore(codebooks), 6))
@@ -350,7 +346,6 @@ object Features {
       codebooks: IndexedSeq[IndexedSeq[Seq[Float]]],
       k: Int,
       nprobe: Int): DataFrame = {
-    VectorKernels.register(codes.sparkSession) // the adcScore kernel
     val probed = graft.ext.Similarity.probeCells(centroids, queries, nprobe)
     val scored = codes.join(broadcast(probed), Seq("label"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -387,7 +382,6 @@ object Features {
       vecCol: String,
       k: Int,
       scorer: (Column, Column) => Column = negSquaredL2): DataFrame = {
-    VectorKernels.register(base.sparkSession) // the negL2 kernel scorer
     // the candidate list is a SET: a duplicated (query, vec) pair from
     // a sloppy searcher would otherwise occupy two ranks and push a
     // real neighbor out of the top k. The dedup shuffle is sized by

@@ -4,13 +4,13 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, KernelColumns}
+import org.apache.spark.sql.KernelColumns.expr
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 
 /** Mergeable QUANTILE sketch AGGREGATE in the KLL/MRL compactor family
@@ -166,9 +166,6 @@ case class KllMergeAgg(
 }
 
 object KllAgg {
-  private val name = "graft_kll_agg"
-  private val mergeName = "graft_kll_merge_agg"
-
   val sketchType: DataType = ArrayType(
     StructType(Seq(
       StructField("v", DoubleType, nullable = false),
@@ -275,33 +272,15 @@ object KllAgg {
     }
   }
 
-  /** Idempotent registration on the active session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => KllAgg(exprs(0), exprs(1).eval(null).asInstanceOf[Int])
-        .toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      mergeName,
-      exprs => KllMergeAgg(exprs(0), exprs(1).eval(null).asInstanceOf[Int])
-        .toAggregateExpression(),
-      "built-in")
-  }
-
   /** Aggregate Column: KLL quantile sketch of the group's values. */
-  def kllAgg(value: Column, k: Int): Column = {
-    register(SparkSession.active)
-    call_function(name, value, lit(k))
-  }
+  def kllAgg(value: Column, k: Int): Column =
+    KernelColumns.aggregate(KllAgg(expr(value), k))
 
   /** Aggregate Column: one sketch merged from a column of STORED
     * sketches — the rollup-reaggregation path.
     */
-  def kllMergeAgg(sketch: Column, k: Int): Column = {
-    register(SparkSession.active)
-    call_function(mergeName, sketch, lit(k))
-  }
+  def kllMergeAgg(sketch: Column, k: Int): Column =
+    KernelColumns.aggregate(KllMergeAgg(expr(sketch), k))
 
   /** Estimated p-quantile from a sketch column: the smallest sketch
     * value whose cumulative weight reaches ceil(p · totalWeight). Pure

@@ -2,13 +2,13 @@ package graft.ext
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, KernelColumns}
+import org.apache.spark.sql.KernelColumns.expr
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Mergeable MinHash signature AGGREGATE: collapses a group's string
@@ -112,21 +112,10 @@ case class MinHashAgg(
 }
 
 object MinHashAgg {
-  private val name = "graft_minhash_agg"
-
-  /** Idempotent registration on the active session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => MinHashAgg(exprs(0), exprs(1).eval(null).asInstanceOf[Int])
-        .toAggregateExpression(),
-      "built-in")
 
   /** Aggregate Column: minhash signature of the group's `item`s. */
-  def minhashAgg(item: Column, numHashes: Int): Column = {
-    register(SparkSession.active)
-    call_function(name, item, lit(numHashes))
-  }
+  def minhashAgg(item: Column, numHashes: Int): Column =
+    KernelColumns.aggregate(MinHashAgg(expr(item), numHashes))
 
   /** Estimated Jaccard from two signatures: agreeing slots / slots. */
   def estimatedJaccard(a: Column, b: Column): Column = {

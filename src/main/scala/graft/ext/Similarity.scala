@@ -80,10 +80,6 @@ object Similarity {
       corpus: DataFrame, // (vec_id, embedding)
       k: Int,
       scorer: (Column, Column) => Column = cosine): DataFrame = {
-    // kernel-based scorers (cosineF, negL2) self-register against
-    // SparkSession.active, which under a multi-session harness may not
-    // be the session this frame belongs to — register on the right one
-    VectorKernels.register(corpus.sparkSession)
     val scored = corpus.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cos_sim", round(scorer(col("query_vec"), col("embedding")), 6))

@@ -2,11 +2,12 @@ package graft.ext
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.KernelColumns.{column, expr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit, lower, regexp_replace, trim}
+import org.apache.spark.sql.functions.{lit, lower, regexp_replace, trim}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -63,21 +64,9 @@ case class UnicodeNormalize(child: Expression, form: String)
   * accent-fold cleanup used by corpus-normalization pipelines.
   */
 object TextNorm {
-  private val normName = "graft_unicode_norm"
-
-  /** Idempotent per-session registration (SQL surface:
-    * `graft_unicode_norm(s, 'NFC')`).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      normName, exprs => UnicodeNormalize(
-        exprs(0), exprs(1).eval(null).toString), "built-in")
-
   /** Unicode-normalize a string column to the given form. */
-  def normalize(s: Column, form: String): Column = {
-    register(SparkSession.active)
-    call_function(normName, s, lit(form))
-  }
+  def normalize(s: Column, form: String): Column =
+    column(UnicodeNormalize(expr(s), form))
 
   /** Aggressive fold for match-keys (dedup, vocab, decontamination
     * joins): lowercase → NFD → strip combining marks → NFC →

@@ -61,7 +61,6 @@ object TimeSeries {
       if (numKeys.getOrElse(profiles.count()) <= maxBruteKeys) {
         a.join(b, col("key_a") =!= col("key_b"))
       } else {
-        VectorKernels.register(profiles.sparkSession)
         val base = profiles.select(col(keyCol).as("id"),
           transform(col("profile"), _.cast("float")).as("vec"))
         val sigs = base.select(col("id"),

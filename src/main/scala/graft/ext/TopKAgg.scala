@@ -2,13 +2,13 @@ package graft.ext
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, KernelColumns}
+import org.apache.spark.sql.KernelColumns.expr
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 
 /** Bounded grouped TOP-K as an AGGREGATE: per group, keep the `k`
@@ -138,21 +138,9 @@ object TopKAgg {
     }
   }
 
-  private val name = "graft_topk_agg"
-
-  /** Idempotent registration on the active session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => TopKAgg(exprs(0), exprs(1),
-        exprs(2).eval(null).asInstanceOf[Int]).toAggregateExpression(),
-      "built-in")
-
   /** Aggregate Column: the group's top `k` (val, id) structs, best
     * first by (val DESC, id ASC).
     */
-  def topKAgg(value: Column, id: Column, k: Int): Column = {
-    register(SparkSession.active)
-    call_function(name, value, id, lit(k))
-  }
+  def topKAgg(value: Column, id: Column, k: Int): Column =
+    KernelColumns.aggregate(TopKAgg(expr(value), expr(id), k))
 }

@@ -1,6 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, KernelColumns}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -307,21 +309,21 @@ object TrainPrep {
       expectedItems: Long = 1000000L,
       numBits: Long = 8388608L): DataFrame = {
     require(expectedItems > 0 && numBits > 0, "bloom sizing must be positive")
-    registerBloom(corpus.sparkSession)
     def shingled(df: DataFrame, idAs: String): DataFrame =
       df.select(col(idCol).as(idAs),
         explode(VectorKernels.shingleHashes(Text.tokens(col(textCol)), n)).as("sh"))
     val bfBytes = shingled(benchmark, "bench_id")
       .select(col("sh")).distinct()
-      .agg(call_function(BloomAggName, col("sh"),
-        lit(expectedItems), lit(numBits)).as("bf"))
+      .agg(KernelColumns.aggregate(new BloomFilterAggregate(
+        KernelColumns.expr(col("sh")), Literal(expectedItems), Literal(numBits))).as("bf"))
       .head().getAs[Array[Byte]](0)
     val ids = corpus.select(col(idCol).as("doc_id"))
     if (bfBytes == null) // empty benchmark → empty filter → nothing flags
       ids.select(col("doc_id"), lit(false).as("flagged"))
     else {
       val flagged = shingled(corpus, "doc_id")
-        .filter(call_function(BloomProbeName, lit(bfBytes), col("sh")))
+        .filter(KernelColumns.column(
+          BloomFilterMightContain(Literal(bfBytes), KernelColumns.expr(col("sh")))))
         .select(col("doc_id")).distinct()
         .withColumn("flagged", lit(true))
       ids.join(flagged, Seq("doc_id"), "left_outer")
@@ -633,10 +635,6 @@ object TrainPrep {
       Set("q_rank", "group_n", "quantile_ppm", "__qb", "__qb_lo", "__qb_hi",
         "__qb_off", "__qb_n", "__qs")),
       "input must not already contain q_rank/group_n/quantile_ppm/__qb*/__qs columns")
-    // register the sketch aggregate on the INPUT's session — inside a
-    // foreachBatch the plan resolves against the outer session while
-    // SparkSession.active is the stream's clone (the q207 lesson)
-    KllAgg.register(df.sparkSession)
     // Materialize the normalized score ONCE as a child-projection
     // column: when `scoreCol` is an unmaterialized expression (the
     // curriculum's tokenCount-over-text), embedding it in the range
@@ -735,28 +733,6 @@ object TrainPrep {
         md5(concat(lit("cur#"), col(idCol).cast("string"))))
       .withColumn("phase_order", row_number().over(w))
       .drop("__cur_key", "__cur_num", "__cur_den")
-  }
-
-  private val BloomAggName = "graft_bloom_filter_agg"
-  private val BloomProbeName = "graft_might_contain"
-
-  /** Spark ships `BloomFilterAggregate`/`BloomFilterMightContain` as
-    * internal expressions (the runtime-filter rule's building blocks)
-    * without SQL registration; register them as temp functions the
-    * same way the custom aggregates do. Idempotent.
-    */
-  private def registerBloom(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BloomAggName,
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-        .toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BloomProbeName,
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1)),
-      "built-in")
   }
 
   /** Temperature-scaled mixture weights — the multilingual/multi-source

@@ -1,11 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.KernelColumns.{column, expr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Codegen'd cosine similarity over two `array<float>` columns in ONE
@@ -881,10 +881,11 @@ private[ext] object Kernels {
 }
 
 /** Extension point for `--conf spark.sql.extensions=graft.ext.GraftExtensions`:
-  * injects the vector kernels at session build time so pure-SQL users
-  * (`spark.sql("SELECT graft_cosine_f(a, b) ...")`) get them without any
-  * API call. Runtime registration via [[VectorKernels.register]] covers
-  * sessions built without the conf.
+  * the one SQL-surface registration — `graft_cosine_f` for pure-SQL
+  * users (`spark.sql("SELECT graft_cosine_f(a, b) ...")`) plus the
+  * [[graft.plans.RewriteNotIn]] optimizer rule. The Column API needs no
+  * registration: [[VectorKernels]] and the sketch aggregates bind their
+  * expressions directly.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
@@ -894,25 +895,13 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
         classOf[FloatCosineSimilarity].getName, "graft_cosine_f"),
       (exprs: Seq[Expression]) => FloatCosineSimilarity(exprs(0), exprs(1))))
     e.injectOptimizerRule(_ => graft.plans.RewriteNotIn)
-    // srp/simhash/minhash kernels + the minhash aggregate register at
-    // first library use (VectorKernels.register / MinHashAgg.register)
   }
 }
 
-/** Session registration + Column surface for the vector kernels. */
+/** Column surface for the vector kernels: each builder binds its
+  * expression directly, so the Column resolves in any session.
+  */
 object VectorKernels {
-  private val cosineName = "graft_cosine_f"
-  private val srpName = "graft_srp_sig"
-  private val simhashName = "graft_simhash"
-  private val minhashSigName = "graft_minhash_sig"
-  private val shingleHashesName = "graft_shingle_hashes"
-  private val shingleStringsName = "graft_shingle_strings"
-  private val minhashSigLName = "graft_minhash_sig_l"
-  private val gramBucketsName = "graft_gram_buckets"
-  private val negL2Name = "graft_neg_l2"
-  private val pqEncodeName = "graft_pq_encode"
-  private val adcScoreName = "graft_adc_score"
-  private val cosArgmaxName = "graft_cos_argmax"
 
   /** Canonical cosine scorer as a VALUE — reference-comparable, so
     * [[graft.ext.Similarity.assignCells]] can recognize it and take
@@ -921,164 +910,67 @@ object VectorKernels {
     */
   val CosineF: (Column, Column) => Column = (a, b) => cosineF(a, b)
 
-  /** Rehydrate an m × k × sub codebook structure from the literal
-    * argument the registry receives (the builder drops the literal —
-    * the codebooks live in the expression as ONE reference object, not
-    * plan literals).
-    */
-  private def codebooksOf(e: Expression): IndexedSeq[IndexedSeq[Seq[Float]]] = {
-    val ad = e.eval(null).asInstanceOf[ArrayData]
-    (0 until ad.numElements()).map { j =>
-      val cb = ad.getArray(j)
-      (0 until cb.numElements())
-        .map(c => cb.getArray(c).toFloatArray().toIndexedSeq: Seq[Float])
-        .toIndexedSeq
-    }.toIndexedSeq
-  }
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      cosineName, exprs => FloatCosineSimilarity(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      srpName, exprs => FloatSrpSignature(
-        exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int],
-        exprs(2).eval(null).asInstanceOf[Int].toLong), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      simhashName, exprs => LongArraySimhash(
-        exprs(0), exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      minhashSigName, exprs => StringArrayMinhash(
-        exprs(0), exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      shingleHashesName, exprs => StringArrayShingleHashes(
-        exprs(0), exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      shingleStringsName, exprs => StringArrayShingles(
-        exprs(0), exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      minhashSigLName, exprs => LongArrayMinhash(
-        exprs(0), exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      gramBucketsName, exprs => StringArrayGramBuckets(
-        exprs(0), exprs(1).eval(null).asInstanceOf[Int],
-        exprs(2).eval(null).asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      negL2Name, exprs => FloatNegSquaredL2(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      pqEncodeName, exprs => FloatPqEncode(
-        exprs(0), codebooksOf(exprs(1))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      adcScoreName, exprs => FloatAdcScore(
-        exprs(0), exprs(1), codebooksOf(exprs(2))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      cosArgmaxName, exprs => FloatCosineArgmax(
-        exprs(0), centroidsOf(exprs(1))), "built-in")
-  }
-
-  /** Rehydrate a k × dim centroid table from the literal argument. */
-  private def centroidsOf(e: Expression): IndexedSeq[Seq[Float]] = {
-    val ad = e.eval(null).asInstanceOf[ArrayData]
-    (0 until ad.numElements())
-      .map(c => ad.getArray(c).toFloatArray().toIndexedSeq: Seq[Float])
-      .toIndexedSeq
-  }
-
-  /** Cosine similarity of two float-vector columns (requires
-    * [[register]] on the session first).
-    */
-  def cosineF(a: Column, b: Column): Column = call_function(cosineName, a, b)
+  /** Cosine similarity of two float-vector columns. */
+  def cosineF(a: Column, b: Column): Column =
+    column(FloatCosineSimilarity(expr(a), expr(b)))
 
   /** SRP signature of a float-vector column (literal planes/seed). */
   def srpSig(v: Column, numPlanes: Int, seed: Int): Column =
-    call_function(srpName, v, org.apache.spark.sql.functions.lit(numPlanes),
-      org.apache.spark.sql.functions.lit(seed))
+    column(FloatSrpSignature(expr(v), numPlanes, seed.toLong))
 
-  /** One-pass simhash over an `array<long>` of token hashes.
-    * Self-registers on the active session so pure-column library code
-    * (graft.ext.Dedup) can use it without threading a session through.
-    */
-  def simhashL(hashes: Column, bits: Int): Column = {
-    register(SparkSession.active)
-    call_function(simhashName, hashes, org.apache.spark.sql.functions.lit(bits))
-  }
+  /** One-pass simhash over an `array<long>` of token hashes. */
+  def simhashL(hashes: Column, bits: Int): Column =
+    column(LongArraySimhash(expr(hashes), bits))
 
   /** One-pass MinHash signature over an `array<string>` shingle set. */
-  def minhashSig(shingles: Column, numHashes: Int): Column = {
-    register(SparkSession.active)
-    call_function(minhashSigName, shingles, org.apache.spark.sql.functions.lit(numHashes))
-  }
+  def minhashSig(shingles: Column, numHashes: Int): Column =
+    column(StringArrayMinhash(expr(shingles), numHashes))
 
   /** Distinct n-gram shingle hashes of a token array (one pass, no
     * shingle-string materialization).
     */
-  def shingleHashes(tokens: Column, n: Int): Column = {
-    register(SparkSession.active)
-    call_function(shingleHashesName, tokens, org.apache.spark.sql.functions.lit(n))
-  }
+  def shingleHashes(tokens: Column, n: Int): Column =
+    column(StringArrayShingleHashes(expr(tokens), n))
 
   /** Distinct n-gram shingle STRINGS of a token array (one pass;
     * strict contract — fewer than n tokens yields an empty array).
     */
-  def shingleStrings(tokens: Column, n: Int): Column = {
-    register(SparkSession.active)
-    call_function(shingleStringsName, tokens, org.apache.spark.sql.functions.lit(n))
-  }
+  def shingleStrings(tokens: Column, n: Int): Column =
+    column(StringArrayShingles(expr(tokens), n))
 
   /** One-pass MinHash signature over pre-hashed shingles (`array<long>`). */
-  def minhashSigL(hashes: Column, numHashes: Int): Column = {
-    register(SparkSession.active)
-    call_function(minhashSigLName, hashes, org.apache.spark.sql.functions.lit(numHashes))
-  }
+  def minhashSigL(hashes: Column, numHashes: Int): Column =
+    column(LongArrayMinhash(expr(hashes), numHashes))
 
   /** md5-prefix bucket of every word n-gram OCCURRENCE of a token
     * array (multiplicity kept) — the DSIR feature-hash kernel.
     */
-  def gramBuckets(tokens: Column, n: Int, prefixLen: Int): Column = {
-    register(SparkSession.active)
-    call_function(gramBucketsName, tokens,
-      org.apache.spark.sql.functions.lit(n),
-      org.apache.spark.sql.functions.lit(prefixLen))
-  }
+  def gramBuckets(tokens: Column, n: Int, prefixLen: Int): Column =
+    column(StringArrayGramBuckets(expr(tokens), n, prefixLen))
 
   /** One-pass negated squared L2 over two float/double vectors. */
-  def negL2(a: Column, b: Column): Column = {
-    register(SparkSession.active)
-    call_function(negL2Name, a, b)
-  }
+  def negL2(a: Column, b: Column): Column =
+    column(FloatNegSquaredL2(expr(a), expr(b)))
 
   /** One-pass PQ encode against codebooks held as one reference
     * object (m·k·sub constants OUT of the plan).
     */
   def pqEncodeCodes(
-      vec: Column, codebooks: IndexedSeq[IndexedSeq[Seq[Float]]]): Column = {
-    register(SparkSession.active)
-    call_function(pqEncodeName, vec,
-      org.apache.spark.sql.functions.typedlit(
-        codebooks.map(_.map(_.toIndexedSeq).toIndexedSeq).toIndexedSeq))
-  }
+      vec: Column, codebooks: IndexedSeq[IndexedSeq[Seq[Float]]]): Column =
+    column(FloatPqEncode(expr(vec), codebooks))
 
   /** One-pass ADC score of a full-precision query against a PQ code
     * row (codebooks as one reference object).
     */
   def adcScore(
       queryVec: Column, codes: Column,
-      codebooks: IndexedSeq[IndexedSeq[Seq[Float]]]): Column = {
-    register(SparkSession.active)
-    call_function(adcScoreName, queryVec, codes,
-      org.apache.spark.sql.functions.typedlit(
-        codebooks.map(_.map(_.toIndexedSeq).toIndexedSeq).toIndexedSeq))
-  }
+      codebooks: IndexedSeq[IndexedSeq[Seq[Float]]]): Column =
+    column(FloatAdcScore(expr(queryVec), expr(codes), codebooks))
 
   /** One-pass argmax-cosine label against a literal centroid table
     * (centroids as one reference object).
     */
   def cosineArgmax(
-      vec: Column, centroids: IndexedSeq[Seq[Float]]): Column = {
-    register(SparkSession.active)
-    call_function(cosArgmaxName, vec,
-      org.apache.spark.sql.functions.typedlit(
-        centroids.map(_.toIndexedSeq).toIndexedSeq))
-  }
+      vec: Column, centroids: IndexedSeq[Seq[Float]]): Column =
+    column(FloatCosineArgmax(expr(vec), centroids))
 }

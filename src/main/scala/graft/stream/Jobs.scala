@@ -754,11 +754,6 @@ object Jobs {
       k: Int,
       stateShufflePartitions: Option[Int] = None): DataFrame =
     withShufflePartitions(spark, stateShufflePartitions) {
-    // the batch-side plans resolve against the OUTER session (the
-    // merged frame's left operand is spark.read), the stream-side
-    // against the micro-batch's CLONED session — temp functions must
-    // exist on both (registered again per batch below)
-    graft.ext.KllAgg.register(spark)
     var lastV = publishedVersion(spark, s"$workDir/state")
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
@@ -766,10 +761,6 @@ object Jobs {
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (lastV < batchId) {
-          // the micro-batch runs in a CLONED session whose function
-          // registry does not inherit temp functions registered on
-          // the outer session — re-register on the batch's own
-          graft.ext.KllAgg.register(batch.sparkSession)
           val bSk = batch.filter(col(valueCol).isNotNull)
             .groupBy(col(keyCol))
             .agg(graft.ext.KllAgg.kllAgg(col(valueCol), k).as("sk"),
@@ -1093,12 +1084,6 @@ object Jobs {
       compactEvery: Int = 0,
       stateShufflePartitions: Option[Int] = None): DataFrame =
     withShufflePartitions(spark, stateShufflePartitions) {
-    // the LSH kernels analyze in TWO sessions here: the kept snapshot
-    // reads through the caller's session, the batch side through the
-    // stream's cloned session — register in both (lazy self-registration
-    // binds to whichever SparkSession.active the thread sees, which is
-    // the wrong one for at least one side)
-    graft.ext.VectorKernels.register(spark)
     var lastV = publishedVersion(spark, s"$workDir/kept")
     val keptRoot = s"$workDir/kept"
     val docsRoot = s"$workDir/index/docs"
@@ -1122,10 +1107,6 @@ object Jobs {
             spark.sparkContext.setJobDescription(s"neardup:$name")
             try f finally spark.sparkContext.setJobDescription(null)
           }
-          // the micro-batch executes in a CLONED session whose function
-          // registry may predate the kernels' lazy registration —
-          // register on the batch's own session, not SparkSession.active
-          graft.ext.VectorKernels.register(batch.sparkSession)
           // fingerprint the batch ONCE — feeds the band join, the
           // verify join, and (semi-joined to survivors) the published
           // index rows

@@ -18,7 +18,6 @@ object AnnProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.ext.VectorKernels.register(spark)
     val base = graft.Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val clustered = graft.ext.Similarity.kmeansLabels(base, "vec_id", "embedding",
       k = 10, iters = 3, scorer = graft.ext.VectorKernels.CosineF)

@@ -25,6 +25,25 @@ class ContractSpec extends SparkSpec {
     assert(stale.isEmpty, s"COVERAGE.md cites queries that no longer exist: $stale")
   }
 
+  test("kernel Columns bind expressions directly: no by-name function registry in main") {
+    // a by-name kernel resolves only in the session it was registered
+    // on — fresh newSession()s and foreachBatch clones miss it. The one
+    // SQL-surface registration is GraftExtensions' injectFunction.
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty)
+    def hits(token: String) = files.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+        .collect { case (l, i) if l.contains(token) => s"$f:${i + 1}" }
+    }
+    Seq("createOrReplaceTempFunction", "call_function(").foreach { t =>
+      assert(hits(t).isEmpty, s"$t in main sources")
+    }
+    assert(hits("injectFunction(").map(_.takeWhile(_ != ':')) ==
+      Seq("src/main/scala/graft/ext/VectorKernels.scala"))
+  }
+
   test("entry() returns rows (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -408,7 +408,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("semantic dedup precision: every drop has a genuinely-similar lower-id witness") {
-    graft.ext.VectorKernels.register(spark)
     val vecGen = Gen.listOfN(40, for {
       id <- Gen.choose(1L, 1000000L)
       seed <- Gen.choose(0, 10) // few seeds → guaranteed near-dup collisions

@@ -282,7 +282,6 @@ class ExtSpec extends SparkSpec {
   }
 
   test("MinHashAgg: identical sets → estimate 1.0; disjoint → 0.0; merge = union") {
-    MinHashAgg.register(spark)
     val items = Seq(
       ("g1", "a"), ("g1", "b"), ("g1", "c"),
       ("g2", "a"), ("g2", "b"), ("g2", "c"), ("g2", "c"), // same set, dup item
@@ -477,7 +476,6 @@ class ExtSpec extends SparkSpec {
   }
 
   test("SRP-LSH finds planted cosine near-dups without a quadratic pass") {
-    graft.ext.VectorKernels.register(spark)
     // base vector, a tiny perturbation of it, and an orthogonal one
     val base = Array.tabulate(32)(i => math.sin(i * 1.7).toFloat)
     val nearDup = base.zipWithIndex.map { case (v, i) => v + (if (i == 0) 0.001f else 0f) }
@@ -490,7 +488,6 @@ class ExtSpec extends SparkSpec {
   }
 
   test("SRP signature: identical vectors always collide; codegen equals eval") {
-    graft.ext.VectorKernels.register(spark)
     val v = Array.tabulate(16)(i => (i * 0.37f) - 2f)
     val df = Seq((1L, v), (2L, v)).toDF("id", "vec")
       .select(col("id"), graft.ext.VectorKernels.srpSig(col("vec"), 16, 0).as("sig"))
@@ -516,7 +513,6 @@ class ExtSpec extends SparkSpec {
   }
 
   test("kmeans separates planted clusters; IVF over kmeans has full recall") {
-    graft.ext.VectorKernels.register(spark)
     // 3 planted directions, 20 small perturbations of each
     val dirs = Seq(
       Array.tabulate(16)(i => math.sin(i * 1.3).toFloat),
@@ -551,7 +547,6 @@ class ExtSpec extends SparkSpec {
   }
 
   test("semanticDedup drops twins to their min-id source, keeps the rest") {
-    graft.ext.VectorKernels.register(spark)
     // 3 planted directions × 15 perturbations, plus a near-identical
     // twin of every 5th vector: only the twins are within cos ≥ 0.999
     val dirs = Seq(
@@ -674,7 +669,6 @@ class ExtSpec extends SparkSpec {
   }
 
   test("kmeans literal and broadcast assignment paths agree exactly") {
-    graft.ext.VectorKernels.register(spark)
     val vecs = (0 until 90).map(i =>
       (i.toLong, Array.tabulate(16)(j => math.sin(i * 0.7 + j * 1.1).toFloat)))
     val emb = vecs.toDF("vec_id", "embedding")
@@ -689,7 +683,6 @@ class ExtSpec extends SparkSpec {
   }
 
   test("profile top-k: SRP route agrees with brute force on planted twins") {
-    graft.ext.VectorKernels.register(spark)
     // 3 planted directions, 10 near-identical profiles each (cos ≈ 1
     // within a cluster, ≪ 1 across) — every key's top-1 is a co-member
     val dirs = Seq(

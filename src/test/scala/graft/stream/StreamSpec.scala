@@ -179,7 +179,6 @@ class StreamSpec extends SparkSpec {
   }
 
   test("streaming curation gates quality, drops contamination, dedups across batches") {
-    graft.ext.VectorKernels.register(spark)
     val tmp = tempDir("graft-curatestream")
     val in = s"$tmp/in"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
