@@ -13,11 +13,12 @@ import org.apache.spark.sql.functions._
   *  - row-level outcomes + routing (O-41): each row annotated
   *    Passed/Failed with the failing rule names, then split.
   *
-  * All rule aggregates evaluate in ONE `agg` pass over one scan (the
-  * reference's DQDL engine also single-passes); uniqueness-family rules
-  * add ONE more job covering every uniqueness column (stacked
-  * two-level aggregate — N rules ≠ N scans). The metric row that
-  * reaches the driver is O(#rules), never O(data).
+  * Every rule evaluates in ONE query and one collect (the reference's
+  * DQDL engine also single-passes): the scan aggregates and the
+  * uniqueness-family fractions (one stacked two-level aggregate
+  * covering every uniqueness column — N rules ≠ N scans) are crossed
+  * as two single-row frames. The metric row that reaches the driver is
+  * O(#rules), never O(data).
   */
 sealed trait DqRule {
   def name: String
@@ -93,47 +94,54 @@ object Rules {
         UniquenessAbove("coin_id", 0.99))
   }
 
-  /** Dataset-level evaluation (O-39/O-40). One aggregate pass computes
-    * every scan metric; uniqueness rules add one two-level aggregate
-    * each. Returns RuleResults (driver-side, O(#rules)).
+  /** Dataset-level evaluation (O-39/O-40). One query computes every
+    * metric: the single-row scan aggregate crossed with the uniqueness
+    * fractions folded into one `column → fraction` map row. Returns
+    * RuleResults (driver-side, O(#rules)).
     */
   def evaluate(df: DataFrame, rules: Seq[DqRule]): Seq[RuleResult] = {
     val schemaCols = df.columns.toSet
 
     // scanned metrics needed, keyed for dedup across rules
     case class Need(key: String, agg: Column)
+    // try_divide: completeness of empty input is NULL (→ NaN), not an
+    // ANSI divide-by-zero error
+    def completeness(c: String) =
+      Need(s"compl_$c", try_divide(count(col(c)).cast("double"), count(lit(1))))
     val needs = rules.flatMap {
       case ColumnExists(_) => Nil
-      case IsComplete(c) => Seq(Need(s"compl_$c", count(col(c)).cast("double") / count(lit(1))))
-      case CompletenessAbove(c, _) => Seq(Need(s"compl_$c", count(col(c)).cast("double") / count(lit(1))))
+      case IsComplete(c) => Seq(completeness(c))
+      case CompletenessAbove(c, _) => Seq(completeness(c))
       case ColumnValues(c, p, d) =>
         Seq(Need(s"cv_${c}_$d", sum(when(p(col(c)), 0L).otherwise(1L)).cast("double")))
       case RowCountBetween(_, _) => Seq(Need("size", count(lit(1)).cast("double")))
-      case IsPrimaryKey(c) => Seq(Need(s"compl_$c", count(col(c)).cast("double") / count(lit(1))))
+      case IsPrimaryKey(c) => Seq(completeness(c))
       case UniquenessAbove(_, _) => Nil
     }.distinct
-
-    val metricRow: Map[String, Double] =
-      if (needs.isEmpty) Map.empty
-      else {
-        val r = df.agg(needs.head.agg.as(needs.head.key),
-          needs.tail.map(n => n.agg.as(n.key)): _*).head()
-        needs.map(n => n.key -> Option(r.getAs[Any](n.key))
-          .map(_.asInstanceOf[Double]).getOrElse(Double.NaN)).toMap
-      }
 
     val uniqCols = rules.collect {
       case UniquenessAbove(c, _) => c
       case IsPrimaryKey(c) => c
     }.distinct
-    // one job for ALL uniqueness columns (stacked two-level aggregate);
-    // the collect pulls one row per column, never data
+
+    // one single-row frame per metric family; crossing them keeps the
+    // whole ruleset to one query and one collect of one row
+    val scanRow = Option.when(needs.nonEmpty)(df.agg(
+      needs.head.agg.as(needs.head.key), needs.tail.map(n => n.agg.as(n.key)): _*))
+    val uniqRow = Option.when(uniqCols.nonEmpty)(
+      Analyzers.uniquenessFractions(df, uniqCols)
+        .agg(map_from_entries(collect_list(struct(col("c"), col("u")))).as("__uniq")))
+    val row = (scanRow ++ uniqRow).reduceOption(_.crossJoin(_)).map(_.head())
+
+    def orNaN(v: Any): Double = Option(v).map(_.asInstanceOf[Double]).getOrElse(Double.NaN)
+    val metricRow: Map[String, Double] = row.fold(Map.empty[String, Double])(r =>
+      needs.map(n => n.key -> orNaN(r.getAs[Any](n.key))).toMap)
+    // empty input → empty map; a missing or null fraction reads as NaN
     val uniqueness: Map[String, Double] =
-      if (uniqCols.isEmpty) Map.empty[String, Double].withDefaultValue(Double.NaN)
-      else Analyzers.uniquenessFractions(df, uniqCols).collect()
-        .map(r => r.getString(0) -> Option(r.get(1))
-          .map(_.asInstanceOf[Double]).getOrElse(Double.NaN))
-        .toMap.withDefaultValue(Double.NaN) // empty input → no rows
+      row.filter(_ => uniqCols.nonEmpty)
+        .fold(Map.empty[String, Double])(r => r.getMap[String, Any](r.fieldIndex("__uniq"))
+          .toMap.map { case (c, u) => c -> orNaN(u) })
+        .withDefaultValue(Double.NaN)
 
     rules.map { rule =>
       val (passed, observed) = rule match {

@@ -15,6 +15,17 @@ import graft.sinks.Writers
   * (ref: Step Function/crypto-etl-pipeline.asl.json:5-76) as composed
   * DataFrame stages. State passes in-process; only the medallion layer
   * boundaries persist (Silver/Gold parquet), not every stage.
+  *
+  * The deduplicated Silver candidate is the single materialization
+  * point: the transform stage computes it once with
+  * `localCheckpoint(true)`, and the DQ gate, the silver append, the
+  * fact overwrite, `dim_coins` and `dim_date` all read that one frame
+  * instead of each re-running the Bronze scan, the casts, the schema
+  * split and the dedup window. `localCheckpoint`, not `persist`: the
+  * checkpoint keeps the partitioning AQE coalesced the dedup shuffle
+  * to, while a cached plan keeps every shuffle partition (AQE does not
+  * coalesce cached plans by default), which doubles the files each
+  * day's silver and fact writes commit.
   */
 object Medallion {
 
@@ -83,7 +94,8 @@ object Medallion {
         Right(Transform.dedupLatest(
           valid,
           partitionCols = Seq("coin_id", "update_date"),
-          orderCols = Seq(col("last_updated_ts").desc, col("market_cap_rank").asc_nulls_last)))
+          orderCols = Seq(col("last_updated_ts").desc, col("market_cap_rank").asc_nulls_last))
+          .localCheckpoint(true))
       }
 
     // DQ gate (ref DQDL ruleset) on the deduped silver candidate
@@ -105,7 +117,8 @@ object Medallion {
             StructField("coin_id", StringType),
             StructField("symbol", StringType),
             StructField("name", StringType)))),
-        Star.dimFrom(s, Seq("coin_id", "symbol", "name")),
+        // mergeDim's keyed dropDuplicates already removes repeats
+        s.select("coin_id", "symbol", "name"),
         Seq("coin_id"))
       Writers.parquetOverwrite(dimCoins, s"$outDir/dim_coins")
       dimDate = Star.dimDate(fact, "date")

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import scala.util.Try
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -38,10 +39,15 @@ object Pipeline {
 
   /** O-69: table-not-exists fallback
     * (ref: glue/data_aggregate_gold.py:73-91 try/except → start fresh).
+    * Only a missing path means "start fresh"; any other read error
+    * propagates instead of passing for an empty table.
     */
-  def readOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    Try(spark.read.schema(schema).parquet(path)).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+  def readOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    val p = new Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.read.schema(schema).parquet(path)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  }
 
   /** Success/failure notification record, the SNS-topic analogue of the
     * ASL NotifySuccess/NotifyFailure terminal states

@@ -13,34 +13,10 @@ class PlanSpec extends SparkSpec {
     SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
 
   /** Executed plans of every action a query runs INTERNALLY (for
-    * queries that materialize eagerly and return a LocalTableScan),
-    * captured via a QueryExecutionListener.
+    * queries that materialize eagerly and return a LocalTableScan).
     */
-  private def executedPlans(q: String): Seq[String] = {
-    val plans = scala.collection.mutable.ArrayBuffer[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan.toString }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      SparkEntry.queries(q)(spark, dir).collect()
-      // listener events post asynchronously; poll until stable
-      var last = -1
-      var same = 0
-      while (same < 3) {
-        Thread.sleep(200)
-        val n = plans.synchronized(plans.size)
-        if (n == last) same += 1 else { same = 0; last = n }
-      }
-    } finally spark.listenerManager.unregister(listener)
-    plans.synchronized(plans.toVector)
-  }
+  private def executedPlans(q: String): Seq[String] =
+    executedPlans { SparkEntry.queries(q)(spark, dir).collect(); () }.map(_.toString)
 
   test("q01: null-guard filter reaches the parquet scan; rank limit pushed below shuffle") {
     val p = plan("q01_dedup_latest_agg")

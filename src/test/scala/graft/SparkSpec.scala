@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.ListenerBusAccess
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM per sbt test fork). */
@@ -13,6 +16,23 @@ trait SparkSpec extends AnyFunSuite {
     * dozens of graft-* trees in /tmp.
     */
   def tempDir(prefix: String): String = SparkSpec.tempDir(prefix)
+
+  /** Run `f` and return the executed plan of every query execution it
+    * ran, in completion order, as a QueryExecutionListener saw them.
+    */
+  def executedPlans(f: => Unit): Seq[SparkPlan] = {
+    val plans = scala.collection.mutable.ArrayBuffer[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    ListenerBusAccess.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { f; ListenerBusAccess.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    plans.synchronized(plans.toVector)
+  }
 }
 
 object SparkSpec {

@@ -60,6 +60,45 @@ class DqSpec extends SparkSpec {
     assert(!res("IsPrimaryKey_coin_id")) // btc duplicated
   }
 
+  test("Rules.evaluate: scan and uniqueness rules in one query, exact observed values") {
+    val rules = Seq(
+      ColumnExists("coin_id"),
+      IsComplete("coin_id"),
+      CompletenessAbove("current_price", 0.5),
+      ColumnValues("current_price", _ > 0, "gt_0"),
+      RowCountBetween(1, 10),
+      UniquenessAbove("coin_id", 0.5),
+      IsPrimaryKey("coin_id"))
+    // evaluates in exactly one query; compares observed values by bits
+    // so NaN matches NaN
+    def check(df: org.apache.spark.sql.DataFrame, want: Seq[(Boolean, Double)]): Unit = {
+      var res: Seq[RuleResult] = Nil
+      val plans = executedPlans { res = Rules.evaluate(df, rules) }
+      assert(plans.size == 1, s"${plans.size} query executions")
+      def bits(rs: Seq[(String, Boolean, Double)]) =
+        rs.map { case (n, p, v) => (n, p, java.lang.Double.doubleToLongBits(v)) }
+      val got = res.map(r => (r.rule, r.passed, r.observed))
+      assert(bits(got) == bits(rules.map(_.name).zip(want).map { case (n, (p, v)) => (n, p, v) }),
+        s"got $got")
+    }
+
+    // coins: 5 complete ids, 3 occurring once; one non-positive price
+    check(coins, Seq(
+      (true, 1.0), (true, 1.0), (true, 1.0), (false, 1.0), (true, 5.0),
+      (true, 0.6), (false, 0.6)))
+
+    // empty input: completeness and uniqueness undefined, zero rows
+    check(coins.filter(lit(false)), Seq(
+      (true, 1.0), (false, Double.NaN), (false, Double.NaN), (false, Double.NaN),
+      (false, 0.0), (false, Double.NaN), (false, Double.NaN)))
+
+    // all-null id column: nothing complete, and the single null group
+    // holds every row, so no value occurs exactly once
+    check(coins.withColumn("coin_id", lit(null).cast("string")), Seq(
+      (true, 1.0), (false, 0.0), (true, 1.0), (false, 1.0), (true, 5.0),
+      (false, 0.0), (false, 0.0)))
+  }
+
   test("Rules.gate: fails the pipeline on violated Error-level rules") {
     assert(Rules.gate(coins, Seq(RowCountBetween(1, 10))).isRight)
     val left = Rules.gate(coins, Seq(ColumnValues("current_price", _ > 0, "gt_0")))

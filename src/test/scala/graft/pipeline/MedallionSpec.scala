@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -19,13 +21,14 @@ class MedallionSpec extends SparkSpec {
          |"total_supply":2000.0}""".stripMargin.replaceAll("\n", "")
     }
 
+  // 60 good rows + 1 missing required field + a duplicate tick for coin_1
+  private def endToEndRows: Seq[String] = bronzeJson(60) :+
+    """{"id":"bad_coin","symbol":null,"name":"Bad","current_price":1.0,"market_cap":5}""" :+
+    """{"id":"coin_1","symbol":"c1","name":"Coin 1","current_price":99.9,"market_cap":2000000}"""
+
   test("bronze→silver→gold end-to-end with DLQ and star outputs") {
     val out = tempDir("graft-medallion")
-    // 60 good rows + 1 missing required field + a duplicate tick for coin_1
-    val rows = bronzeJson(60) :+
-      """{"id":"bad_coin","symbol":null,"name":"Bad","current_price":1.0,"market_cap":5}""" :+
-      """{"id":"coin_1","symbol":"c1","name":"Coin 1","current_price":99.9,"market_cap":2000000}"""
-    val bronze = Readers.jsonStrings(spark, rows)
+    val bronze = Readers.jsonStrings(spark, endToEndRows)
     val now = java.time.Instant.parse("2024-03-05T12:00:00Z")
 
     val res = Medallion.run(spark, bronze, out, now)
@@ -52,6 +55,25 @@ class MedallionSpec extends SparkSpec {
     // terminal notification recorded the success
     assert(spark.read.json(s"$out/notifications")
       .select("status").as[String].head() == "SUCCEEDED")
+  }
+
+  test("the dedup window runs once per run; sink file counts unchanged") {
+    val out = tempDir("graft-window-once")
+    val bronze = Readers.jsonStrings(spark, endToEndRows)
+    val now = java.time.Instant.parse("2024-03-05T12:00:00Z")
+    var res: Either[StageFailure, Medallion.Outputs] = null
+    val plans = executedPlans { res = Medallion.run(spark, bronze, out, now) }
+    assert(res.isRight, res.left.toOption.map(_.reason))
+    object Plans extends AdaptiveSparkPlanHelper
+    val windowed = plans.count(p => Plans.find(p)(_.isInstanceOf[WindowExec]).isDefined)
+    assert(windowed == 1, s"$windowed executions ran the dedup window")
+    def dataFiles(table: String): Long = {
+      val root = java.nio.file.Paths.get(s"$out/$table")
+      val walk = Files.walk(root)
+      try walk.filter(f => f.getFileName.toString.startsWith("part-")).count()
+      finally walk.close()
+    }
+    assert(Seq("silver", "fact_crypto_daily", "dim_coins").map(dataFiles) == Seq(1L, 1L, 1L))
   }
 
   test("silver output is viewable as a typed Dataset[CryptoTick]") {

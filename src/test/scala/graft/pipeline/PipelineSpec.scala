@@ -55,4 +55,17 @@ class PipelineSpec extends SparkSpec {
     assert(out.schema == schema)
     assert(out.isEmpty)
   }
+
+  test("readOrEmpty reads an existing table and lets other errors through") {
+    val tmp = tempDir("graft-read-or-empty")
+    val schema = StructType(Seq(StructField("x", LongType)))
+    Seq(1L, 2L).toDF("x").write.parquet(s"$tmp/t")
+    val out = Pipeline.readOrEmpty(spark, s"$tmp/t", schema)
+    assert(out.schema == schema)
+    assert(out.as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    // a path no filesystem can serve is an error, not an empty table
+    intercept[java.io.IOException] {
+      Pipeline.readOrEmpty(spark, "nosuchfs://bucket/t", schema)
+    }
+  }
 }
