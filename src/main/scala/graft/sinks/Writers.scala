@@ -37,18 +37,13 @@ object Writers {
     * only the partitions present in `df` are replaced
     * (ref: glue/data_aggregate_gold.py:16,95-100). This is the
     * reference's fact-table upsert made native: no read-modify-write.
+    * The mode is a per-write option, so concurrent writers on the same
+    * session never see each other's overwrite mode.
     */
-  def parquetDynamicOverwrite(df: DataFrame, path: String, partitionCol: String): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode("overwrite").option("compression", "snappy")
+  def parquetDynamicOverwrite(df: DataFrame, path: String, partitionCol: String): Unit =
+    df.write.mode("overwrite").option("compression", "snappy")
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
 
   /** O-55: JSON DLQ append (ref: glue/data_transform_s3.py:96-101). */
   def dlqAppend(df: DataFrame, path: String): Unit =
@@ -112,7 +107,7 @@ object Writers {
     * only the LAST batch can replay, and it reads the version before
     * itself). Unlike the fold compactions this is plain deletion — no
     * rewrite, no swap — because readers only ever open the latest
-    * version ([[graft.stream.Jobs]]'s `publishedVersion` pointer).
+    * version (the highest `v=<id>`).
     */
   def pruneSnapshotVersions(
       spark: SparkSession, root: String, keep: Int = 2): Unit = {
@@ -296,17 +291,17 @@ object Writers {
     // snapshot stranded in __staging — complete it before reading, or
     // the read-miss would silently drop every previously-stored key
     recoverStagedSwap(spark, path)
-    val existing = scala.util.Try(spark.read.schema(batch.schema).parquet(path)).toOption
-    val merged = existing match {
-      case Some(e) if !e.isEmpty => graft.gold.Star.upsert(e, batch, keyCols)
-      case _ => batch
-    }
+    val dst = new org.apache.hadoop.fs.Path(path)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // only a missing table means "start fresh"; any other read error
+    // propagates instead of passing for an empty table
+    val merged =
+      if (fs.exists(dst))
+        graft.gold.Star.upsert(spark.read.schema(batch.schema).parquet(path), batch, keyCols)
+      else batch
     // write to a temp dir then swap — parquet can't overwrite its own input
     val tmp = path + "__staging"
     merged.write.mode("overwrite").parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
     mustDelete(fs, dst)
     mustRename(fs, new org.apache.hadoop.fs.Path(tmp), dst)
   }

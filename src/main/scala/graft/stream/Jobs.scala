@@ -2,9 +2,12 @@ package graft.stream
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
+
+import graft.sinks.Writers
 
 /** Structured Streaming jobs re-expressing the reference's Lambda
   * architecture (ref: streaming/consumer.py, streaming/producer.py):
@@ -14,28 +17,93 @@ import org.apache.spark.sql.streaming.Trigger
   * The Kinesis micro-batch boundary becomes the streaming trigger
   * (tests/verify: `Trigger.AvailableNow`, prod: `ProcessingTime`);
   * Lambda's at-least-once becomes checkpointing + idempotent sinks.
+  * Every job launches through [[runAvailableNow]]; every job that
+  * publishes versioned state runs [[runVersionedPublish]]'s
+  * resume / replay-skip / publish loop.
   */
 object Jobs {
 
   private val streamId = new AtomicInteger(0)
+
+  /** The one AvailableNow launch: start the configured writer, drain
+    * every input available at start, and block until the query stops
+    * (rethrowing the query's failure, if any).
+    */
+  private def runAvailableNow(writer: DataStreamWriter[_]): Unit =
+    writer.trigger(Trigger.AvailableNow()).start().awaitTermination()
 
   /** Shared verify-path mechanics: run `df` as one AvailableNow pass
     * into a uniquely-named memory sink and return the collected table.
     * The memory sink is the VERIFY surface only — production jobs use
     * the parquet / foreachBatch runners with checkpoints.
     */
-  private def runToMemorySink(
-      spark: SparkSession, df: DataFrame, namePrefix: String): DataFrame = {
+  private[stream] def runToMemorySink(
+      spark: SparkSession, df: Dataset[_], namePrefix: String): DataFrame = {
     val name = s"${namePrefix}_${streamId.incrementAndGet()}"
-    val q = df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(df.writeStream.format("memory").queryName(name).outputMode("append"))
     spark.table(name)
   }
+
+  /** Exactly-once publish of versioned state — the one loop every
+    * snapshot / merge-state stream runs. The file source under
+    * `inputDir` is drained `filesPerTrigger` files per micro-batch, and
+    * `publish(prevV, batch, batchId)` writes version `batchId` (merging
+    * from `prevV`, -1 when nothing is published yet).
+    * `<versionRoot>/v=<batchId>` is the version pointer and the replay
+    * marker, so the publish writes it after every other write the
+    * version depends on.
+    *
+    *  - resume: the pointer starts at the highest `v=<id>` under
+    *    `versionRoot`, so a resumed checkpoint (the file source skips
+    *    applied batches) merges into the last published version, never
+    *    back into an initial base;
+    *  - replay skip: a batch re-delivered after its version was
+    *    published (a crash between the publish and the checkpoint
+    *    commit, or a lost checkpoint) has `prevV >= batchId` and
+    *    publishes nothing — re-merging would double-count, and would
+    *    rewrite a version a reader may already hold;
+    *  - the pointer moves only after `publish` returns, so a batch that
+    *    fails mid-publish re-runs from the same base.
+    *
+    * Returns the last published version. A run that finds no input and
+    * no published version fails loudly.
+    */
+  private def runVersionedPublish(
+      spark: SparkSession,
+      inputDir: String,
+      schema: StructType,
+      checkpoint: String,
+      versionRoot: String,
+      filesPerTrigger: Int = 1)(publish: (Long, DataFrame, Long) => Unit): Long = {
+    var lastV = Writers.listPartitionIds(spark, versionRoot, "v").lastOption.getOrElse(-1L)
+    runAvailableNow(spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", filesPerTrigger)
+      .parquet(inputDir)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (lastV < batchId) {
+          publish(lastV, batch, batchId)
+          lastV = batchId
+        }
+      }
+      .option("checkpointLocation", checkpoint))
+    require(lastV >= 0,
+      s"no input files found under $inputDir and no published version under $versionRoot")
+    lastV
+  }
+
+  /** Run `f` with the session conf `key` set to `value` (None: leave it
+    * alone), restoring the prior value afterwards.
+    */
+  private[stream] def withConf[T](
+      spark: SparkSession, key: String, value: Option[String])(f: => T): T =
+    value match {
+      case None => f
+      case Some(v) =>
+        val old = spark.conf.getOption(key)
+        spark.conf.set(key, v)
+        try f finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
 
   /** Run `f` with `spark.sql.shuffle.partitions` temporarily set —
     * the state-store sizing knob for stateful streams: the partition
@@ -43,19 +111,11 @@ object Jobs {
     * cannot change afterwards, so streaming jobs size it to expected
     * key cardinality up front (a fleet-scale job wants many state
     * partitions; a bounded replay wants few — per-partition state
-    * commits are pure overhead beyond the key count). Restores the
-    * session value afterwards.
+    * commits are pure overhead beyond the key count).
     */
   private[stream] def withShufflePartitions[T](
       spark: SparkSession, n: Option[Int])(f: => T): T =
-    n match {
-      case None => f
-      case Some(p) =>
-        val key = "spark.sql.shuffle.partitions"
-        val old = spark.conf.get(key)
-        spark.conf.set(key, p.toString)
-        try f finally spark.conf.set(key, old)
-    }
+    withConf(spark, "spark.sql.shuffle.partitions", n.map(_.toString))(f)
 
   /** Validation rules for the `events` testdata stream, same shape as
     * the crypto consumer's (ref: streaming/consumer.py:47-57).
@@ -106,14 +166,9 @@ object Jobs {
         col("w.start").as("window_start"),
         col("event_type"), col("n_events"), col("sum_value"))
 
-  /** Watermarked streaming variant of [[windowedAgg]] (O-66 note):
-    * late data beyond `lateness` is dropped once the watermark passes.
-    * Used by streaming tests with multi-batch file sources; not oracle
-    * checked (watermark emission depends on batch boundaries).
-    */
   /** Output schema of [[runWindowedStream]]. */
-  val windowedSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
+  val windowedSchema: StructType =
+    StructType(Seq(
       org.apache.spark.sql.types.StructField("window_start",
         org.apache.spark.sql.types.TimestampType),
       org.apache.spark.sql.types.StructField("event_type",
@@ -123,7 +178,12 @@ object Jobs {
       org.apache.spark.sql.types.StructField("sum_value",
         org.apache.spark.sql.types.DoubleType)))
 
-  /** In append mode a window only emits once the watermark passes its
+  /** Watermarked streaming variant of [[windowedAgg]] (O-66 note):
+    * late data beyond `lateness` is dropped once the watermark passes.
+    * Used by streaming tests with multi-batch file sources; not oracle
+    * checked (watermark emission depends on batch boundaries).
+    *
+    * In append mode a window only emits once the watermark passes its
     * end — i.e. on a LATER batch. Callers re-run with the same
     * `checkpoint`+`outPath` after appending newer input files; each run
     * appends the windows the new data closed (parquet sink — the memory
@@ -145,14 +205,11 @@ object Jobs {
         .option("maxFilesPerTrigger", filesPerTrigger.toString).parquet(inputDir)
       val agg = windowedAgg(stream.withWatermark("ts", lateness),
         windowDuration, slide)
-      val q = agg.writeStream
+      runAvailableNow(agg.writeStream
         .format("parquet")
         .option("path", outPath)
         .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .option("checkpointLocation", checkpoint))
       spark.read.schema(windowedSchema).parquet(outPath)
     }
 
@@ -284,17 +341,13 @@ object Jobs {
       keyCol: String = "user_id"): Unit = {
     val schema = graft.schema.Schemas.events
     val stream = spark.readStream.schema(schema).parquet(inputDir)
-    val q = stream.writeStream
+    runAvailableNow(stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val latest = graft.etl.Transform.dedupLatestAgg(
           batch, Seq(keyCol), Seq(col("ts"), col("event_id")))
-        graft.sinks.Writers.kvUpsert(spark, latest, Seq(keyCol), tablePath)
-        ()
+        Writers.kvUpsert(spark, latest, Seq(keyCol), tablePath)
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", checkpoint))
   }
 
   /** Exactly-once filesystem sink stream: every micro-batch lands via
@@ -311,16 +364,12 @@ object Jobs {
       outPath: String,
       checkpoint: String): Unit = {
     val schema = graft.schema.Schemas.events
-    val q = spark.readStream.schema(schema).parquet(inputDir)
+    runAvailableNow(spark.readStream.schema(schema).parquet(inputDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sinks.Writers.idempotentBatchWrite(batch, batchId, outPath)
-        ()
+        Writers.idempotentBatchWrite(batch, batchId, outPath)
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", checkpoint))
   }
 
   /** INCREMENTAL CDC apply as a stream: each micro-batch of change
@@ -343,47 +392,30 @@ object Jobs {
     * receive late sequences keeps `seqCol` (and delete tombstones) in
     * the snapshot instead. In production the version pointer lives in
     * table metadata beside the checkpoint; here it re-derives from the
-    * snapshot directory itself: on start, the highest existing
-    * `v=<id>` under `snapshotPath` becomes the merge base, so a
-    * RESUMED checkpoint (file source skips already-applied batches)
-    * continues from the last published snapshot instead of silently
-    * re-merging into `base` and discarding prior changes. A run whose
-    * checkpoint already covers every change file publishes nothing new
-    * and returns the recovered version (instead of throwing a
-    * misleading "no change files found").
+    * snapshot directory itself ([[runVersionedPublish]]): a RESUMED
+    * checkpoint continues from the last published snapshot instead of
+    * silently re-merging into `base`, a replayed batch whose version is
+    * already published rewrites nothing, and a run whose checkpoint
+    * already covers every change file returns the recovered version.
     */
   def runChangelogStream(
       spark: SparkSession,
       base: DataFrame,
       changesDir: String,
-      changesSchema: org.apache.spark.sql.types.StructType,
+      changesSchema: StructType,
       keyCols: Seq[String],
       seqCol: String,
       opCol: String,
       snapshotPath: String,
-      checkpoint: String): Long = {
-    var lastV = publishedVersion(spark, snapshotPath)
-    val q = spark.readStream.schema(changesSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(changesDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      checkpoint: String): Long =
+    runVersionedPublish(spark, changesDir, changesSchema, checkpoint, snapshotPath) {
+      (prevV, batch, batchId) =>
         val prev =
-          if (lastV < 0) base
-          else spark.read.parquet(s"$snapshotPath/v=$lastV")
+          if (prevV < 0) base
+          else spark.read.parquet(s"$snapshotPath/v=$prevV")
         graft.etl.Transform.applyChangelog(prev, batch, keyCols, seqCol, opCol)
           .write.mode("overwrite").parquet(s"$snapshotPath/v=$batchId")
-        lastV = batchId
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(lastV >= 0,
-      s"no change files found under $changesDir and no prior snapshot under $snapshotPath")
-    lastV
-  }
+    }
 
   /** Storage geometry of [[runNearDupDedupStream]]'s persisted band
     * index: bucket ids are md5 hex strings, so the first two hex
@@ -450,7 +482,7 @@ object Jobs {
     * and parquet footer reads dominate the per-trigger scan (the same
     * failure shape as the measured 21× `partitionBy(band,pb)`
     * directory-explosion regression). This pass folds every PUBLISHED
-    * generation (`v <= publishedVersion(kept)`) into ONE
+    * generation (`v <=` the highest `kept/v=<id>`) into ONE
     * range-partitioned generation re-sorted on the pruning column
     * (`bp` / `ip` — row-group min/max stats stay tight), staged then
     * atomically swapped so a reader sees the old or the new table,
@@ -468,7 +500,8 @@ object Jobs {
     * `compactEvery` which runs it inside the serialized foreachBatch).
     */
   def compactNearDupIndex(spark: SparkSession, workDir: String): Unit = {
-    val published = publishedVersion(spark, s"$workDir/kept")
+    val published = Writers.listPartitionIds(spark, s"$workDir/kept", "v")
+      .lastOption.getOrElse(-1L)
     if (published >= 0) {
       compactVersionedTable(spark, s"$workDir/index/docs", "ip", published)
       compactVersionedTable(spark, s"$workDir/index/bands", "bp", published)
@@ -477,34 +510,14 @@ object Jobs {
 
   private def compactVersionedTable(
       spark: SparkSession, root: String, sortCol: String, published: Long): Unit = {
-    graft.sinks.Writers.recoverStagedSwap(spark, root)
-    val gens = graft.sinks.Writers.listPartitionIds(spark, root, "v")
+    Writers.recoverStagedSwap(spark, root)
+    val gens = Writers.listPartitionIds(spark, root, "v")
     if (gens.count(_ <= published) <= 1) return // already one generation
     // orphaned (unpublished) generations ride across the swap untouched
-    graft.sinks.Writers.foldPartitionedStore(spark, root, "v",
+    Writers.foldPartitionedStore(spark, root, "v",
       published, gens.filter(_ > published).toSeq, sortCol = Some(sortCol))
   }
 
-  /** Highest published `v=<id>` under `snapshotPath`, or -1 when none
-    * exist (first run / fresh directory) — the crash-safe version
-    * pointer [[runChangelogStream]] resumes from.
-    */
-  private def publishedVersion(spark: SparkSession, snapshotPath: String): Long = {
-    val hPath = new org.apache.hadoop.fs.Path(snapshotPath)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) -1L
-    else fs.listStatus(hPath).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("v="))
-      .flatMap(n => scala.util.Try(n.stripPrefix("v=").toLong).toOption)
-      .foldLeft(-1L)(math.max)
-  }
-
-  /** O-61/O-62: foreachBatch dual-write — persist the batch once, split
-    * good/bad, write each side plus alerts (ref: streaming/consumer.py:
-    * 59-102 routes good→DynamoDB, bad→DLQ+S3, surges→SNS). Sinks are
-    * parquet dirs here; exactly-once per sink within a batch comes from
-    * the persisted split + checkpointed batch ids.
-    */
   /** STREAMING corpus curation — the batch capstone's gate →
     * decontaminate → dedup front half as ONE incremental stream, so a
     * corpus can be curated as it lands instead of in a nightly batch:
@@ -537,7 +550,7 @@ object Jobs {
       lateness: String,
       stateShufflePartitions: Option[Int] = None): DataFrame =
     withShufflePartitions(spark, stateShufflePartitions) {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
+      val schema = StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
           org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("text",
@@ -575,11 +588,14 @@ object Jobs {
     * 100 TB posture: recompute cost is O(corpus) per trigger — at
     * scale the trigger cadence is the dial (recompute at epoch/shard-
     * publish boundaries, not per-arrival; the snapshot append itself
-    * stays O(batch)). The versioned corpus/plan layout is the
-    * crash-safe publish pattern of [[runChangelogStream]]: a resumed
-    * checkpoint continues from the highest published version.
-    */
-  /** `filesPerTrigger` sets the micro-batch granularity. The
+    * stays O(batch)). The versioned corpus/plan layout runs
+    * [[runVersionedPublish]]: a resumed checkpoint continues from the
+    * highest published plan version, and a batch re-delivered after its
+    * plan was published skips — re-appending would read
+    * `corpus/v=batchId` as its own prev (an overwrite-while-reading
+    * error) and duplicate the batch's rows.
+    *
+    * `filesPerTrigger` sets the micro-batch granularity. The
     * published plan at each version is a pure function of the corpus
     * accumulated so far, and consumers read only the LAST published
     * version — so results are identical at ANY granularity and
@@ -591,43 +607,22 @@ object Jobs {
   def runPlanRecomputeStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       workDir: String,
       planOf: DataFrame => DataFrame,
       filesPerTrigger: Int = 1): DataFrame = {
     require(filesPerTrigger >= 1, "filesPerTrigger must be >= 1")
-    var lastV = publishedVersion(spark, s"$workDir/plan")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Replay safety: a batch can be re-delivered after its plan
-        // version was already PUBLISHED (crash between the plan write
-        // and the checkpoint commit). lastV >= batchId then means both
-        // writes for this batch finished — re-appending would read
-        // corpus/v=batchId as its own prev (an overwrite-while-reading
-        // error) and duplicate the batch's rows. Skip: the publish is
-        // the idempotence marker, exactly like runChangelogStream's
-        // recovered-version path.
-        if (lastV < batchId) {
-          val prev =
-            if (lastV < 0) batch.limit(0)
-            else spark.read.parquet(s"$workDir/corpus/v=$lastV")
-          prev.unionByName(batch)
-            .write.mode("overwrite").parquet(s"$workDir/corpus/v=$batchId")
-          planOf(spark.read.parquet(s"$workDir/corpus/v=$batchId"))
-            .write.mode("overwrite").parquet(s"$workDir/plan/v=$batchId")
-          lastV = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(lastV >= 0, s"no input files found under $inputDir")
-    spark.read.parquet(s"$workDir/plan/v=$lastV")
+    val v = runVersionedPublish(spark, inputDir, schema, s"$workDir/ckpt",
+        s"$workDir/plan", filesPerTrigger) { (prevV, batch, batchId) =>
+      val prev =
+        if (prevV < 0) batch.limit(0)
+        else spark.read.parquet(s"$workDir/corpus/v=$prevV")
+      prev.unionByName(batch)
+        .write.mode("overwrite").parquet(s"$workDir/corpus/v=$batchId")
+      planOf(spark.read.parquet(s"$workDir/corpus/v=$batchId"))
+        .write.mode("overwrite").parquet(s"$workDir/plan/v=$batchId")
+    }
+    spark.read.parquet(s"$workDir/plan/v=$v")
   }
 
   /** INCREMENTAL AGGREGATE MAINTENANCE — the streaming form of
@@ -645,35 +640,22 @@ object Jobs {
   def runAggMergeStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       workDir: String,
       stateOf: DataFrame => DataFrame,
       keyCols: Seq[String],
       measureCols: Seq[String]): DataFrame = {
-    var lastV = publishedVersion(spark, s"$workDir/state")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (lastV < batchId) {
-          val bState = stateOf(batch)
-          val merged =
-            if (lastV < 0) bState
-            else graft.etl.Transform.mergeAggStates(
-              Seq(spark.read.parquet(s"$workDir/state/v=$lastV"), bState),
-              keyCols, measureCols)
-          merged.write.mode("overwrite").parquet(s"$workDir/state/v=$batchId")
-          lastV = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(lastV >= 0, s"no input files found under $inputDir")
-    spark.read.parquet(s"$workDir/state/v=$lastV")
+    val v = runVersionedPublish(spark, inputDir, schema, s"$workDir/ckpt",
+        s"$workDir/state") { (prevV, batch, batchId) =>
+      val bState = stateOf(batch)
+      val merged =
+        if (prevV < 0) bState
+        else graft.etl.Transform.mergeAggStates(
+          Seq(spark.read.parquet(s"$workDir/state/v=$prevV"), bState),
+          keyCols, measureCols)
+      merged.write.mode("overwrite").parquet(s"$workDir/state/v=$batchId")
+    }
+    spark.read.parquet(s"$workDir/state/v=$v")
   }
 
   /** STREAMING inverted-index maintenance — the retrieval analogue of
@@ -696,38 +678,24 @@ object Jobs {
   def runBm25IndexStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       workDir: String): (DataFrame, DataFrame, DataFrame) = {
-    var lastV = publishedVersion(spark, s"$workDir/stats")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (lastV < batchId) {
-          val (postings, dl, stats) =
-            graft.ext.Text.bm25Index(batch, "doc_id", "text")
-          graft.sinks.Writers.idempotentBatchWrite(
-            postings, batchId, s"$workDir/postings")
-          graft.sinks.Writers.idempotentBatchWrite(dl, batchId, s"$workDir/dl")
-          val merged =
-            if (lastV < 0) stats
-            else graft.etl.Transform.mergeAggStates(
-              Seq(spark.read.parquet(s"$workDir/stats/v=$lastV"), stats),
-              Nil, Seq("n", "sdl"))
-          merged.write.mode("overwrite").parquet(s"$workDir/stats/v=$batchId")
-          lastV = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(lastV >= 0, s"no input files found under $inputDir")
+    val v = runVersionedPublish(spark, inputDir, schema, s"$workDir/ckpt",
+        s"$workDir/stats") { (prevV, batch, batchId) =>
+      val (postings, dl, stats) =
+        graft.ext.Text.bm25Index(batch, "doc_id", "text")
+      Writers.idempotentBatchWrite(postings, batchId, s"$workDir/postings")
+      Writers.idempotentBatchWrite(dl, batchId, s"$workDir/dl")
+      val merged =
+        if (prevV < 0) stats
+        else graft.etl.Transform.mergeAggStates(
+          Seq(spark.read.parquet(s"$workDir/stats/v=$prevV"), stats),
+          Nil, Seq("n", "sdl"))
+      merged.write.mode("overwrite").parquet(s"$workDir/stats/v=$batchId")
+    }
     (spark.read.parquet(s"$workDir/postings"),
       spark.read.parquet(s"$workDir/dl"),
-      spark.read.parquet(s"$workDir/stats/v=$lastV"))
+      spark.read.parquet(s"$workDir/stats/v=$v"))
   }
 
   /** STREAMING sketch maintenance — mergeable per-key quantile state
@@ -747,42 +715,29 @@ object Jobs {
   def runKllMergeStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       workDir: String,
       keyCol: String,
       valueCol: String,
       k: Int,
       stateShufflePartitions: Option[Int] = None): DataFrame =
     withShufflePartitions(spark, stateShufflePartitions) {
-    var lastV = publishedVersion(spark, s"$workDir/state")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (lastV < batchId) {
-          val bSk = batch.filter(col(valueCol).isNotNull)
-            .groupBy(col(keyCol))
-            .agg(graft.ext.KllAgg.kllAgg(col(valueCol), k).as("sk"),
-              count(lit(1)).as("n_rows"))
-          val merged =
-            if (lastV < 0) bSk
-            else spark.read.parquet(s"$workDir/state/v=$lastV")
-              .unionByName(bSk)
-              .groupBy(col(keyCol))
-              .agg(graft.ext.KllAgg.kllMergeAgg(col("sk"), k).as("sk"),
-                sum(col("n_rows")).as("n_rows"))
-          merged.write.mode("overwrite").parquet(s"$workDir/state/v=$batchId")
-          lastV = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(lastV >= 0, s"no input files found under $inputDir")
-    spark.read.parquet(s"$workDir/state/v=$lastV")
+    val v = runVersionedPublish(spark, inputDir, schema, s"$workDir/ckpt",
+        s"$workDir/state") { (prevV, batch, batchId) =>
+      val bSk = batch.filter(col(valueCol).isNotNull)
+        .groupBy(col(keyCol))
+        .agg(graft.ext.KllAgg.kllAgg(col(valueCol), k).as("sk"),
+          count(lit(1)).as("n_rows"))
+      val merged =
+        if (prevV < 0) bSk
+        else spark.read.parquet(s"$workDir/state/v=$prevV")
+          .unionByName(bSk)
+          .groupBy(col(keyCol))
+          .agg(graft.ext.KllAgg.kllMergeAgg(col("sk"), k).as("sk"),
+            sum(col("n_rows")).as("n_rows"))
+      merged.write.mode("overwrite").parquet(s"$workDir/state/v=$batchId")
+    }
+    spark.read.parquet(s"$workDir/state/v=$v")
   }
 
   /** STREAMING KMV sketch maintenance — the bottom-k analogue of
@@ -800,7 +755,7 @@ object Jobs {
   def runKmvMergeStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       workDir: String,
       groupCol: String,
       textCol: String,
@@ -808,37 +763,24 @@ object Jobs {
       k: Int,
       stateShufflePartitions: Option[Int] = None): DataFrame =
     withShufflePartitions(spark, stateShufflePartitions) {
-    var lastV = publishedVersion(spark, s"$workDir/state")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (lastV < batchId) {
-          val bSk = graft.ext.Dedup.kmvSketch(
-            batch, groupCol, textCol, shingleSize, k)
-          val merged =
-            if (lastV < 0) bSk
-            else spark.read.parquet(s"$workDir/state/v=$lastV")
-              .unionByName(bSk)
-              .groupBy(col("grp"))
-              .agg(slice(
-                // distinct BEFORE the k-cut: the same shingle hash
-                // arrives from every batch that contains it, and a
-                // duplicated small hash would evict a real k-th value
-                array_sort(array_distinct(flatten(collect_list(col("sig"))))),
-                1, k).as("sig"))
-          merged.write.mode("overwrite").parquet(s"$workDir/state/v=$batchId")
-          lastV = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(lastV >= 0, s"no input files found under $inputDir")
-    spark.read.parquet(s"$workDir/state/v=$lastV")
+    val v = runVersionedPublish(spark, inputDir, schema, s"$workDir/ckpt",
+        s"$workDir/state") { (prevV, batch, batchId) =>
+      val bSk = graft.ext.Dedup.kmvSketch(
+        batch, groupCol, textCol, shingleSize, k)
+      val merged =
+        if (prevV < 0) bSk
+        else spark.read.parquet(s"$workDir/state/v=$prevV")
+          .unionByName(bSk)
+          .groupBy(col("grp"))
+          .agg(slice(
+            // distinct BEFORE the k-cut: the same shingle hash
+            // arrives from every batch that contains it, and a
+            // duplicated small hash would evict a real k-th value
+            array_sort(array_distinct(flatten(collect_list(col("sig"))))),
+            1, k).as("sig"))
+      merged.write.mode("overwrite").parquet(s"$workDir/state/v=$batchId")
+    }
+    spark.read.parquet(s"$workDir/state/v=$v")
   }
 
   /** STREAMING CDC chunk store — [[graft.ext.Dedup.cdcChunks]] kept
@@ -854,40 +796,26 @@ object Jobs {
   def runCdcChunkStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       workDir: String,
       stateShufflePartitions: Option[Int] = None,
       filesPerTrigger: Int = 1): (DataFrame, DataFrame) =
     withShufflePartitions(spark, stateShufflePartitions) {
-    var lastV = publishedVersion(spark, s"$workDir/state")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (lastV < batchId) {
-          val chunks = graft.ext.Dedup.cdcChunks(batch, "doc_id", "text")
-          graft.sinks.Writers.idempotentBatchWrite(
-            chunks, batchId, s"$workDir/chunks")
-          val bState = chunks.groupBy(col("chunk_text"))
-            .agg(countDistinct(col("doc_id")).as("n_docs_with"))
-          val merged =
-            if (lastV < 0) bState
-            else graft.etl.Transform.mergeAggStates(
-              Seq(spark.read.parquet(s"$workDir/state/v=$lastV"), bState),
-              Seq("chunk_text"), Seq("n_docs_with"))
-          merged.write.mode("overwrite").parquet(s"$workDir/state/v=$batchId")
-          lastV = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(lastV >= 0, s"no input files found under $inputDir")
+    val v = runVersionedPublish(spark, inputDir, schema, s"$workDir/ckpt",
+        s"$workDir/state", filesPerTrigger) { (prevV, batch, batchId) =>
+      val chunks = graft.ext.Dedup.cdcChunks(batch, "doc_id", "text")
+      Writers.idempotentBatchWrite(chunks, batchId, s"$workDir/chunks")
+      val bState = chunks.groupBy(col("chunk_text"))
+        .agg(countDistinct(col("doc_id")).as("n_docs_with"))
+      val merged =
+        if (prevV < 0) bState
+        else graft.etl.Transform.mergeAggStates(
+          Seq(spark.read.parquet(s"$workDir/state/v=$prevV"), bState),
+          Seq("chunk_text"), Seq("n_docs_with"))
+      merged.write.mode("overwrite").parquet(s"$workDir/state/v=$batchId")
+    }
     (spark.read.parquet(s"$workDir/chunks").drop("batch_id"),
-      spark.read.parquet(s"$workDir/state/v=$lastV"))
+      spark.read.parquet(s"$workDir/state/v=$v"))
   }
 
   /** Streaming ingest into a persisted IVF-PQ index — FAISS `add` as
@@ -913,7 +841,7 @@ object Jobs {
   def runIndexIngestStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType, // (idCol, vecCol)
+      schema: StructType, // (idCol, vecCol)
       idCol: String,
       vecCol: String,
       centroids: IndexedSeq[Seq[Float]],
@@ -945,7 +873,7 @@ object Jobs {
     // BIT-EQUAL at any micro-batch granularity (the q113 contract);
     // bench-facing callers coarsen filesPerTrigger to cut per-trigger
     // startup, StreamSpec pins the fine-grained replay form
-    val q = spark.readStream.schema(schema)
+    runAvailableNow(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerTrigger)
       .parquet(inputDir)
       .writeStream
@@ -958,12 +886,8 @@ object Jobs {
           .select(col("vec_id"), col("codes"), col("label"))
           .write.mode("overwrite").partitionBy("label")
           .parquet(s"$indexDir/codes/batch=$batchId")
-        ()
       }
-      .option("checkpointLocation", s"$indexDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", s"$indexDir/ckpt"))
   }
 
   /** Streaming ANN query serving — the SEARCH half of the index
@@ -981,7 +905,7 @@ object Jobs {
   def runQueryServeStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType, // (query_id, query_vec)
+      schema: StructType, // (query_id, query_vec)
       indexDir: String,
       outDir: String,
       k: Int,
@@ -990,7 +914,7 @@ object Jobs {
       filesPerTrigger: Int = 1): Unit =
     withShufflePartitions(spark, stateShufflePartitions) {
     val index = graft.ext.AnnIndex.read(spark, indexDir)
-    val q = spark.readStream.schema(schema)
+    runAvailableNow(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerTrigger)
       .parquet(inputDir)
       .writeStream
@@ -998,12 +922,8 @@ object Jobs {
         graft.ext.AnnIndex.searchTopK(index, batch, k, nprobe)
           .write.mode("overwrite")
           .parquet(s"$outDir/results/batch=$batchId")
-        ()
       }
-      .option("checkpointLocation", s"$outDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", s"$outDir/ckpt"))
   }
 
   /** Classifier SERVING as a stream: documents arrive in micro-batches
@@ -1019,7 +939,7 @@ object Jobs {
   def runClassifierServeStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType, // (doc_id, lang, text)
+      schema: StructType, // (doc_id, lang, text)
       label: Column,
       wScaled: Array[Long]): DataFrame = {
     val stream = spark.readStream.schema(schema)
@@ -1079,159 +999,146 @@ object Jobs {
   def runNearDupDedupStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType, // (doc_id, lang, text)
+      schema: StructType, // (doc_id, lang, text)
       workDir: String,
       compactEvery: Int = 0,
       stateShufflePartitions: Option[Int] = None): DataFrame =
     withShufflePartitions(spark, stateShufflePartitions) {
-    var lastV = publishedVersion(spark, s"$workDir/kept")
     val keptRoot = s"$workDir/kept"
     val docsRoot = s"$workDir/index/docs"
     val bandsRoot = s"$workDir/index/bands"
     // complete any compaction swap a crash interrupted BEFORE the first
     // trigger checks haveIndex — otherwise the stored index looks
     // missing and cross-batch dups would be silently admitted
-    graft.sinks.Writers.recoverStagedSwap(spark, docsRoot)
-    graft.sinks.Writers.recoverStagedSwap(spark, bandsRoot)
+    Writers.recoverStagedSwap(spark, docsRoot)
+    Writers.recoverStagedSwap(spark, bandsRoot)
     val bands = 16; val rowsPerBand = 2
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (lastV < batchId) {
-          // phase tags: every action this body drives carries a
-          // neardup:<phase> job description, so a job-level profile
-          // (graft.tools.JobProfile) attributes the per-trigger cost
-          def phase[A](name: String)(f: => A): A = {
-            spark.sparkContext.setJobDescription(s"neardup:$name")
-            try f finally spark.sparkContext.setJobDescription(null)
-          }
-          // fingerprint the batch ONCE — feeds the band join, the
-          // verify join, and (semi-joined to survivors) the published
-          // index rows
-          val batchIdx = graft.ext.Dedup.minhashIndexRows(
-              batch, "doc_id", "text", shingleSize = 3, numHashes = 32)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // resolve through the Hadoop FS API like publishedVersion does —
-          // a java.io.File check is local-FS-only and would silently skip
-          // the stored index (admitting cross-batch dups) on HDFS/S3
-          val bandsHPath = new org.apache.hadoop.fs.Path(bandsRoot)
-          val haveIndex = lastV >= 0 &&
-            bandsHPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .exists(bandsHPath)
-          val matches = if (!haveIndex) {
-            val none = batchIdx.limit(0)
-            graft.ext.Dedup.minhashNearDupAgainstBandRows(
-              graft.ext.Dedup.minhashBandRows(none, bands, rowsPerBand),
-              none.select(col("id"), col("sh")), batchIdx,
-              bands, rowsPerBand, threshold = 0.5)
-          } else {
-            // the batch's distinct bp = band·256 + bucket-prefix
-            // values — a BOUNDED driver hop (≤ bands·256 = 4096 rows
-            // by construction, independent of batch or corpus size) —
-            // become a pushed parquet In filter on the stored bands
-            // table, so the stored-side scan prunes to touched
-            // row groups instead of every fingerprint ever admitted.
-            // v < batchId keeps a crash-replayed batch from matching
-            // its own orphaned fingerprints (marker written last).
-            val touched = phase("touched-bp")(graft.ext.Dedup
-              .minhashBandRows(batchIdx, bands, rowsPerBand)
-              .select((col("band") * NearDupBandPrefixVals +
-                nearDupBucketPrefix(col("bucket"))).cast("int").as("bp"))
-              .distinct().collect().map(_.getInt(0)).toSeq)
-            val stored = nearDupStoredBandScan(spark, bandsRoot, touched, batchId)
-            // two-phase verify: materialize the (small) candidate set
-            // first, then prune the stored DOC scan to the candidates'
-            // id-prefix row groups — the verify side stops being the
-            // remaining O(corpus)-per-trigger read. The prefix hop is
-            // bounded at 256 rows by construction.
-            val cand = graft.ext.Dedup.minhashCandidatesAgainstBandRows(
-                stored, batchIdx, bands, rowsPerBand)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            val touchedIp = phase("candidates")(cand
-              .select(nearDupDocPrefix(col("corpus_id")).as("ip"))
-              .distinct().collect().map(_.getInt(0)).toSeq)
-            val docs = nearDupStoredDocScan(spark, docsRoot, touchedIp, batchId)
-            val verified = phase("verify")(
-              graft.ext.Dedup.minhashVerifyCandidates(
-                cand, docs, batchIdx, threshold = 0.5)
-                .localCheckpoint(eager = true)) // realize before cand unpersists
-            cand.unpersist()
-            verified
-          }
-          val s0 = batch.join(
-            matches.select(col("batch_id").as("doc_id")).distinct(),
-            Seq("doc_id"), "left_anti")
-          // in-batch pairs ride the ALREADY-persisted batch fingerprints
-          // (semi-joined down to the cross-batch survivors) instead of
-          // re-tokenizing/re-shingling/re-minhashing the batch text —
-          // the 32-hash/16-band scheme has strictly higher candidate
-          // recall than the old standalone 16/8 pass and every pair is
-          // exact-Jaccard verified, so the pair set is unchanged
-          val s0Idx = batchIdx.join(
-            s0.select(col("doc_id").as("id")), Seq("id"), "left_semi")
-          // min-id-per-cluster closure via the bounded driver
-          // union-find (distributed dupClusters above the pair cap) —
-          // verified pair sets are sparse, and the propagation loop's
-          // checkpoint/probe cascade was the trigger's dominant
-          // scheduler cost
-          val dropIds = phase("in-batch-clusters")(
-            graft.ext.Clusters.dupDropIds(
-              graft.ext.Dedup.minhashNearDupPairsFromIndex(
-                s0Idx, bands, rowsPerBand, threshold = 0.5),
-              "id_a", "id_b"))
-          // materialized once: three publishes consume survivors, and
-          // without the checkpoint each re-executes the batch-side
-          // anti-join plan (s0 + drop set) as its own multi-stage job
-          val survivors = phase("survivors")(
-            s0.join(dropIds, Seq("doc_id"), "left_anti")
-              .localCheckpoint(eager = true))
-          // publish the survivors' fingerprints FIRST (docs + band
-          // posting rows — both derived from the persisted batchIdx by
-          // a semi-join, so survivor text is fingerprinted exactly
-          // once, ever). Order matters for crash-safe replay: the
-          // kept/v= partition below is the replay-skip marker
-          // (publishedVersion reads kept/), so the index partitions
-          // must land before it — a crash between the writes re-runs
-          // the whole batch (all writes are idempotent partition
-          // overwrites) and the v < batchId read filter above keeps
-          // the re-run from seeing its own orphaned rows
-          val survivorIdx = batchIdx.join(
-            survivors.select(col("doc_id").as("id")), Seq("id"), "left_semi")
-          phase("publish-docs")(survivorIdx
-            .withColumn("ip", nearDupDocPrefix(col("id")))
-            .sortWithinPartitions(col("ip"))
-            .write.mode("overwrite").parquet(s"$docsRoot/v=$batchId"))
-          phase("publish-bands")(
-            graft.ext.Dedup.minhashBandRows(survivorIdx, bands, rowsPerBand)
-              .withColumn("bp", (col("band") * NearDupBandPrefixVals +
-                nearDupBucketPrefix(col("bucket"))).cast("int"))
-              .sortWithinPartitions(col("bp"))
-              .write.mode("overwrite").parquet(s"$bandsRoot/v=$batchId"))
-          // APPEND-ONLY publish, marker LAST: each batch lands only its
-          // own survivors under v=<batchId> (idempotent overwrite of
-          // its own partition) — the per-batch write is O(new
-          // survivors), never an O(corpus) snapshot rewrite; readers
-          // union the partitions
-          phase("publish-kept")(survivors
-            .write.mode("overwrite").parquet(s"$keptRoot/v=$batchId"))
-          batchIdx.unpersist()
-          lastV = batchId
-          // periodic index maintenance INSIDE the serialized foreachBatch
-          // (triggers never overlap), after the marker write so the
-          // compacted generation only ever folds published versions —
-          // results are identical with or without it (StreamSpec pin)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            phase("compact")(compactNearDupIndex(spark, workDir))
-        }
-        ()
+    runVersionedPublish(spark, inputDir, schema, s"$workDir/ckpt", keptRoot) {
+        (prevV, batch, batchId) =>
+      // phase tags: every action this body drives carries a
+      // neardup:<phase> job description, so a job-level profile
+      // (graft.tools.JobProfile) attributes the per-trigger cost
+      def phase[A](name: String)(f: => A): A = {
+        spark.sparkContext.setJobDescription(s"neardup:$name")
+        try f finally spark.sparkContext.setJobDescription(null)
       }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(lastV >= 0, s"no input files found under $inputDir")
+      // fingerprint the batch ONCE — feeds the band join, the
+      // verify join, and (semi-joined to survivors) the published
+      // index rows
+      val batchIdx = graft.ext.Dedup.minhashIndexRows(
+          batch, "doc_id", "text", shingleSize = 3, numHashes = 32)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // resolve through the Hadoop FS API like listPartitionIds does —
+      // a java.io.File check is local-FS-only and would silently skip
+      // the stored index (admitting cross-batch dups) on HDFS/S3
+      val bandsHPath = new org.apache.hadoop.fs.Path(bandsRoot)
+      val haveIndex = prevV >= 0 &&
+        bandsHPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .exists(bandsHPath)
+      val matches = if (!haveIndex) {
+        val none = batchIdx.limit(0)
+        graft.ext.Dedup.minhashNearDupAgainstBandRows(
+          graft.ext.Dedup.minhashBandRows(none, bands, rowsPerBand),
+          none.select(col("id"), col("sh")), batchIdx,
+          bands, rowsPerBand, threshold = 0.5)
+      } else {
+        // the batch's distinct bp = band·256 + bucket-prefix
+        // values — a BOUNDED driver hop (≤ bands·256 = 4096 rows
+        // by construction, independent of batch or corpus size) —
+        // become a pushed parquet In filter on the stored bands
+        // table, so the stored-side scan prunes to touched
+        // row groups instead of every fingerprint ever admitted.
+        // v < batchId keeps a crash-replayed batch from matching
+        // its own orphaned fingerprints (marker written last).
+        val touched = phase("touched-bp")(graft.ext.Dedup
+          .minhashBandRows(batchIdx, bands, rowsPerBand)
+          .select((col("band") * NearDupBandPrefixVals +
+            nearDupBucketPrefix(col("bucket"))).cast("int").as("bp"))
+          .distinct().collect().map(_.getInt(0)).toSeq)
+        val stored = nearDupStoredBandScan(spark, bandsRoot, touched, batchId)
+        // two-phase verify: materialize the (small) candidate set
+        // first, then prune the stored DOC scan to the candidates'
+        // id-prefix row groups — the verify side stops being the
+        // remaining O(corpus)-per-trigger read. The prefix hop is
+        // bounded at 256 rows by construction.
+        val cand = graft.ext.Dedup.minhashCandidatesAgainstBandRows(
+            stored, batchIdx, bands, rowsPerBand)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val touchedIp = phase("candidates")(cand
+          .select(nearDupDocPrefix(col("corpus_id")).as("ip"))
+          .distinct().collect().map(_.getInt(0)).toSeq)
+        val docs = nearDupStoredDocScan(spark, docsRoot, touchedIp, batchId)
+        val verified = phase("verify")(
+          graft.ext.Dedup.minhashVerifyCandidates(
+            cand, docs, batchIdx, threshold = 0.5)
+            .localCheckpoint(eager = true)) // realize before cand unpersists
+        cand.unpersist()
+        verified
+      }
+      val s0 = batch.join(
+        matches.select(col("batch_id").as("doc_id")).distinct(),
+        Seq("doc_id"), "left_anti")
+      // in-batch pairs ride the ALREADY-persisted batch fingerprints
+      // (semi-joined down to the cross-batch survivors) instead of
+      // re-tokenizing/re-shingling/re-minhashing the batch text —
+      // the 32-hash/16-band scheme has strictly higher candidate
+      // recall than the old standalone 16/8 pass and every pair is
+      // exact-Jaccard verified, so the pair set is unchanged
+      val s0Idx = batchIdx.join(
+        s0.select(col("doc_id").as("id")), Seq("id"), "left_semi")
+      // min-id-per-cluster closure via the bounded driver
+      // union-find (distributed dupClusters above the pair cap) —
+      // verified pair sets are sparse, and the propagation loop's
+      // checkpoint/probe cascade was the trigger's dominant
+      // scheduler cost
+      val dropIds = phase("in-batch-clusters")(
+        graft.ext.Clusters.dupDropIds(
+          graft.ext.Dedup.minhashNearDupPairsFromIndex(
+            s0Idx, bands, rowsPerBand, threshold = 0.5),
+          "id_a", "id_b"))
+      // materialized once: three publishes consume survivors, and
+      // without the checkpoint each re-executes the batch-side
+      // anti-join plan (s0 + drop set) as its own multi-stage job
+      val survivors = phase("survivors")(
+        s0.join(dropIds, Seq("doc_id"), "left_anti")
+          .localCheckpoint(eager = true))
+      // publish the survivors' fingerprints FIRST (docs + band
+      // posting rows — both derived from the persisted batchIdx by
+      // a semi-join, so survivor text is fingerprinted exactly
+      // once, ever). Order matters for crash-safe replay: the
+      // kept/v= partition below is the replay-skip marker
+      // (runVersionedPublish's version root), so the index partitions
+      // must land before it — a crash between the writes re-runs
+      // the whole batch (all writes are idempotent partition
+      // overwrites) and the v < batchId read filter above keeps
+      // the re-run from seeing its own orphaned rows
+      val survivorIdx = batchIdx.join(
+        survivors.select(col("doc_id").as("id")), Seq("id"), "left_semi")
+      phase("publish-docs")(survivorIdx
+        .withColumn("ip", nearDupDocPrefix(col("id")))
+        .sortWithinPartitions(col("ip"))
+        .write.mode("overwrite").parquet(s"$docsRoot/v=$batchId"))
+      phase("publish-bands")(
+        graft.ext.Dedup.minhashBandRows(survivorIdx, bands, rowsPerBand)
+          .withColumn("bp", (col("band") * NearDupBandPrefixVals +
+            nearDupBucketPrefix(col("bucket"))).cast("int"))
+          .sortWithinPartitions(col("bp"))
+          .write.mode("overwrite").parquet(s"$bandsRoot/v=$batchId"))
+      // APPEND-ONLY publish, marker LAST: each batch lands only its
+      // own survivors under v=<batchId> (idempotent overwrite of
+      // its own partition) — the per-batch write is O(new
+      // survivors), never an O(corpus) snapshot rewrite; readers
+      // union the partitions
+      phase("publish-kept")(survivors
+        .write.mode("overwrite").parquet(s"$keptRoot/v=$batchId"))
+      batchIdx.unpersist()
+      // periodic index maintenance INSIDE the serialized foreachBatch
+      // (triggers never overlap), after the marker write so the
+      // compacted generation only ever folds published versions —
+      // results are identical with or without it (StreamSpec pin)
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+        phase("compact")(compactNearDupIndex(spark, workDir))
+    }
     spark.read.parquet(keptRoot).drop("v")
   }
 
@@ -1253,7 +1160,7 @@ object Jobs {
   def runDHashIndexStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType, // (media_id, payload, mime)
+      schema: StructType, // (media_id, payload, mime)
       workDir: String,
       filesPerTrigger: Int = 1): DataFrame =
     runMediaIndexStream(spark, inputDir, schema, workDir,
@@ -1268,7 +1175,7 @@ object Jobs {
   def runWavHashIndexStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType, // (media_id, payload, mime)
+      schema: StructType, // (media_id, payload, mime)
       workDir: String,
       filesPerTrigger: Int = 1): DataFrame =
     runMediaIndexStream(spark, inputDir, schema, workDir,
@@ -1283,7 +1190,7 @@ object Jobs {
   def runAudioHashIndexStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType, // (media_id, payload, mime)
+      schema: StructType, // (media_id, payload, mime)
       workDir: String,
       filesPerTrigger: Int = 1): DataFrame =
     runMediaIndexStream(spark, inputDir, schema, workDir,
@@ -1298,7 +1205,7 @@ object Jobs {
   def runImageHashIndexStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType, // (media_id, payload, mime)
+      schema: StructType, // (media_id, payload, mime)
       workDir: String,
       filesPerTrigger: Int = 1): DataFrame =
     runMediaIndexStream(spark, inputDir, schema, workDir,
@@ -1313,7 +1220,7 @@ object Jobs {
   def runVideoHashIndexStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType, // (media_id, payload, mime)
+      schema: StructType, // (media_id, payload, mime)
       workDir: String,
       stride: Int,
       filesPerTrigger: Int = 1): DataFrame =
@@ -1334,7 +1241,7 @@ object Jobs {
   def runWarcIngestStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType, // (media_id, payload, mime)
+      schema: StructType, // (media_id, payload, mime)
       workDir: String,
       filesPerTrigger: Int = 1): DataFrame =
     runMediaIndexStream(spark, inputDir, schema, workDir,
@@ -1354,26 +1261,22 @@ object Jobs {
   private def runMediaIndexStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       workDir: String,
       fingerprint: DataFrame => DataFrame,
       filesPerTrigger: Int = 1): DataFrame = {
     // complete any interrupted compaction swap before new batches land
     // beside a stranded staging copy
-    graft.sinks.Writers.recoverStagedSwap(spark, s"$workDir/index")
-    val q = spark.readStream.schema(schema)
+    Writers.recoverStagedSwap(spark, s"$workDir/index")
+    runAvailableNow(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerTrigger)
       .parquet(inputDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sinks.Writers.idempotentBatchWrite(
+        Writers.idempotentBatchWrite(
           fingerprint(batch), batchId, s"$workDir/index")
-        ()
       }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", s"$workDir/ckpt"))
     val root = new org.apache.hadoop.fs.Path(s"$workDir/index")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(root), s"no input files found under $inputDir")
@@ -1393,14 +1296,14 @@ object Jobs {
   def runMediaDecodeStream(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       goodPath: String,
       dlqPath: String,
       checkpoint: String,
       filesPerTrigger: Int = 1): Unit = {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerTrigger).parquet(inputDir)
-    val q = stream.writeStream
+    runAvailableNow(stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val media = batch.persist()
         try {
@@ -1413,14 +1316,16 @@ object Jobs {
           sized.join(feats.select(col("media_id")), Seq("media_id"), "left_anti")
             .write.mode("append").parquet(dlqPath)
         } finally { media.unpersist(); () }
-        ()
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", checkpoint))
   }
 
+  /** O-61/O-62: foreachBatch dual-write — persist the batch once, split
+    * good/bad, write each side plus alerts (ref: streaming/consumer.py:
+    * 59-102 routes good→DynamoDB, bad→DLQ+S3, surges→SNS). Sinks are
+    * parquet dirs here; exactly-once per sink within a batch comes from
+    * the persisted split + checkpointed batch ids.
+    */
   def runRoutingStream(
       spark: SparkSession,
       inputDir: String,
@@ -1430,7 +1335,7 @@ object Jobs {
       checkpoint: String): Unit = {
     val schema = graft.schema.Schemas.events
     val stream = spark.readStream.schema(schema).parquet(inputDir)
-    val q = stream.writeStream
+    runAvailableNow(stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val annotated = Validate.annotate(batch, eventRules).persist()
         try {
@@ -1438,11 +1343,7 @@ object Jobs {
           annotated.filter(!col("is_valid")).write.mode("append").parquet(badPath)
           annotated.filter(eventAlert).write.mode("append").parquet(alertPath)
         } finally annotated.unpersist()
-        ()
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", checkpoint))
   }
 }

@@ -63,8 +63,6 @@ object Stateful {
         })
   }
 
-  private val streamId = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** One AvailableNow pass of [[risingEdgeAlerts]] over the events
     * table as a REAL stateful streaming query (memory sink), returning
     * the collected result. The state logic makes the result equal to
@@ -80,16 +78,8 @@ object Stateful {
     import spark.implicits._
     val typed = graft.Tables.eventsStream(spark, dir)
       .selectExpr("event_id", "ts", "user_id", "value").as[KeyedEvent]
-    val name = s"graft_stateful_edges_${streamId.incrementAndGet()}"
-    val q = risingEdgeAlerts(spark, typed, threshold)
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    Jobs.runToMemorySink(spark, risingEdgeAlerts(spark, typed, threshold),
+      "graft_stateful_edges")
   }
 
   /** [[risingEdgeAlerts]] re-expressed on `transformWithState` — the
@@ -129,6 +119,14 @@ object Stateful {
     }
   }
 
+  /** Run `f` on the RocksDB state store — the provider
+    * `transformWithState` requires — restoring the session's provider
+    * afterwards.
+    */
+  private def withRocksDbState[T](spark: SparkSession)(f: => T): T =
+    Jobs.withConf(spark, "spark.sql.streaming.stateStore.providerClass",
+      Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))(f)
+
   /** One AvailableNow pass of the `transformWithState` rising-edge
     * processor (RocksDB state store — required by the API — scoped to
     * this run and restored after).
@@ -139,28 +137,16 @@ object Stateful {
       threshold: Double,
       stateShufflePartitions: Option[Int] = None): DataFrame =
     Jobs.withShufflePartitions(spark, stateShufflePartitions) {
-    import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState(spark) {
+      import spark.implicits._
       val typed = graft.Tables.eventsStream(spark, dir)
         .selectExpr("event_id", "ts", "user_id", "value").as[KeyedEvent]
       val alerts = typed
         .groupByKey(_.user_id)
         .transformWithState(new RisingEdgeProcessor(threshold),
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-      val name = s"graft_stateful_tws_${streamId.incrementAndGet()}"
-      val q = alerts.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      Jobs.runToMemorySink(spark, alerts, "graft_stateful_tws")
+    }
   }
 
   /** Rate-limit THROTTLE as a stream: keep an event only when it is at
@@ -212,13 +198,9 @@ object Stateful {
       cooldownUs: Long,
       stateShufflePartitions: Option[Int] = None): DataFrame =
     Jobs.withShufflePartitions(spark, stateShufflePartitions) {
-    import spark.implicits._
     require(cooldownUs > 0, "cooldown must be positive")
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState(spark) {
+      import spark.implicits._
       val typed = spark.readStream.schema(graft.schema.Schemas.events)
         .option("maxFilesPerTrigger", 1)
         .parquet(inputDir)
@@ -227,16 +209,8 @@ object Stateful {
         .groupByKey(_.user_id)
         .transformWithState(new ThrottleProcessor(cooldownUs),
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-      val name = s"graft_stream_throttle_${streamId.incrementAndGet()}"
-      val q = kept.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      Jobs.runToMemorySink(spark, kept, "graft_stream_throttle")
+    }
   }
 
   /** Holt level+trend smoothing as TRUE incremental streaming state —
@@ -307,13 +281,9 @@ object Stateful {
       stateShufflePartitions: Option[Int] = None,
       filesPerTrigger: Int = 1): DataFrame =
     Jobs.withShufflePartitions(spark, stateShufflePartitions) {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_seconds}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState(spark) {
+      import spark.implicits._
+      import org.apache.spark.sql.functions.{col, timestamp_seconds}
       val typed = spark.readStream.schema(graft.schema.Schemas.events)
         .option("maxFilesPerTrigger", filesPerTrigger)
         .parquet(inputDir)
@@ -323,19 +293,11 @@ object Stateful {
         .groupByKey(_.event_type)
         .transformWithState(new HoltProcessor(scale, alphaDen, betaDen),
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-      val name = s"graft_stream_holt_${streamId.incrementAndGet()}"
-      val q = smoothed.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
+      Jobs.runToMemorySink(spark, smoothed, "graft_stream_holt")
         .select(col("key"), timestamp_seconds(col("hr_s")).as("hr"),
           col("n"), col("level_scaled"), col("trend_scaled"),
           col("forecast_scaled"))
-    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 
   /** Streaming wrapper: memory-stream/file-source events → rising-edge

@@ -25,23 +25,52 @@ class ContractSpec extends SparkSpec {
     assert(stale.isEmpty, s"COVERAGE.md cites queries that no longer exist: $stale")
   }
 
+  /** Main-source lines, per file. */
+  private lazy val mainSources: Map[String, IndexedSeq[String]] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(f => f.toString -> java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq)
+      .toMap
+  }
+
+  /** `file:line` of every main-source line containing `token`. */
+  private def hits(token: String): Seq[String] =
+    mainSources.toSeq.sortBy(_._1).flatMap { case (f, ls) =>
+      ls.zipWithIndex.collect { case (l, i) if l.contains(token) => s"$f:${i + 1}" }
+    }
+
   test("kernel Columns bind expressions directly: no by-name function registry in main") {
     // a by-name kernel resolves only in the session it was registered
     // on — fresh newSession()s and foreachBatch clones miss it. The one
     // SQL-surface registration is GraftExtensions' injectFunction.
-    import scala.jdk.CollectionConverters._
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.nonEmpty)
-    def hits(token: String) = files.flatMap { f =>
-      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
-        .collect { case (l, i) if l.contains(token) => s"$f:${i + 1}" }
-    }
+    assert(mainSources.nonEmpty)
     Seq("createOrReplaceTempFunction", "call_function(").foreach { t =>
       assert(hits(t).isEmpty, s"$t in main sources")
     }
     assert(hits("injectFunction(").map(_.takeWhile(_ != ':')) ==
       Seq("src/main/scala/graft/ext/VectorKernels.scala"))
+  }
+
+  test("streams launch through one AvailableNow runner and one versioned-publish loop") {
+    // every graft.stream job starts in Jobs.runAvailableNow, and every
+    // versioned-state stream resumes, skips replays and moves its
+    // pointer in Jobs.runVersionedPublish — a hand-copied loop is how a
+    // runner loses its replay skip and rewrites published versions
+    val jobs = "src/main/scala/graft/stream/Jobs.scala"
+    def body(name: String): Seq[String] = {
+      val ls = mainSources(jobs)
+      val start = ls.indexWhere(_.contains(s"def $name("))
+      assert(start >= 0, s"$name is gone from $jobs")
+      val end = ls.indexWhere(l => l.startsWith("  /**") || l == "}", start)
+      (start until end).map(i => s"$jobs:${i + 1}")
+    }
+    def onlyIn(found: Seq[String], runner: String): Unit =
+      assert(found.size == 1 && body(runner).contains(found.head),
+        s"expected only in $runner: $found")
+    onlyIn(hits("Trigger.AvailableNow()"), "runAvailableNow")
+    onlyIn(hits("var lastV ="), "runVersionedPublish")
+    assert(hits("publishedVersion").isEmpty, "publishedVersion in main sources")
   }
 
   test("entry() returns rows (driver smoke contract)") {

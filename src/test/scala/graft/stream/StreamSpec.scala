@@ -403,6 +403,57 @@ class StreamSpec extends SparkSpec {
     }
   }
 
+  test("changelog stream: full replay of published batches rewrites no version") {
+    val tmp = tempDir("graft-cdc-replay")
+    val base = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
+      .toDF("k", "name", "v")
+    val slices = Seq(
+      Seq((1L, "a1", 11.0, 10L, "U"), (2L, "b", 0.0, 11L, "D")),
+      Seq((3L, "c", 0.0, 20L, "D"), (1L, "a2", 12.0, 21L, "U")),
+      Seq((3L, "c2", 33.0, 30L, "I"), (4L, "d", 40.0, 31L, "I")))
+    val in = s"$tmp/in"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
+    val t0 = System.currentTimeMillis() - 60000
+    slices.zipWithIndex.foreach { case (s, i) =>
+      s.toDF("k", "name", "v", "seq", "op")
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/slice$i")
+      val part = new java.io.File(s"$tmp/slice$i").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = new java.io.File(s"$in/part-$i.parquet")
+      java.nio.file.Files.move(part.toPath, dst.toPath)
+      dst.setLastModified(t0 + i * 1000L)
+    }
+    val schema = slices.head.toDF("k", "name", "v", "seq", "op").schema
+    def run() = Jobs.runChangelogStream(spark, base, in, schema,
+      Seq("k"), "seq", "op", s"$tmp/snap", s"$tmp/ckpt")
+    // per version: the rows, and every file's name and bytes
+    def published(): Seq[(Seq[(Long, String, Double)], Seq[(String, Seq[Byte])])] =
+      (0 to 2).map { v =>
+        val dir = new java.io.File(s"$tmp/snap/v=$v")
+        (spark.read.parquet(dir.getPath).as[(Long, String, Double)]
+          .collect().sorted.toSeq,
+          dir.listFiles().map(_.getName).sorted.toSeq.map(n => n ->
+            Files.readAllBytes(new java.io.File(dir, n).toPath).toSeq))
+      }
+    assert(run() == 2L)
+    val before = published()
+    assert(before.head._1 == Seq((1L, "a1", 11.0), (3L, "c", 30.0)))
+    // checkpoint lost, every version already published: Spark
+    // re-delivers batches 0-2, and each must recognize itself as
+    // published — a re-merge would fold slice 0 into v=2 and rewrite
+    // the v=0 a reader may already hold
+    def rmrf(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete(); ()
+    }
+    rmrf(new java.io.File(s"$tmp/ckpt"))
+    assert(run() == 2L)
+    val after = published()
+    (0 to 2).foreach { v =>
+      assert(after(v)._1 == before(v)._1, s"replay rewrote the rows of v=$v")
+      assert(after(v)._2 == before(v)._2, s"replay rewrote the files of v=$v")
+    }
+  }
+
   test("plan recompute stream: full replay of published batches is a no-op, not a wedge") {
     val tmp = tempDir("graft-planreplay")
     val in = s"$tmp/in"
