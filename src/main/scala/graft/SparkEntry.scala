@@ -1092,10 +1092,10 @@ object SparkEntry {
 
     // one week of errors: exercises the hive layout without creating
     // hundreds of tiny hour= dirs on the bench path. The DLQ write is
-    // independent of the fact-table writes (different dir, append mode
-    // — untouched by the dynamic-overwrite conf flips below), so it
-    // overlaps them from a driver thread (guide §2.6): its 168-dir
-    // commit was the single largest job in the query
+    // independent of the fact-table writes (different dir, append mode;
+    // their dynamic overwrite is a per-write option, not a session
+    // conf), so it overlaps them from a driver thread (guide §2.6): its
+    // 168-dir commit was the single largest job in the query
     import scala.concurrent.ExecutionContext.Implicits.global
     val errs = Tables.events(spark, dir).filter(col("event_type") === "error")
       .filter(col("ts") < lit("2024-01-08").cast(TimestampType))
@@ -3436,7 +3436,7 @@ object SparkEntry {
     * ([[graft.stream.Jobs.runQueryServeStream]]): the index builds
     * once (batch), then 20 queries arrive in 4 micro-batches and each
     * batch searches the FROZEN index, landing results under
-    * `results/batch=<id>/` with per-batch idempotent overwrite. The
+    * `results/batch_id=<id>/` with per-batch idempotent overwrite. The
     * search is deterministic per query and the index never changes
     * mid-stream, so the streamed results must be row-identical to one
     * batch search over all 20 queries — the contract checks that

@@ -16,9 +16,7 @@ import java.nio.file.{Files, Paths}
   * is partition-count invariant (the driver re-runs the suite at
   * different core counts), so concurrent session-conf nudges by the
   * stream runners (shuffle-partition sizing, state-store provider) are
-  * performance-only. The two queries that flip
-  * `partitionOverwriteMode` around a write run in a serial tail so the
-  * save/restore can never race another query's overwrite planning.
+  * performance-only.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -76,12 +74,9 @@ object Verify {
         System.err.println(s"[verify] $name FAILED: ${e.getMessage}")
       }
     }
-    val serialNames = Set("q40_sink_roundtrip", "q44_medallion_e2e")
-    val (serial, pooled) =
-      todo.partition { case (name, _) => serialNames.contains(name) }
     val nThreads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt
     val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
-    pooled.foreach { case (name, fn) =>
+    todo.foreach { case (name, fn) =>
       // ADVICE r15: pooled dumps shared ONE SparkSession while runners
       // save/restore session confs (shuffle-partition sizing, the
       // RocksDB state-store provider) — interleaved restores could
@@ -102,16 +97,6 @@ object Verify {
     }
     pool.shutdown()
     pool.awaitTermination(24, java.util.concurrent.TimeUnit.HOURS)
-    // operators that persist internally expose WithHandle variants for
-    // library callers; the harness runs 300+ queries in one session, so
-    // drop leaked caches once the pool drains (every query is
-    // deterministic, so a concurrent recompute-after-clear can only
-    // cost time, never change a dump)
-    spark.catalog.clearCache()
-    serial.foreach { case (name, fn) =>
-      dump(name, fn, spark)
-      spark.catalog.clearCache()
-    }
     spark.stop()
   }
 }

@@ -64,16 +64,6 @@ object Dedup {
         .otherwise(array(concat_ws(" ", toks)))
   }
 
-  /** MinHash signature: per hash family `s`, the min hash over the
-    * shingle set. One map-side pass per document via the codegen'd
-    * [[graft.ext.StringArrayMinhash]] kernel (the HOF formulation
-    * walked the array once per hash family). The hash family needs
-    * determinism, not portability — LSH candidates are verified with
-    * exact Jaccard; [[portableHash64]] remains for cross-engine cases.
-    */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    VectorKernels.minhashSig(shingles, numHashes)
-
   /** LSH band keys: signature split into `bands` rows of
     * `numHashes/bands`, each band hashed to a bucket id. Documents
     * sharing any (band, bucket) are candidates.

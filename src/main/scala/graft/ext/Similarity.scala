@@ -56,16 +56,6 @@ object Similarity {
     dot(ad, bd) / (norm(ad) * norm(bd))
   }
 
-  /** Unit-normalized double view — computed ONCE per row so pairwise
-    * scoring is a dot product only (3× fewer flops than re-deriving
-    * norms per pair, and the normalize runs map-side before any join).
-    */
-  def unitVector(c: Column): Column = {
-    val d = asDouble(c)
-    transform(d, x => x / sqrt(aggregate(zip_with(d, d, (p, q) => p * q),
-      lit(0.0), (acc, v) => acc + v)))
-  }
-
   /** Exact brute-force top-k: queries × corpus cross join, cosine, rank
     * per query on (rounded score desc, id asc) for deterministic ties.
     *

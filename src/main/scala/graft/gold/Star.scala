@@ -35,12 +35,6 @@ object Star {
         when(dayofweek(d).isin(1, 7), lit(true)).otherwise(lit(false)))
   }
 
-  /** O-30: dim extraction by distinct projection
-    * (ref: glue/data_aggregate_gold.py:108-112).
-    */
-  def dimFrom(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.select(cols.map(col): _*).distinct()
-
   /** O-42/O-45: partition-level upsert — delete existing rows whose key
     * appears in the incoming batch, then union the batch. Left-anti
     * join against the DISTINCT incoming keys instead of the reference's

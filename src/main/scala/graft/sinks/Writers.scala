@@ -13,13 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Writers {
 
-  /** O-51: single-file JSON landing (Bronze). The reference's
-    * `mergeSchema` write option is dropped — it's a read option, a no-op
-    * on write (ref: glue/data_ingestion_s3.py:33-36; SURVEY.md O-51).
-    */
-  def jsonSingleFile(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").json(path)
-
   /** O-52: snappy parquet, overwrite, unpartitioned
     * (ref: glue/data_transform_s3.py:142-148).
     */

@@ -16,7 +16,10 @@ import graft.sinks.Writers
   *
   * The Kinesis micro-batch boundary becomes the streaming trigger
   * (tests/verify: `Trigger.AvailableNow`, prod: `ProcessingTime`);
-  * Lambda's at-least-once becomes checkpointing + idempotent sinks.
+  * Lambda's at-least-once becomes checkpointing + idempotent sinks:
+  * no foreachBatch runner appends, so a replayed batch rewrites its own
+  * output (per-batch rows land through
+  * [[graft.sinks.Writers.idempotentBatchWrite]]).
   * Every job launches through [[runAvailableNow]]; every job that
   * publishes versioned state runs [[runVersionedPublish]]'s
   * resume / replay-skip / publish loop.
@@ -346,28 +349,6 @@ object Jobs {
         val latest = graft.etl.Transform.dedupLatestAgg(
           batch, Seq(keyCol), Seq(col("ts"), col("event_id")))
         Writers.kvUpsert(spark, latest, Seq(keyCol), tablePath)
-      }
-      .option("checkpointLocation", checkpoint))
-  }
-
-  /** Exactly-once filesystem sink stream: every micro-batch lands via
-    * [[graft.sinks.Writers.idempotentBatchWrite]] in its own
-    * `batch_id=` partition. Combined with the checkpoint, this is
-    * end-to-end exactly-once on a filesystem table: a batch replayed
-    * after a crash overwrites its own partial output (same batch id),
-    * and a RESTART with the same checkpoint re-runs nothing already
-    * committed — both pinned by StreamSpec.
-    */
-  def runIdempotentSinkStream(
-      spark: SparkSession,
-      inputDir: String,
-      outPath: String,
-      checkpoint: String): Unit = {
-    val schema = graft.schema.Schemas.events
-    runAvailableNow(spark.readStream.schema(schema).parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Writers.idempotentBatchWrite(batch, batchId, outPath)
       }
       .option("checkpointLocation", checkpoint))
   }
@@ -893,14 +874,15 @@ object Jobs {
   /** Streaming ANN query serving — the SEARCH half of the index
     * lifecycle ([[runIndexIngestStream]] is the ADD half): queries
     * arrive as micro-batches and each batch runs IVF-ADC search
-    * against a FROZEN on-disk index, appending results under
-    * `outDir/results/batch=<id>/` with the same per-batch idempotent
-    * overwrite as the ingest side (a replayed batch rewrites its own
-    * partition — exactly-once results under crash/replay). The index
-    * loads ONCE before the stream starts (quantizers are O(k·dim +
-    * m·k) driver-side literals; the code table stays a lazy scan), so
-    * per-batch work is just the probe-pruned search itself — the
-    * query-serving shape of a production vector store.
+    * against a FROZEN on-disk index, landing results under
+    * `outDir/results/batch_id=<id>/` through
+    * [[graft.sinks.Writers.idempotentBatchWrite]] (a replayed batch
+    * rewrites its own partition — exactly-once results under
+    * crash/replay). The index loads ONCE before the stream starts
+    * (quantizers are O(k·dim + m·k) driver-side literals; the code
+    * table stays a lazy scan), so per-batch work is just the
+    * probe-pruned search itself — the query-serving shape of a
+    * production vector store.
     */
   def runQueryServeStream(
       spark: SparkSession,
@@ -919,9 +901,8 @@ object Jobs {
       .parquet(inputDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.AnnIndex.searchTopK(index, batch, k, nprobe)
-          .write.mode("overwrite")
-          .parquet(s"$outDir/results/batch=$batchId")
+        Writers.idempotentBatchWrite(graft.ext.AnnIndex.searchTopK(index, batch, k, nprobe),
+          batchId, s"$outDir/results")
       }
       .option("checkpointLocation", s"$outDir/ckpt"))
   }
@@ -1285,13 +1266,13 @@ object Jobs {
 
   /** STREAMING media ingest with DLQ routing — the O-61 dual-write
     * shape over BINARY payloads: each micro-batch runs the REAL WAV
-    * parser ([[graft.ext.Multimodal.Wav]]); rows that parse append
-    * their integer-exact features (+ byte length) to the good path,
-    * rows that don't append to the DLQ with byte length only. Both
-    * writes are append-only per batch — O(batch), never a snapshot
-    * rewrite; the decode itself is the disclosed per-partition
-    * imperative tier. At-least-once via checkpoint + append, the
-    * `runRoutingStream` precedent.
+    * parser ([[graft.ext.Multimodal.Wav]]); rows that parse land
+    * their integer-exact features (+ byte length) on the good path,
+    * rows that don't land on the DLQ with byte length only. Both
+    * writes go through [[graft.sinks.Writers.idempotentBatchWrite]] —
+    * O(batch), never a snapshot rewrite, and a replayed batch
+    * overwrites its own `batch_id=` partition; the decode itself is the
+    * disclosed per-partition imperative tier.
     */
   def runMediaDecodeStream(
       spark: SparkSession,
@@ -1304,46 +1285,43 @@ object Jobs {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerTrigger).parquet(inputDir)
     runAvailableNow(stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val media = batch.persist()
         try {
           val feats = graft.ext.Multimodal
             .wavFeatures(spark, media, partitions = 4).toDF()
           val sized = media.select(
             col("media_id"), octet_length(col("payload")).as("n_bytes"))
-          sized.join(feats, Seq("media_id"))
-            .write.mode("append").parquet(goodPath)
-          sized.join(feats.select(col("media_id")), Seq("media_id"), "left_anti")
-            .write.mode("append").parquet(dlqPath)
+          Writers.idempotentBatchWrite(
+            sized.join(feats, Seq("media_id")), batchId, goodPath)
+          Writers.idempotentBatchWrite(
+            sized.join(feats.select(col("media_id")), Seq("media_id"), "left_anti"),
+            batchId, dlqPath)
         } finally { media.unpersist(); () }
       }
       .option("checkpointLocation", checkpoint))
   }
 
-  /** O-61/O-62: foreachBatch dual-write — persist the batch once, split
-    * good/bad, write each side plus alerts (ref: streaming/consumer.py:
-    * 59-102 routes good→DynamoDB, bad→DLQ+S3, surges→SNS). Sinks are
-    * parquet dirs here; exactly-once per sink within a batch comes from
-    * the persisted split + checkpointed batch ids.
+  /** O-61/O-62: the validate → route → alert stream over the events
+    * parquet. Each micro-batch runs [[Validate.routeBatch]], so good
+    * and bad rows land under `root/good` and `root/bad` in one
+    * `batch_id=<id>` partition per batch: with the checkpoint, a batch
+    * replayed after a crash overwrites its own output, and a restart
+    * re-runs nothing already committed. Returns the run's alert count,
+    * kept per batch id so a replayed batch replaces its count.
     */
   def runRoutingStream(
       spark: SparkSession,
       inputDir: String,
-      goodPath: String,
-      badPath: String,
-      alertPath: String,
-      checkpoint: String): Unit = {
-    val schema = graft.schema.Schemas.events
-    val stream = spark.readStream.schema(schema).parquet(inputDir)
-    runAvailableNow(stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val annotated = Validate.annotate(batch, eventRules).persist()
-        try {
-          annotated.filter(col("is_valid")).write.mode("append").parquet(goodPath)
-          annotated.filter(!col("is_valid")).write.mode("append").parquet(badPath)
-          annotated.filter(eventAlert).write.mode("append").parquet(alertPath)
-        } finally annotated.unpersist()
+      root: String,
+      checkpoint: String): Long = {
+    val alerts = scala.collection.mutable.Map.empty[Long, Long]
+    runAvailableNow(spark.readStream.schema(graft.schema.Schemas.events).parquet(inputDir)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        alerts(batchId) = Validate.routeBatch(batch, batchId, root, eventRules, eventAlert)
       }
       .option("checkpointLocation", checkpoint))
+    alerts.values.sum
   }
 }

@@ -299,22 +299,4 @@ object Stateful {
           col("forecast_scaled"))
     }
   }
-
-  /** Streaming wrapper: memory-stream/file-source events → rising-edge
-    * alerts into a memory sink table named `sinkName`.
-    */
-  def startRisingEdgeStream(
-      spark: SparkSession,
-      events: DataFrame,
-      threshold: Double,
-      sinkName: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val typed = events.selectExpr("event_id", "ts", "user_id", "value").as[KeyedEvent]
-    risingEdgeAlerts(spark, typed, threshold)
-      .writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("append")
-      .start()
-  }
 }

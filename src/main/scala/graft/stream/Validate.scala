@@ -3,13 +3,16 @@ package graft.stream
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sinks.Writers
+
 /** Per-record validation, reason accumulation, good/bad routing and
   * threshold alerting (ref: streaming/consumer.py:21-24,47-57,86-92).
   *
   * Pure `DataFrame => DataFrame` column logic — usable identically in
   * batch and Structured Streaming (SURVEY.md §7.1 stream/Validate). The
   * reference evaluates these rules row-at-a-time in Python; here they
-  * are Catalyst predicates inside whole-stage codegen.
+  * are Catalyst predicates inside whole-stage codegen. [[routeBatch]]
+  * is the one streaming body that lands the split.
   */
 final case class ValidationRule(reason: String, bad: Column)
 
@@ -57,4 +60,29 @@ object Validate {
 
   /** O-62: threshold alerting (ref: streaming/consumer.py:86-92). */
   def alerts(df: DataFrame, alertPred: Column): DataFrame = df.filter(alertPred)
+
+  /** O-61/O-62 as one exactly-once micro-batch body (ref:
+    * streaming/consumer.py:59-102 routes good→DynamoDB, bad→DLQ+S3,
+    * surges→SNS): persist the batch once, split it, land each side
+    * under `root/good` and `root/bad` through
+    * [[graft.sinks.Writers.idempotentBatchWrite]], and return the
+    * count of alerting good rows. A replayed batch id overwrites its
+    * own partitions, so a crash between the sink write and the
+    * checkpoint commit lands nothing twice. Alerts are counted, not
+    * stored: the reference publishes them, and the rows are in `good`.
+    */
+  def routeBatch(
+      batch: DataFrame,
+      batchId: Long,
+      root: String,
+      rules: Seq[ValidationRule],
+      alert: Column): Long = {
+    batch.persist()
+    try {
+      val (good, bad) = split(batch, rules)
+      Writers.idempotentBatchWrite(good, batchId, s"$root/good")
+      Writers.idempotentBatchWrite(bad, batchId, s"$root/bad")
+      alerts(good, alert).count()
+    } finally { batch.unpersist(); () }
+  }
 }

@@ -40,6 +40,17 @@ class ContractSpec extends SparkSpec {
       ls.zipWithIndex.collect { case (l, i) if l.contains(token) => s"$f:${i + 1}" }
     }
 
+  /** `file:line` of every line of `def name(` in `file`, up to the next
+    * top-level scaladoc or the object's closing brace.
+    */
+  private def body(file: String, name: String): Seq[String] = {
+    val ls = mainSources(file)
+    val start = ls.indexWhere(_.contains(s"def $name("))
+    assert(start >= 0, s"$name is gone from $file")
+    val end = ls.indexWhere(l => l.startsWith("  /**") || l == "}", start)
+    (start until end).map(i => s"$file:${i + 1}")
+  }
+
   test("kernel Columns bind expressions directly: no by-name function registry in main") {
     // a by-name kernel resolves only in the session it was registered
     // on — fresh newSession()s and foreachBatch clones miss it. The one
@@ -58,19 +69,25 @@ class ContractSpec extends SparkSpec {
     // pointer in Jobs.runVersionedPublish — a hand-copied loop is how a
     // runner loses its replay skip and rewrites published versions
     val jobs = "src/main/scala/graft/stream/Jobs.scala"
-    def body(name: String): Seq[String] = {
-      val ls = mainSources(jobs)
-      val start = ls.indexWhere(_.contains(s"def $name("))
-      assert(start >= 0, s"$name is gone from $jobs")
-      val end = ls.indexWhere(l => l.startsWith("  /**") || l == "}", start)
-      (start until end).map(i => s"$jobs:${i + 1}")
-    }
     def onlyIn(found: Seq[String], runner: String): Unit =
-      assert(found.size == 1 && body(runner).contains(found.head),
+      assert(found.size == 1 && body(jobs, runner).contains(found.head),
         s"expected only in $runner: $found")
     onlyIn(hits("Trigger.AvailableNow()"), "runAvailableNow")
     onlyIn(hits("var lastV ="), "runVersionedPublish")
     assert(hits("publishedVersion").isEmpty, "publishedVersion in main sources")
+  }
+
+  test("stream micro-batches land through one idempotent per-batch sink") {
+    // a batch replayed after a crash must overwrite its own output, not
+    // add to it: appends double on replay, and a hand-rolled per-batch
+    // path drifts from the layout compaction and readers expect
+    val appends = hits(".mode(\"append\")").filter(_.startsWith("src/main/scala/graft/stream/"))
+    assert(appends.isEmpty, s"append-mode writes in graft.stream: $appends")
+    val allowed = body("src/main/scala/graft/sinks/Writers.scala", "idempotentBatchWrite") ++
+      body("src/main/scala/graft/stream/Jobs.scala", "runIndexIngestStream")
+    val perBatch = Seq("batch=$batchId", "batch_id=$batchId").flatMap(hits)
+      .filterNot(allowed.contains)
+    assert(perBatch.isEmpty, s"per-batch paths outside idempotentBatchWrite: $perBatch")
   }
 
   test("entry() returns rows (driver smoke contract)") {

@@ -43,23 +43,57 @@ class StreamSpec extends SparkSpec {
       "Invalid or zero price | Market cap below threshold | Extreme price drop")
   }
 
-  test("foreachBatch routing stream writes good/bad/alert sinks") {
+  /** Two valid events (one a surge), one error event, one below threshold. */
+  private lazy val routedEvents = Seq(
+    (1L, Timestamp.valueOf("2024-01-01 10:00:00"), 7L, "view", 100.0, "{}"),
+    (2L, Timestamp.valueOf("2024-01-01 10:10:00"), 7L, "error", 10.0, "{}"),
+    (3L, Timestamp.valueOf("2024-01-01 10:20:00"), 8L, "click", 0.01, "{}"),
+    (4L, Timestamp.valueOf("2024-01-01 10:30:00"), 8L, "purchase", 470.0, "{}")
+  ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+
+  test("foreachBatch routing stream writes good/bad sinks and counts alerts") {
     val tmp = tempDir("graft-stream")
-    val events = Seq(
-      (1L, Timestamp.valueOf("2024-01-01 10:00:00"), 7L, "view", 100.0, "{}"),
-      (2L, Timestamp.valueOf("2024-01-01 10:10:00"), 7L, "error", 10.0, "{}"),
-      (3L, Timestamp.valueOf("2024-01-01 10:20:00"), 8L, "click", 0.01, "{}"),
-      (4L, Timestamp.valueOf("2024-01-01 10:30:00"), 8L, "purchase", 470.0, "{}")
-    ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    events.write.mode("overwrite").parquet(s"$tmp/in")
-    Jobs.runRoutingStream(spark, s"$tmp/in", s"$tmp/good", s"$tmp/bad",
-      s"$tmp/alert", s"$tmp/ckpt")
-    assert(spark.read.parquet(s"$tmp/good").select("event_id").as[Long].collect().toSet ==
-      Set(1L, 4L))
-    assert(spark.read.parquet(s"$tmp/bad").select("event_id").as[Long].collect().toSet ==
+    routedEvents.write.mode("overwrite").parquet(s"$tmp/in")
+    assert(Jobs.runRoutingStream(spark, s"$tmp/in", s"$tmp/out", s"$tmp/ckpt") == 1L)
+    val good = spark.read.parquet(s"$tmp/out/good")
+    assert(good.select("event_id").as[Long].collect().toSet == Set(1L, 4L))
+    assert(spark.read.parquet(s"$tmp/out/bad").select("event_id").as[Long].collect().toSet ==
       Set(2L, 3L))
-    assert(spark.read.parquet(s"$tmp/alert").select("event_id").as[Long].collect().toSet ==
+    assert(good.filter(Jobs.eventAlert).select("event_id").as[Long].collect().toSet ==
       Set(4L))
+  }
+
+  test("foreachBatch runners: a replayed batch leaves every sink unchanged") {
+    // a crash between the sink write and the offset commit: deleting
+    // batch 0's commit entry makes the rerun deliver batch 0 again
+    def replay(ckpt: String): Unit = Seq("0", ".0.crc").foreach(f =>
+      Files.deleteIfExists(java.nio.file.Paths.get(s"$ckpt/commits/$f")))
+    def rows(path: String): Seq[String] =
+      spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
+    val clips = {
+      val wav = graft.ext.Multimodal.Wav.encodePcm16(Array.tabulate(300)(_.toShort), 8000)
+      Seq((1L, wav, "audio/wav"), (2L, wav.take(21), "audio/wav"))
+        .toDF("media_id", "payload", "mime")
+    }
+    // (runner, input, sinks under out/, run → alert count if it has one)
+    val cases = Seq[(String, org.apache.spark.sql.DataFrame, Seq[String], String => Option[Long])](
+      ("routing", routedEvents, Seq("good", "bad"), tmp =>
+        Some(Jobs.runRoutingStream(spark, s"$tmp/in", s"$tmp/out", s"$tmp/ckpt"))),
+      ("media decode", clips, Seq("good", "dlq"), tmp => {
+        Jobs.runMediaDecodeStream(spark, s"$tmp/in", clips.schema,
+          s"$tmp/out/good", s"$tmp/out/dlq", s"$tmp/ckpt")
+        None
+      }))
+    cases.foreach { case (name, input, sinks, run) =>
+      val tmp = tempDir("graft-replay")
+      input.coalesce(1).write.parquet(s"$tmp/in")
+      assert(run(tmp).forall(_ == 1L), name)
+      val first = sinks.map(s => rows(s"$tmp/out/$s"))
+      assert(first.forall(_.nonEmpty), name)
+      replay(s"$tmp/ckpt")
+      assert(run(tmp).forall(_ == 1L), name)
+      assert(sinks.map(s => rows(s"$tmp/out/$s")) == first, s"$name: a sink changed on replay")
+    }
   }
 
   test("watermarked windowed stream emits closed windows, drops late data") {
@@ -277,20 +311,21 @@ class StreamSpec extends SparkSpec {
   test("idempotent sink stream: restart with the same checkpoint re-commits nothing") {
     val tmp = tempDir("graft-idemstream")
     val in = s"$tmp/in"; val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
+    def routed() = spark.read.parquet(s"$out/good").unionByName(spark.read.parquet(s"$out/bad"))
     graft.Tables.events(spark, "/root/testdata/sf0.001")
       .orderBy(col("event_id")).limit(200).write.parquet(in)
-    Jobs.runIdempotentSinkStream(spark, in, out, ckpt)
-    val first = spark.read.parquet(out).count()
+    Jobs.runRoutingStream(spark, in, out, ckpt)
+    val first = routed().count()
     assert(first == 200L)
     // restart: same checkpoint, no new input → nothing re-runs, nothing duplicates
-    Jobs.runIdempotentSinkStream(spark, in, out, ckpt)
-    assert(spark.read.parquet(out).count() == first)
+    assert(Jobs.runRoutingStream(spark, in, out, ckpt) == 0L)
+    assert(routed().count() == first)
     // incremental: new input arrives → ONLY the delta is processed
     graft.Tables.events(spark, "/root/testdata/sf0.001")
       .orderBy(col("event_id")).limit(300)
       .filter(col("event_id") >= 200).write.mode("append").parquet(in)
-    Jobs.runIdempotentSinkStream(spark, in, out, ckpt)
-    val after = spark.read.parquet(out)
+    Jobs.runRoutingStream(spark, in, out, ckpt)
+    val after = routed()
     assert(after.count() == first + 100)
     assert(after.select("event_id").distinct().count() == after.count())
   }
@@ -807,12 +842,12 @@ class StreamSpec extends SparkSpec {
     assert(streamed.size == 6 * 5)
 
     // a caught-up rerun re-serves nothing (checkpoint covers both
-    // batches): result partitions stay exactly batch=0 and batch=1
+    // batches): result partitions stay exactly batch_id=0 and batch_id=1
     graft.stream.Jobs.runQueryServeStream(spark, in, qdf.schema,
       idxDir, s"$tmp/out", k = 5, nprobe = 2)
     val parts = new java.io.File(s"$tmp/out/results").listFiles()
       .filter(_.isDirectory).map(_.getName).sorted.toSeq
-    assert(parts == Seq("batch=0", "batch=1"))
+    assert(parts == Seq("batch_id=0", "batch_id=1"))
     assert(spark.read.parquet(s"$tmp/out/results").count() == 30L)
   }
 
