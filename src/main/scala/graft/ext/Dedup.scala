@@ -20,9 +20,12 @@ final class CacheHandle(private[ext] val frames: Seq[DataFrame]) {
 /** Deduplication operators for training-data pipelines: exact
   * (fingerprint group-by), MinHash+LSH, SimHash, and n-gram Jaccard.
   *
-  * Hashing uses a portable md5-derived 60-bit integer so results are
-  * engine-independent (oracle-checkable in DuckDB) and stable across
-  * Spark versions — `hash()`/`xxhash64` seeds differ per engine.
+  * The `portableHash*` functions use a portable md5-derived 60-bit
+  * integer so results are engine-independent (oracle-checkable in
+  * DuckDB) and stable across Spark versions — `hash()`/`xxhash64`
+  * seeds differ per engine. LSH band keys are an engine-internal
+  * 64-bit mix instead: no oracle replays them, because the oracles
+  * check the verified pairs and clusters, not the buckets.
   *
   * Scale posture: every step is a distributed map or a keyed shuffle;
   * LSH banding turns the quadratic candidate problem into
@@ -64,14 +67,15 @@ object Dedup {
         .otherwise(array(concat_ws(" ", toks)))
   }
 
-  /** LSH band keys: signature split into `bands` rows of
-    * `numHashes/bands`, each band hashed to a bucket id. Documents
-    * sharing any (band, bucket) are candidates.
+  /** LSH band keys: signature split into `bands` runs of
+    * `rowsPerBand` longs, each band folded to a 64-bit bucket id by
+    * the codegen'd [[LongArrayBandHashes]] kernel (`array<long>`, one
+    * per band). Documents sharing any (band, bucket) are candidates;
+    * distinct band values share a bucket with P ≈ 2⁻⁶⁴, and every
+    * caller verifies candidates by exact Jaccard.
     */
   def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map(b =>
-      md5(concat_ws("_", transform(
-        slice(sig, b * rowsPerBand + 1, rowsPerBand), _.cast("string"))))): _*)
+    VectorKernels.bandHashes(sig, bands, rowsPerBand)
 
   /** Exact Jaccard similarity of two shingle-set columns. */
   def jaccard(a: Column, b: Column): Column =
@@ -170,10 +174,10 @@ object Dedup {
         col("chosen"))
   }
 
-  /** [[minhashNearDupPairs]] plus a [[CacheHandle]] over the two frames
-    * the operator persists internally (shingle hashes + band buckets),
-    * so a long-lived session can `handle.unpersist()` once the pair
-    * frame is consumed rather than leaving eviction to LRU.
+  /** [[minhashNearDupPairs]] plus a [[CacheHandle]] over the one frame
+    * the operator persists internally (each doc's shingle hashes and
+    * band keys), so a long-lived session can `handle.unpersist()` once
+    * the pair frame is consumed rather than leaving eviction to LRU.
     */
   def minhashNearDupPairsWithHandle(
       df: DataFrame,
@@ -185,42 +189,37 @@ object Dedup {
       threshold: Double = 0.5): (DataFrame, CacheHandle) = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val rowsPerBand = numHashes / bands
-    // persisted: consumed three times (signature computation + both
-    // sides of the verify join) — without the cache the tokenize +
-    // shingle construction re-runs per consumer
-    val shingled = df.select(
+    // persisted: consumed four times (both sides of the bucket
+    // self-join and both sides of the verify join) — without the
+    // cache the tokenize + shingle + signature work re-runs per
+    // consumer. Re-exploding the cached band keys per join side is
+    // cheaper than caching the exploded bucket rows too.
+    val fingerprints = df.select(
       col(idCol).as("doc_id"),
       VectorKernels.shingleHashes(Text.tokens(col(textCol)), shingleSize)
         .as("shingles"))
+      .withColumn("keys", lshBandKeys(
+        VectorKernels.minhashSigL(col("shingles"), numHashes), bands, rowsPerBand))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // band keys carry IDS ONLY through the bucket shuffle — shingle
     // arrays never ride the candidate join, and pair-dedup happens on
-    // bare (id_a, id_b) before any array is attached. The bucket frame
-    // is persisted: both self-join sides and nothing else consume it,
-    // so the signature (numHashes hash passes per doc) computes once.
-    val buckets = shingled
-      .withColumn("sig", VectorKernels.minhashSigL(col("shingles"), numHashes))
-      .select(col("doc_id"),
-        posexplode(lshBandKeys(col("sig"), bands, rowsPerBand))
-          .as(Seq("band", "bucket")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val candidates = buckets
-      .select(col("band"), col("bucket"), col("doc_id").as("id_a"))
-      .join(buckets.select(col("band"), col("bucket"), col("doc_id").as("id_b")),
-        Seq("band", "bucket"))
+    // bare (id_a, id_b) before any array is attached
+    def buckets(idAs: String): DataFrame = fingerprints.select(
+      col("doc_id").as(idAs), posexplode(col("keys")).as(Seq("band", "bucket")))
+    val candidates = buckets("id_a")
+      .join(buckets("id_b"), Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
 
     val pairs = candidates
-      .join(shingled.select(col("doc_id").as("id_a"), col("shingles").as("sh_a")), "id_a")
-      .join(shingled.select(col("doc_id").as("id_b"), col("shingles").as("sh_b")), "id_b")
+      .join(fingerprints.select(col("doc_id").as("id_a"), col("shingles").as("sh_a")), "id_a")
+      .join(fingerprints.select(col("doc_id").as("id_b"), col("shingles").as("sh_b")), "id_b")
       .withColumn("jaccard_sim", round(jaccard(col("sh_a"), col("sh_b")), 6))
       .filter(col("jaccard_sim") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard_sim"))
-    (pairs, new CacheHandle(Seq(shingled, buckets)))
+    (pairs, new CacheHandle(Seq(fingerprints)))
   }
 
   /** The 100 TB form of [[containmentPairs]]: shingles ride the

@@ -177,68 +177,16 @@ case class LongArraySimhash(child: Expression, bits: Int)
     copy(child = newChild)
 }
 
-/** MinHash signature of an `array<string>` shingle set in ONE pass:
-  * for each element, all `numHashes` splitmix64-seeded hashes update
-  * their running minima — the `transform`+`array_min` formulation walks
-  * the array once per hash family through interpreted lambdas.
-  */
-case class StringArrayMinhash(child: Expression, numHashes: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  require(numHashes > 0 && numHashes <= 512, "numHashes must be in 1..512")
-
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.StringType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_minhash_sig expects array<string>, got $t")
-  }
-
-  // hash family k = splitmix64 mix of one base string hash — one pass
-  // over the characters total, instead of one pass per family (16×
-  // fewer string walks for the default signature)
-  def compute(a: ArrayData): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val n = a.numElements()
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      if (!a.isNullAt(i)) {
-        val base = Kernels.hashChars(a.getUTF8String(i).toString, 0L)
-        var k = 0
-        while (k < numHashes) {
-          val h = Kernels.mix(base, k + 1L)
-          if (h < mins(k)) mins(k) = h
-          k += 1
-        }
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(mins)
-  }
-
-  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("minhashSig", this, classOf[StringArrayMinhash].getName)
-    defineCodeGen(ctx, ev, a => s"$ref.compute($a)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): StringArrayMinhash =
-    copy(child = newChild)
-}
-
 /** Distinct word n-gram shingle HASHES of a token array in ONE pass:
   * each shingle (n consecutive tokens joined by a space) is hashed
   * directly — the shingle string never materializes in the plan, and
   * dedup happens in a local hash set. Replaces the interpreted
   * `transform(sequence)+slice+concat_ws+array_distinct` chain, which
   * dominated MinHash runtime (HOFs are not codegen'd). Hash values
-  * equal `hash64(shingleString, 0)`, so [[LongArrayMinhash]] over the
-  * output is bit-identical to [[StringArrayMinhash]] over the string
-  * shingles. Texts shorter than n tokens yield one full-text shingle
-  * (same contract as `Dedup.wordShingles`).
+  * equal `hash64(shingleString, 0)`, the base hashes
+  * [[LongArrayMinhash]] mixes into a signature. Texts shorter than n
+  * tokens yield one full-text shingle (same contract as
+  * `Dedup.wordShingles`).
   */
 case class StringArrayShingleHashes(child: Expression, n: Int)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
@@ -448,8 +396,7 @@ case class StringArrayGramBuckets(child: Expression, n: Int, prefixLen: Int)
 
 /** MinHash signature over pre-hashed shingles (`array<long>`): hash
   * family k is a splitmix64 mix of the base hash — one array walk
-  * total. Produces the same signature as [[StringArrayMinhash]] when
-  * the input hashes are `hash64(shingle, 0)`.
+  * total.
   */
 case class LongArrayMinhash(child: Expression, numHashes: Int)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
@@ -490,6 +437,58 @@ case class LongArrayMinhash(child: Expression, numHashes: Int)
   }
 
   override protected def withNewChildInternal(newChild: Expression): LongArrayMinhash =
+    copy(child = newChild)
+}
+
+/** LSH band keys of a MinHash signature (`array<long>`) in ONE pass:
+  * band b's key is a splitmix64 fold of its `rowsPerBand` signature
+  * longs, seeded by b. Replaces the interpreted per-band
+  * `md5(concat_ws(transform(slice(...))))` chain. Banding needs only
+  * equality of band values, so a 64-bit key suffices: two different
+  * bands share a key with P ≈ 2⁻⁶⁴, and callers verify every
+  * candidate exactly. A band past the signature's end folds only the
+  * elements it has (the `slice` contract); a null element reads as 0.
+  */
+case class LongArrayBandHashes(child: Expression, bands: Int, rowsPerBand: Int)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  require(bands > 0 && rowsPerBand > 0, "bands and rowsPerBand must be positive")
+
+  override def dataType: DataType =
+    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(org.apache.spark.sql.types.LongType, _) =>
+      TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"graft_band_hashes expects array<long>, got $t")
+  }
+
+  def compute(a: ArrayData): org.apache.spark.sql.catalyst.util.GenericArrayData = {
+    val n = a.numElements()
+    val keys = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var h = b.toLong
+      var i = b * rowsPerBand
+      val end = math.min(i + rowsPerBand, n)
+      while (i < end) {
+        h = Kernels.mix(h ^ (if (a.isNullAt(i)) 0L else a.getLong(i)), 1L)
+        i += 1
+      }
+      keys(b) = h
+      b += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(keys)
+  }
+
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("bandHashes", this, classOf[LongArrayBandHashes].getName)
+    defineCodeGen(ctx, ev, a => s"$ref.compute($a)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): LongArrayBandHashes =
     copy(child = newChild)
 }
 
@@ -922,10 +921,6 @@ object VectorKernels {
   def simhashL(hashes: Column, bits: Int): Column =
     column(LongArraySimhash(expr(hashes), bits))
 
-  /** One-pass MinHash signature over an `array<string>` shingle set. */
-  def minhashSig(shingles: Column, numHashes: Int): Column =
-    column(StringArrayMinhash(expr(shingles), numHashes))
-
   /** Distinct n-gram shingle hashes of a token array (one pass, no
     * shingle-string materialization).
     */
@@ -941,6 +936,10 @@ object VectorKernels {
   /** One-pass MinHash signature over pre-hashed shingles (`array<long>`). */
   def minhashSigL(hashes: Column, numHashes: Int): Column =
     column(LongArrayMinhash(expr(hashes), numHashes))
+
+  /** One-pass LSH band keys of a MinHash signature: `bands` longs. */
+  def bandHashes(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    column(LongArrayBandHashes(expr(sig), bands, rowsPerBand))
 
   /** md5-prefix bucket of every word n-gram OCCURRENCE of a token
     * array (multiplicity kept) — the DSIR feature-hash kernel.

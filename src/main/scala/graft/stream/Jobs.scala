@@ -399,16 +399,16 @@ object Jobs {
     }
 
   /** Storage geometry of [[runNearDupDedupStream]]'s persisted band
-    * index: bucket ids are md5 hex strings, so the first two hex
-    * chars give a uniform 256-way partition prefix — (band, pb) has
+    * index: bucket ids are uniformly mixed 64-bit longs, so their top
+    * 8 bits give a uniform 256-way partition prefix — (band, pb) has
     * ≤ 16·256 = 4096 combos, which is what bounds the per-trigger
     * touched-bucket driver hop.
     */
   private[stream] val NearDupBandPrefixVals = 256
 
-  /** The partition-prefix of an md5-hex bucket id (0..255). */
+  /** The partition-prefix of a 64-bit bucket id: its top 8 bits (0..255). */
   private[stream] def nearDupBucketPrefix(bucket: Column): Column =
-    conv(substring(bucket, 1, 2), 16, 10).cast("int")
+    shiftrightunsigned(bucket, 56).cast("int")
 
   /** Pruned scan of a stored near-dup bands table: only `v <
     * beforeV` versions (replay safety — a re-run batch must not see
@@ -951,7 +951,7 @@ object Jobs {
     * `index/docs/v=<batchId>`, AND their exploded LSH posting rows
     * ([[graft.ext.Dedup.minhashBandRows]]) under
     * `index/bands/v=<batchId>/`, sorted by a `bp = band·256 +
-    * bucket-hex-prefix` data column. The next trigger's band join
+    * bucket-prefix` data column. The next trigger's band join
     * reads the BANDS table pruned to its own buckets: the batch's
     * distinct `bp` values are a bounded driver hop (≤ bands·256 =
     * 4096 rows by construction, independent of data), pushed as a

@@ -298,6 +298,15 @@ class PlanSpec extends SparkSpec {
       !pairs.contains("BroadcastNestedLoopJoin"), pairs)
   }
 
+  test("minhash LSH band keys come from the codegen'd kernel, not md5 lambda chains") {
+    val pairs = graft.ext.Dedup.minhashNearDupPairs(
+      Tables.documents(spark, dir), "doc_id", "text",
+      shingleSize = 3, numHashes = 16, bands = 8, threshold = 0.5)
+    val p = executedPlans { pairs.collect(); () }.map(_.toString).mkString("\n")
+    assert(p.contains("longarraybandhashes("), p)
+    assert(!p.contains("lambdafunction") && !p.contains("md5("), p)
+  }
+
   test("q101: semantic dedup's pairwise pass is label-keyed — no quadratic surface") {
     val p = plan("q101_semantic_dedup")
     assert(!p.contains("CartesianProduct"), p)

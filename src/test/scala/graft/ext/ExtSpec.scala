@@ -1,5 +1,6 @@
 package graft.ext
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -260,9 +261,47 @@ class ExtSpec extends SparkSpec {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(exact == Set((1L, 2L), (1L, 3L), (2L, 3L)))
     // LSH candidates are verified with the same exact jaccard → subset;
-    // at s ≥ 0.9 with 8 bands of 2 rows, recall ≈ 1 (and the md5-based
-    // hashes are deterministic, so this is stable)
+    // at s ≥ 0.9 with 8 bands of 2 rows, recall ≈ 1 (and the shingle,
+    // signature and band hashes are deterministic, so this is stable)
     assert(lsh == exact)
+  }
+
+  test("LSH band keys are 64-bit and meet exactly when the band values do") {
+    // a few hundred docs, a third of them one-word edits of another
+    val rnd = new scala.util.Random(7)
+    val originals = (1 to 300).map(i =>
+      (i.toLong, Seq.fill(40)(s"t${rnd.nextInt(500)}").mkString(" ")))
+    val copies = (1 to 100).map { i =>
+      val words = originals(i * 3 - 1)._2.split(" ")
+      words(rnd.nextInt(words.length)) = s"edit$i"
+      (1000L + i, words.mkString(" "))
+    }
+    val idx = Dedup.minhashIndexRows(
+      (originals ++ copies).toDF("doc_id", "text"), "doc_id", "text",
+      shingleSize = 3, numHashes = 64)
+    val (bands, rows) = (16, 4)
+    def candidates(keys: Column): Set[(Long, Long)] = {
+      val k = idx.select(col("id"), posexplode(keys).as(Seq("band", "key")))
+      k.toDF("id_a", "band", "key").join(k.toDF("id_b", "band", "key"), Seq("band", "key"))
+        .filter(col("id_a") < col("id_b"))
+        .select("id_a", "id_b").distinct().as[(Long, Long)].collect().toSet
+    }
+    val keys = Dedup.lshBandKeys(col("sig"), bands, rows)
+    assert(idx.select(keys).schema.head.dataType ==
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, false))
+    val exact = candidates(array((0 until bands).map(b =>
+      slice(col("sig"), b * rows + 1, rows)): _*))
+    assert(exact.size >= copies.size, exact.size) // the planted copies meet
+    assert(candidates(keys) == exact)
+  }
+
+  test("minhash LSH pairs: null-text rows pair with nothing") {
+    val text = (1 to 30).map(i => s"w$i").mkString(" ")
+    val docs = Seq[(Long, String)]((1L, text), (2L, text), (3L, null), (4L, null))
+      .toDF("doc_id", "text")
+    val pairs = Dedup.minhashNearDupPairs(docs, "doc_id", "text")
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(pairs == Set((1L, 2L)))
   }
 
   test("simhash: identical docs distance 0; blocked pairs match brute force") {

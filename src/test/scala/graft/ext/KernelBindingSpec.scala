@@ -38,10 +38,10 @@ class KernelBindingSpec extends SparkSpec {
     "VectorKernels.CosineF" -> perRow(VectorKernels.CosineF(col("a"), col("b"))),
     "VectorKernels.srpSig" -> perRow(VectorKernels.srpSig(col("a"), 8, 1)),
     "VectorKernels.simhashL" -> perRow(VectorKernels.simhashL(col("h"), 64)),
-    "VectorKernels.minhashSig" -> perRow(VectorKernels.minhashSig(col("syms"), 8)),
     "VectorKernels.shingleHashes" -> perRow(VectorKernels.shingleHashes(tokens, 2)),
     "VectorKernels.shingleStrings" -> perRow(VectorKernels.shingleStrings(tokens, 2)),
     "VectorKernels.minhashSigL" -> perRow(VectorKernels.minhashSigL(col("h"), 8)),
+    "VectorKernels.bandHashes" -> perRow(VectorKernels.bandHashes(col("h"), 2, 2)),
     "VectorKernels.gramBuckets" -> perRow(VectorKernels.gramBuckets(tokens, 2, 4)),
     "VectorKernels.negL2" -> perRow(VectorKernels.negL2(col("a"), col("b"))),
     "VectorKernels.pqEncodeCodes" -> perRow(VectorKernels.pqEncodeCodes(col("a"), codebooks)),
