@@ -2941,8 +2941,7 @@ object SparkEntry {
     val w = Seq(-2.4, 2.0, -3.0, 1.5, 2.5)
     val benchHashes = Tables.documents(spark, dir)
       .filter(col("doc_id") % 50 === 0)
-      .select(explode(graft.ext.VectorKernels.shingleHashes(
-        Text.tokens(col("text")), 5)).as("h"))
+      .select(explode(graft.ext.VectorKernels.textShingleHashes(col("text"), 5)).as("h"))
       .distinct().orderBy(col("h")).as[Long].collect().toSeq
     graft.stream.Jobs.runCurateStream(spark, in, w, benchHashes,
       shingleSize = 5, lateness = "40 days", stateShufflePartitions = Some(8))

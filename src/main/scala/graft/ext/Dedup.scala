@@ -3,18 +3,23 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Handle over DataFrames persisted INSIDE an operator: callers in
-  * long-lived sessions evict deterministically once the result is
-  * consumed, instead of waiting for executor-LRU to age the blocks
-  * out. Unpersisting before the result is fully consumed is safe
-  * (Spark recomputes), just slower.
+/** Handle over DataFrames (and row RDDs) persisted INSIDE an
+  * operator: callers in long-lived sessions evict deterministically
+  * once the result is consumed, instead of waiting for executor-LRU to
+  * age the blocks out. Unpersisting before the result is fully
+  * consumed is safe (Spark recomputes), just slower.
   */
-final class CacheHandle(private[ext] val frames: Seq[DataFrame]) {
-  def unpersist(blocking: Boolean = false): Unit =
+final class CacheHandle(
+    private[ext] val frames: Seq[DataFrame],
+    private[ext] val rdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil) {
+  def unpersist(blocking: Boolean = false): Unit = {
     frames.foreach(_.unpersist(blocking))
-  /** True while any held frame still has a storage level set. */
+    rdds.foreach(_.unpersist(blocking))
+  }
+  /** True while any held frame or RDD still has a storage level set. */
   def isCached: Boolean =
-    frames.exists(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    frames.exists(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE) ||
+      rdds.exists(_.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
 }
 
 /** Deduplication operators for training-data pipelines: exact
@@ -77,7 +82,9 @@ object Dedup {
   def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
     VectorKernels.bandHashes(sig, bands, rowsPerBand)
 
-  /** Exact Jaccard similarity of two shingle-set columns. */
+  /** Exact Jaccard similarity of two shingle-set columns, for string
+    * shingles; hashed shingles use [[VectorKernels.setJaccard]].
+    */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") /
       size(array_union(a, b)).cast("double")
@@ -99,13 +106,14 @@ object Dedup {
     * 3. candidate pairs (a < b), dedup'd;
     * 4. exact Jaccard on the pair's shingle-hash sets ≥ threshold.
     *
-    * Shingles live as 64-bit hashes end-to-end (codegen'd
-    * [[graft.ext.StringArrayShingleHashes]] kernel): the verify
-    * Jaccard runs on `array<long>` — identical to string Jaccard up
-    * to hash collisions (P ≈ shingles²/2⁶⁴ per doc, negligible), ~6×
-    * cheaper than the interpreted shingle-string chain, and the rows
-    * that ride the verify join shrink by the string payload. q12 keeps
-    * the string-exact oracle-checked form.
+    * Shingles live as 64-bit hashes end-to-end, hashed straight off
+    * the text's UTF-8 bytes by the codegen'd [[TextShingleHashes]]
+    * kernel, and the verify runs the [[LongArraySetJaccard]] kernel (a
+    * sort-merge of two primitive arrays) on `array<long>` — identical
+    * to string Jaccard up to hash collisions (P ≈ shingles²/2⁶⁴ per
+    * doc, negligible), and the rows that ride the verify join carry 8
+    * bytes per shingle instead of its string. q12 keeps the
+    * string-exact oracle-checked form.
     *
     * At 100 TB the only quadratic term is within-bucket; band/row
     * tuning bounds bucket sizes, and a length/prefix filter upstream
@@ -174,10 +182,11 @@ object Dedup {
         col("chosen"))
   }
 
-  /** [[minhashNearDupPairs]] plus a [[CacheHandle]] over the one frame
-    * the operator persists internally (each doc's shingle hashes and
-    * band keys), so a long-lived session can `handle.unpersist()` once
-    * the pair frame is consumed rather than leaving eviction to LRU.
+  /** [[minhashNearDupPairs]] plus a [[CacheHandle]] over the one RDD
+    * the operator persists internally (each doc's [[minhashIndexRows]]
+    * fingerprint: shingle hashes and signature), so a long-lived
+    * session can `handle.unpersist()` once the pair frame is consumed
+    * rather than leaving eviction to LRU.
     */
   def minhashNearDupPairsWithHandle(
       df: DataFrame,
@@ -188,43 +197,20 @@ object Dedup {
       bands: Int = 4,
       threshold: Double = 0.5): (DataFrame, CacheHandle) = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rowsPerBand = numHashes / bands
-    // persisted: consumed four times (both sides of the bucket
-    // self-join and both sides of the verify join) — without the
-    // cache the tokenize + shingle + signature work re-runs per
-    // consumer. Re-exploding the cached band keys per join side is
-    // cheaper than caching the exploded bucket rows too.
-    val fingerprints = df.select(
-      col(idCol).as("doc_id"),
-      VectorKernels.shingleHashes(Text.tokens(col(textCol)), shingleSize)
-        .as("shingles"))
-      .withColumn("keys", lshBandKeys(
-        VectorKernels.minhashSigL(col("shingles"), numHashes), bands, rowsPerBand))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // band keys carry IDS ONLY through the bucket shuffle — shingle
-    // arrays never ride the candidate join, and pair-dedup happens on
-    // bare (id_a, id_b) before any array is attached
-    def buckets(idAs: String): DataFrame = fingerprints.select(
-      col("doc_id").as(idAs), posexplode(col("keys")).as(Seq("band", "bucket")))
-    val candidates = buckets("id_a")
-      .join(buckets("id_b"), Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-
-    val pairs = candidates
-      .join(fingerprints.select(col("doc_id").as("id_a"), col("shingles").as("sh_a")), "id_a")
-      .join(fingerprints.select(col("doc_id").as("id_b"), col("shingles").as("sh_b")), "id_b")
-      .withColumn("jaccard_sim", round(jaccard(col("sh_a"), col("sh_b")), 6))
-      .filter(col("jaccard_sim") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard_sim"))
-    (pairs, new CacheHandle(Seq(fingerprints)))
+    // computed once, read by all four scans (both sides of the bucket
+    // self-join and both sides of the verify join): without it the
+    // shingle + signature work re-runs per consumer. Re-deriving the
+    // band keys per bucket side costs a few mixes per doc.
+    val (index, rows) = org.apache.spark.sql.PersistedRows(
+      minhashIndexRows(df, idCol, textCol, shingleSize, numHashes),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (minhashNearDupPairsFromIndex(index, bands, numHashes / bands, threshold),
+      new CacheHandle(Nil, Seq(rows)))
   }
 
   /** The 100 TB form of [[containmentPairs]]: shingles ride the
     * inverted-index self-join as 64-bit hashes from the codegen'd
-    * [[VectorKernels.shingleHashes]] kernel instead of strings — same
+    * [[VectorKernels.textShingleHashes]] kernel instead of strings — same
     * pairs up to hash collisions (P ≈ shingles²/2⁶⁴ per doc,
     * negligible; parity-tested), and the posting-list join keys shrink
     * from gram strings to 8 bytes. Use the string form when an exact
@@ -245,8 +231,7 @@ object Dedup {
       shingleSize: Int, minPct: Int): (DataFrame, CacheHandle) = {
     require(minPct > 0 && minPct <= 100, "minPct must be in (0, 100]")
     val sh = df.select(col(idCol).as("id"),
-      explode(VectorKernels.shingleHashes(
-        Text.tokens(col(textCol)), shingleSize)).as("s"))
+      explode(VectorKernels.textShingleHashes(col(textCol), shingleSize)).as("s"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("size_a"))
     val pairs = sh.toDF("id_a", "s")
@@ -328,8 +313,7 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 32): DataFrame =
     df.select(col(idCol).as("id"),
-      VectorKernels.shingleHashes(Text.tokens(col(textCol)), shingleSize)
-        .as("sh"))
+      VectorKernels.textShingleHashes(col(textCol), shingleSize).as("sh"))
       .withColumn("sig", VectorKernels.minhashSigL(col("sh"), numHashes))
 
   /** [[minhashNearDupAgainst]] against a PRECOMPUTED corpus index
@@ -369,7 +353,7 @@ object Dedup {
       .dropDuplicates("batch_id", "corpus_id")
       .join(shB.select(col("batch_id"), col("sh_b")), "batch_id")
       .join(shC.select(col("corpus_id"), col("sh_c")), "corpus_id")
-      .withColumn("jaccard_sim", round(jaccard(col("sh_b"), col("sh_c")), 6))
+      .withColumn("jaccard_sim", round(VectorKernels.setJaccard(col("sh_b"), col("sh_c")), 6))
       .filter(col("jaccard_sim") >= threshold)
       .select(col("batch_id"), col("corpus_id"), col("jaccard_sim"))
     (matches, new CacheHandle(Seq(shB)))
@@ -433,11 +417,11 @@ object Dedup {
       .dropDuplicates("batch_id", "corpus_id")
 
   /** Within-frame near-dup pairs over a PRECOMPUTED index frame
-    * ([[minhashIndexRows]] schema): the [[minhashNearDupPairs]]
-    * banded-candidates → exact-Jaccard-verify composition, minus the
-    * tokenize/shingle/minhash stages and their internal persists —
-    * for callers (the streaming dedup's in-batch pass) that already
-    * hold fingerprints for every row. Because every candidate is
+    * ([[minhashIndexRows]] schema): the banded-candidates →
+    * exact-Jaccard-verify composition, minus the shingle/minhash
+    * stages — [[minhashNearDupPairsWithHandle]] runs it over its
+    * persisted fingerprints, and the streaming dedup's in-batch pass
+    * over the fingerprints it already holds. Because every candidate is
     * verified by exact shingle-set Jaccard, the result equals the
     * text form's whenever the banding finds every true pair; MORE
     * bands/hashes can only raise candidate recall, never change a
@@ -455,7 +439,7 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
       .join(index.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(index.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("jaccard_sim", round(jaccard(col("sh_a"), col("sh_b")), 6))
+      .withColumn("jaccard_sim", round(VectorKernels.setJaccard(col("sh_a"), col("sh_b")), 6))
       .filter(col("jaccard_sim") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard_sim"))
   }
@@ -475,7 +459,7 @@ object Dedup {
         "batch_id")
       .join(corpusDocs.select(col("id").as("corpus_id"), col("sh").as("sh_c")),
         "corpus_id")
-      .withColumn("jaccard_sim", round(jaccard(col("sh_b"), col("sh_c")), 6))
+      .withColumn("jaccard_sim", round(VectorKernels.setJaccard(col("sh_b"), col("sh_c")), 6))
       .filter(col("jaccard_sim") >= threshold)
       .select(col("batch_id"), col("corpus_id"), col("jaccard_sim"))
 

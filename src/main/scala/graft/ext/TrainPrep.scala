@@ -229,7 +229,7 @@ object TrainPrep {
     * side streams through one map pass + the broadcast join, so the
     * cost is O(corpus shingles) with no shuffle of corpus text. At
     * 100 TB swap the shingle STRINGS for the codegen'd 64-bit shingle
-    * hashes ([[VectorKernels.shingleHashes]]) — same plan shape,
+    * hashes ([[VectorKernels.textShingleHashes]]) — same plan shape,
     * narrower rows; the string form is kept here for exact
     * cross-engine oracles.
     */
@@ -244,8 +244,8 @@ object TrainPrep {
 
   /** The 100 TB form of [[contaminatedDocs]]: shingles ride the
     * broadcast join as 64-bit hashes from the codegen'd
-    * [[VectorKernels.shingleHashes]] kernel instead of strings — one
-    * char-walk per shingle, ~8-byte join keys, identical answers up
+    * [[VectorKernels.textShingleHashes]] kernel instead of strings —
+    * one byte-walk per shingle, ~8-byte join keys, identical answers up
     * to hash collisions (P ≈ shingles²/2⁶⁴ per doc, negligible;
     * parity-tested). Use the string form when an exact cross-engine
     * oracle is needed, this one when the corpus is large.
@@ -257,7 +257,7 @@ object TrainPrep {
       textCol: String,
       n: Int): DataFrame =
     contaminatedBy(corpus, benchmark, idCol,
-      explode(VectorKernels.shingleHashes(Text.tokens(col(textCol)), n)))
+      explode(VectorKernels.textShingleHashes(col(textCol), n)))
 
   /** Bloom-filter decontamination — the sub-linear form of
     * [[contaminatedDocs]] for when the benchmark set is too large to
@@ -311,7 +311,7 @@ object TrainPrep {
     require(expectedItems > 0 && numBits > 0, "bloom sizing must be positive")
     def shingled(df: DataFrame, idAs: String): DataFrame =
       df.select(col(idCol).as(idAs),
-        explode(VectorKernels.shingleHashes(Text.tokens(col(textCol)), n)).as("sh"))
+        explode(VectorKernels.textShingleHashes(col(textCol), n)).as("sh"))
     val bfBytes = shingled(benchmark, "bench_id")
       .select(col("sh")).distinct()
       .agg(KernelColumns.aggregate(new BloomFilterAggregate(

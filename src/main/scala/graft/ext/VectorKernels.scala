@@ -3,10 +3,12 @@ package graft.ext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.KernelColumns.{column, expr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd cosine similarity over two `array<float>` columns in ONE
   * pass (dot + both norms in the same loop), with `doGenCode` so it
@@ -177,16 +179,16 @@ case class LongArraySimhash(child: Expression, bits: Int)
     copy(child = newChild)
 }
 
-/** Distinct word n-gram shingle HASHES of a token array in ONE pass:
-  * each shingle (n consecutive tokens joined by a space) is hashed
-  * directly — the shingle string never materializes in the plan, and
-  * dedup happens in a local hash set. Replaces the interpreted
-  * `transform(sequence)+slice+concat_ws+array_distinct` chain, which
-  * dominated MinHash runtime (HOFs are not codegen'd). Hash values
-  * equal `hash64(shingleString, 0)`, the base hashes
-  * [[LongArrayMinhash]] mixes into a signature. Texts shorter than n
-  * tokens yield one full-text shingle (same contract as
-  * `Dedup.wordShingles`).
+/** Distinct word n-gram shingle hashes of a token array in ONE pass,
+  * through the [[ShingleHasher]] the text kernel
+  * [[TextShingleHashes]] shares: each shingle (n consecutive tokens
+  * joined by a space) is hashed directly — the shingle string never
+  * materializes, and dedup happens in a primitive long set. These are
+  * the base hashes [[LongArrayMinhash]] mixes into a signature. Texts
+  * shorter than n tokens yield one full-text shingle (same contract as
+  * `Dedup.wordShingles`); a null token reads as empty. For callers
+  * that already hold the token array (the novelty grams size-check
+  * it); text alone goes through [[TextShingleHashes]].
   */
 case class StringArrayShingleHashes(child: Expression, n: Int)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
@@ -202,29 +204,18 @@ case class StringArrayShingleHashes(child: Expression, n: Int)
       s"graft_shingle_hashes expects array<string>, got $t")
   }
 
-  def compute(a: ArrayData): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val ntok = a.numElements()
-    val count = if (ntok == 0) 0 else math.max(ntok - n + 1, 1)
-    val seen = new java.util.HashSet[java.lang.Long](count * 2)
-    val out = new Array[Long](count)
-    var len = 0
-    val sb = new java.lang.StringBuilder
+  def compute(a: ArrayData): ArrayData = {
+    val sh = new ShingleHasher
     var i = 0
-    while (i < count) {
-      sb.setLength(0)
-      val m = math.min(n, ntok - i)
-      var j = 0
-      while (j < m) {
-        if (j > 0) sb.append(' ')
-        if (!a.isNullAt(i + j)) sb.append(a.getUTF8String(i + j).toString)
-        j += 1
+    while (i < a.numElements()) {
+      if (a.isNullAt(i)) sh.add(null, 0L, 0)
+      else {
+        val t = a.getUTF8String(i)
+        sh.add(t.getBaseObject, t.getBaseOffset, t.numBytes)
       }
-      val h = Kernels.hashChars(sb, 0L)
-      if (seen.add(h)) { out(len) = h; len += 1 }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      java.util.Arrays.copyOf(out, len))
+    UnsafeArrayData.fromPrimitiveArray(sh.hashes(n))
   }
 
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
@@ -237,6 +228,67 @@ case class StringArrayShingleHashes(child: Expression, n: Int)
 
   override protected def withNewChildInternal(
       newChild: Expression): StringArrayShingleHashes = copy(child = newChild)
+}
+
+/** Distinct word n-gram shingle hashes straight off a string's UTF-8
+  * bytes: exactly `StringArrayShingleHashes(split(trim(text), "\\s+"),
+  * n)` — the same values in the same first-occurrence order, null for
+  * null — with no token array, no per-token `String` and no shingle
+  * string. The tokenizer reproduces the chain it replaces byte for
+  * byte: Spark's `trim` strips U+0020 only, and Java's
+  * `split("\\s+", -1)` cuts at runs of ASCII `[ \t\n\x0B\f\r]`, so a
+  * leading non-space whitespace gives a leading `""` token and a
+  * trailing one a trailing `""`. Those bytes never occur inside a
+  * multi-byte UTF-8 sequence, nor does a decoder swallow them into a
+  * malformed one, so decoding each non-ASCII token on its own gives
+  * the chars the whole-string decode gives it.
+  */
+case class TextShingleHashes(child: Expression, n: Int)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  require(n >= 1, "shingle size must be >= 1")
+
+  override def dataType: DataType =
+    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"graft_text_shingle_hashes expects string, got $t")
+  }
+
+  def compute(text: UTF8String): ArrayData = {
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    def byteAt(i: Int): Byte = Platform.getByte(base, off + i)
+    def isSpace(b: Byte): Boolean = b == ' ' || (b >= '\t' && b <= '\r')
+    var start = 0
+    var end = text.numBytes
+    while (start < end && byteAt(start) == ' ') start += 1
+    while (end > start && byteAt(end - 1) == ' ') end -= 1
+    val sh = new ShingleHasher
+    var p = start
+    while (p < end) {
+      if (isSpace(byteAt(p))) {
+        sh.add(base, off + start, p - start)
+        p += 1
+        while (p < end && isSpace(byteAt(p))) p += 1
+        start = p
+      } else p += 1
+    }
+    sh.add(base, off + start, end - start)
+    UnsafeArrayData.fromPrimitiveArray(sh.hashes(n))
+  }
+
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("textShingleHashes", this,
+      classOf[TextShingleHashes].getName)
+    defineCodeGen(ctx, ev, a => s"$ref.compute($a)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): TextShingleHashes =
+    copy(child = newChild)
 }
 
 /** Distinct word n-gram shingle STRINGS of a token array in ONE
@@ -490,6 +542,89 @@ case class LongArrayBandHashes(child: Expression, bands: Int, rowsPerBand: Int)
 
   override protected def withNewChildInternal(newChild: Expression): LongArrayBandHashes =
     copy(child = newChild)
+}
+
+/** Exact Jaccard |A∩B| / |A∪B| over the DISTINCT elements of two
+  * `array<long>` columns, by copy, sort and merge — the verify step of
+  * the hashed-shingle dedups, replacing
+  * `size(array_intersect(a, b)) / size(array_union(a, b))` and the two
+  * `OpenHashSet`s those build per pair. A null element counts as one
+  * value, as `array_intersect` counts it (index frames read back from
+  * parquet have `containsNull = true`). Two empty arrays give null
+  * where the interpreted form divides by zero; no caller can produce
+  * them, since every text yields at least one shingle.
+  */
+case class LongArraySetJaccard(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true // both empty → null
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(org.apache.spark.sql.types.LongType, _),
+            ArrayType(org.apache.spark.sql.types.LongType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"graft_set_jaccard expects (array<long>, array<long>), got ($l, $r)")
+    }
+
+  /** The non-null elements of `a`, sorted ascending. */
+  private def sortedNonNull(a: ArrayData): Array[Long] = {
+    val n = a.numElements()
+    val out = new Array[Long](n)
+    var len = 0
+    var i = 0
+    while (i < n) {
+      if (!a.isNullAt(i)) { out(len) = a.getLong(i); len += 1 }
+      i += 1
+    }
+    val s = if (len == n) out else java.util.Arrays.copyOf(out, len)
+    java.util.Arrays.sort(s)
+    s
+  }
+
+  def compute(a: ArrayData, b: ArrayData): Any = {
+    val x = sortedNonNull(a)
+    val y = sortedNonNull(b)
+    var inter = 0
+    var union = 0
+    var i = 0
+    var j = 0
+    while (i < x.length || j < y.length) {
+      val fromX = j == y.length || (i < x.length && x(i) <= y(j))
+      val fromY = i == x.length || (j < y.length && y(j) <= x(i))
+      val v = if (fromX) x(i) else y(j)
+      if (fromX && fromY) inter += 1
+      union += 1
+      if (fromX) while (i < x.length && x(i) == v) i += 1
+      if (fromY) while (j < y.length && y(j) == v) j += 1
+    }
+    val nullA = x.length < a.numElements()
+    val nullB = y.length < b.numElements()
+    if (nullA && nullB) inter += 1
+    if (nullA || nullB) union += 1
+    if (union == 0) null else java.lang.Double.valueOf(inter.toDouble / union.toDouble)
+  }
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("setJaccard", this, classOf[LongArraySetJaccard].getName)
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val tmp = ctx.freshName("res")
+      s"""
+        Object $tmp = $ref.compute($a, $b);
+        if ($tmp == null) { ${ev.isNull} = true; }
+        else { ${ev.value} = ((java.lang.Double) $tmp).doubleValue(); }
+      """
+    })
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): LongArraySetJaccard =
+    copy(left = newLeft, right = newRight)
 }
 
 /** Codegen'd negated squared L2 between two numeric vectors in ONE
@@ -865,17 +1000,117 @@ private[ext] object Kernels {
     z ^ (z >>> 31)
   }
 
-  def hashChars(s: CharSequence, seed: Long): Long = {
-    var h = seed ^ 0x9E3779B97F4A7C15L
+  /** The state a string hash starts from: the hash of "". */
+  val hashInit: Long = 0x9E3779B97F4A7C15L
+
+  /** One UTF-16 char folded into a string hash state. */
+  def hashStep(h: Long, c: Char): Long = {
+    var z = h ^ c.toLong
+    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+    z ^ (z >>> 31)
+  }
+
+  /** The distinct values of `xs` in first-occurrence order (`xs` itself
+    * when there are no repeats), through an open-addressing long set.
+    */
+  def distinct(xs: Array[Long]): Array[Long] = {
+    val n = xs.length
+    if (n < 2) return xs
+    val bits = 65 - java.lang.Long.numberOfLeadingZeros(n.toLong) // 2^bits >= 2n
+    val mask = (1 << bits) - 1
+    val slots = new Array[Long](1 << bits)
+    val used = new Array[Boolean](1 << bits)
+    var len = 0
     var i = 0
-    while (i < s.length) {
-      var z = h ^ s.charAt(i).toLong
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      h = z ^ (z >>> 31)
+    while (i < n) {
+      val v = xs(i)
+      var s = ((v * 0x9E3779B97F4A7C15L) >>> (64 - bits)).toInt
+      while (used(s) && slots(s) != v) s = (s + 1) & mask
+      if (!used(s)) {
+        used(s) = true
+        slots(s) = v
+        xs(len) = v
+        len += 1
+      }
       i += 1
     }
+    if (len == n) xs else java.util.Arrays.copyOf(xs, len)
+  }
+}
+
+/** Word n-gram shingle hashes over UTF-8 token spans — the core both
+  * shingle-hash kernels share. Shingle i's hash folds
+  * [[Kernels.hashStep]] from [[Kernels.hashInit]] over the chars of
+  * tokens i..i+n-1 joined by one space, without building that string:
+  * an all-ASCII token's bytes are its chars, and any other
+  * token is decoded once, with `UTF8String.toString`'s handling of
+  * malformed bytes. One instance serves one row.
+  */
+private[ext] final class ShingleHasher {
+  private var ntok = 0
+  private var bases = new Array[AnyRef](16)
+  private var offsets = new Array[Long](16)
+  private var lengths = new Array[Int](16)
+  private var decoded = new Array[String](16) // null for an ASCII token
+
+  /** Appends the token held in `len` bytes at `base` + `off`. */
+  def add(base: AnyRef, off: Long, len: Int): Unit = {
+    if (ntok == offsets.length) {
+      val cap = ntok * 2
+      bases = java.util.Arrays.copyOf(bases, cap)
+      offsets = java.util.Arrays.copyOf(offsets, cap)
+      lengths = java.util.Arrays.copyOf(lengths, cap)
+      decoded = java.util.Arrays.copyOf(decoded, cap)
+    }
+    bases(ntok) = base
+    offsets(ntok) = off
+    lengths(ntok) = len
+    var i = 0
+    while (i < len && Platform.getByte(base, off + i) >= 0) i += 1
+    decoded(ntok) = if (i == len) null else UTF8String.fromAddress(base, off, len).toString
+    ntok += 1
+  }
+
+  private def fold(h0: Long, t: Int): Long = {
+    var h = h0
+    val s = decoded(t)
+    var i = 0
+    if (s == null) {
+      val base = bases(t)
+      val off = offsets(t)
+      while (i < lengths(t)) {
+        h = Kernels.hashStep(h, Platform.getByte(base, off + i).toChar)
+        i += 1
+      }
+    } else {
+      while (i < s.length) {
+        h = Kernels.hashStep(h, s.charAt(i))
+        i += 1
+      }
+    }
     h
+  }
+
+  /** Distinct shingle hashes, first occurrence first. Fewer than n
+    * tokens give one shingle of them all; no tokens give none.
+    */
+  def hashes(n: Int): Array[Long] = {
+    val count = if (ntok == 0) 0 else math.max(ntok - n + 1, 1)
+    val out = new Array[Long](count)
+    var i = 0
+    while (i < count) {
+      val end = math.min(i + n, ntok)
+      var h = fold(Kernels.hashInit, i)
+      var t = i + 1
+      while (t < end) {
+        h = fold(Kernels.hashStep(h, ' '), t)
+        t += 1
+      }
+      out(i) = h
+      i += 1
+    }
+    Kernels.distinct(out)
   }
 }
 
@@ -926,6 +1161,18 @@ object VectorKernels {
     */
   def shingleHashes(tokens: Column, n: Int): Column =
     column(StringArrayShingleHashes(expr(tokens), n))
+
+  /** [[shingleHashes]] of the text's [[Text.tokens]], hashed straight
+    * off its UTF-8 bytes: no token array, no per-token strings.
+    */
+  def textShingleHashes(text: Column, n: Int): Column =
+    column(TextShingleHashes(expr(text), n))
+
+  /** Exact Jaccard of the distinct elements of two `array<long>`
+    * columns (null when both are empty).
+    */
+  def setJaccard(a: Column, b: Column): Column =
+    column(LongArraySetJaccard(expr(a), expr(b)))
 
   /** Distinct n-gram shingle STRINGS of a token array (one pass;
     * strict contract — fewer than n tokens yields an empty array).

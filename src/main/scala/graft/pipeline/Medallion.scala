@@ -121,8 +121,11 @@ object Medallion {
         s.select("coin_id", "symbol", "name"),
         Seq("coin_id"))
       Writers.parquetOverwrite(dimCoins, s"$outDir/dim_coins")
+      // one partition per date: a run replaces only its own dates, so
+      // earlier days keep their rows (the reference's union + distinct
+      // at O(day) instead of O(history)), and a rerun is idempotent
       dimDate = Star.dimDate(fact, "date")
-      Writers.parquetOverwrite(dimDate, s"$outDir/dim_date")
+      Writers.parquetDynamicOverwrite(dimDate, s"$outDir/dim_date", "date")
       fact
     }
 

@@ -543,8 +543,7 @@ object Jobs {
       val curated = stream
         .filter(graft.ext.Text.qualityLogit(col("text"), weights) >= 0)
         .filter(!arrays_overlap(
-          graft.ext.VectorKernels.shingleHashes(
-            graft.ext.Text.tokens(col("text")), shingleSize),
+          graft.ext.VectorKernels.textShingleHashes(col("text"), shingleSize),
           typedlit(benchShingleHashes)))
         .withColumn("fingerprint", graft.ext.Text.fingerprint(col("text")))
         .withWatermark("ts", lateness)

@@ -90,6 +90,19 @@ class ContractSpec extends SparkSpec {
     assert(perBatch.isEmpty, s"per-batch paths outside idempotentBatchWrite: $perBatch")
   }
 
+  test("shingle hashes of text come off the UTF-8 bytes, not a token array") {
+    // shingleHashes(Text.tokens(c), n) allocates a String per token and
+    // a token array per row; VectorKernels.textShingleHashes(c, n)
+    // returns the same hashes without either
+    val composed = mainSources.toSeq.sortBy(_._1).flatMap { case (f, ls) =>
+      ls.indices.collect {
+        case i if ls(i).contains("shingleHashes(") &&
+          ls.slice(i, i + 2).mkString(" ").contains("tokens(") => s"$f:${i + 1}"
+      }
+    }
+    assert(composed.isEmpty, s"shingleHashes over Text.tokens in main sources: $composed")
+  }
+
   test("entry() returns rows (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

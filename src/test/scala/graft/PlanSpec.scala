@@ -307,6 +307,24 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("lambdafunction") && !p.contains("md5("), p)
   }
 
+  test("minhash pairs: text kernel shingles, set-Jaccard verify, fingerprints read once from RDD blocks") {
+    val docs = Tables.documents(spark, dir)
+    val pairs = graft.ext.Dedup.minhashNearDupPairs(
+      docs, "doc_id", "text", shingleSize = 3, numHashes = 16, bands = 8, threshold = 0.5)
+    val p = executedPlans { pairs.collect(); () }.map(_.toString).mkString("\n")
+    assert(p.contains("longarraysetjaccard(") && p.contains("Scan ExistingRDD"), p)
+    // the persisted rows are minhashIndexRows' fingerprints: the
+    // shingles come off the text bytes, with no split( token array
+    val fp = executedPlans {
+      graft.ext.Dedup.minhashIndexRows(docs, "doc_id", "text", 3, 16).collect(); ()
+    }.map(_.toString).mkString("\n")
+    assert(fp.contains("textshinglehashes("), fp)
+    Seq("array_intersect(", "array_union(", "split(", "InMemoryRelation",
+      "TableCacheQueryStage").foreach { t =>
+      assert(!p.contains(t) && !fp.contains(t), s"$t in\n$p\n$fp")
+    }
+  }
+
   test("q101: semantic dedup's pairwise pass is label-keyed — no quadratic surface") {
     val p = plan("q101_semantic_dedup")
     assert(!p.contains("CartesianProduct"), p)

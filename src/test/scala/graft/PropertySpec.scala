@@ -658,4 +658,82 @@ class PropertySpec extends SparkSpec {
       assert(kernel == hof, s"n=$n prefixLen=$p")
     }
   }
+
+  test("text shingle-hash kernel ≡ shingleHashes(Text.tokens(·)), every whitespace and byte shape") {
+    import graft.ext.{Text, VectorKernels}
+    def utf8(s: String): Array[Byte] = s.getBytes("UTF-8")
+    val shaped: Seq[Array[Byte]] = Seq(
+      "", " ", "   ", "a", "  lead and trail  ", "\nleading newline", "\tleading tab",
+      " \n after a space", "mixed \t\n  runs\u000b\fof\r white", "trailing crlf\r\n",
+      "tab\t", "\n", "\t \n", "one two", "a b a b a b a b", "the cat the cat the cat",
+      "Crème brûlée à la carte", "日本語 の テキスト 日本語 の テキスト",
+      "emoji \ud83d\ude00 pair \ud83d\ude00 pair", "naïve\tcafé\nrésumé ",
+      "\u00a0nbsp\u00a0is not a separator \u2003em").map(utf8) ++ Seq(
+      Array[Byte](0xff.toByte, ' ', 'a'), // invalid lead byte
+      Array[Byte]('a', ' ', 0xe2.toByte, 0x82.toByte, ' ', 'b'), // truncated 3-byte
+      Array[Byte]('x', 0xe2.toByte, 0x82.toByte), // truncated at the end
+      Array[Byte](0xf0.toByte, 0x9f.toByte, 0x98.toByte, '\n', 'z'), // truncated 4-byte
+      Array[Byte](0x80.toByte, 0x80.toByte, ' ', 0xc3.toByte), // lone continuations
+      Array[Byte](0xed.toByte, 0xa0.toByte, 0x80.toByte, ' ', 'q'), // encoded surrogate
+      Array[Byte](0xc0.toByte, 0xaf.toByte, '\t', 0xf4.toByte, 0x90.toByte, 0x80.toByte, 0x80.toByte))
+    // random byte strings over separators, ASCII, valid multi-byte
+    // pieces and stray lead/continuation bytes
+    val alphabet = Seq[Byte](' ', ' ', '\t', '\n', '\r', 0x0b, 0x0c, 'a', 'b', 'c',
+      0xc3.toByte, 0xa9.toByte, 0xe2.toByte, 0x82.toByte, 0xac.toByte, 0xf0.toByte,
+      0x9f.toByte, 0x98.toByte, 0x80.toByte, 0xff.toByte, 0xed.toByte, 0xa0.toByte)
+    val random = (1 to 150).map(i => Gen.choose(0, 24).flatMap(len =>
+      Gen.listOfN(len, Gen.oneOf(alphabet))).pureApply(Gen.Parameters.default, Seed(31L + i)).toArray)
+    val rows = (shaped ++ random).map(b => Some(b)) :+ None
+    val df = rows.map(Tuple1(_)).toDF("b").select(col("b").cast("string").as("t"))
+    // the malformed bytes reach the kernels as they are
+    assert(df.select(col("t").cast("binary")).as[Option[Array[Byte]]].collect()
+      .map(_.map(_.toSeq)).toSeq == rows.map(_.map(_.toSeq)))
+    for (n <- Seq(1, 2, 3, 5)) {
+      val got = df.select(
+        VectorKernels.textShingleHashes(col("t"), n).as("k"),
+        VectorKernels.shingleHashes(Text.tokens(col("t")), n).as("c"))
+        .as[(Option[Seq[Long]], Option[Seq[Long]])].collect().toSeq
+      assert(got.last == ((None, None)), s"n=$n: null text")
+      got.zip(rows).foreach { case ((k, c), b) =>
+        assert(k == c, s"n=$n, bytes ${b.map(_.map(x => f"$x%02x").mkString(" "))}")
+      }
+    }
+  }
+
+  test("set-Jaccard kernel ≡ size(array_intersect) / size(array_union); both empty → null") {
+    import graft.ext.VectorKernels
+    val cases: Seq[(Seq[java.lang.Long], Seq[java.lang.Long])] = Seq(
+      (Seq(1L, 2L, 3L), Seq(2L, 3L, 4L)),
+      (Seq(1L, 1L, 2L, 2L), Seq(2L, 2L, 5L)), // duplicates count once
+      (Seq(1L, null, 2L), Seq(null, 2L)), // null on both sides: one shared value
+      (Seq(1L, null, null), Seq(1L)), // null on one side: in the union only
+      (Seq(1L, 2L), Seq(3L, 4L)), // disjoint
+      (Seq(7L, -7L, Long.MinValue, Long.MaxValue), Seq(Long.MaxValue, 7L, -7L, Long.MinValue)),
+      (Seq(5L, 6L), Seq()), // one empty
+      (Seq(), Seq(null)),
+      (Seq(-1L, 0L, 1L), Seq(0L)))
+    val random = (1 to 60).map { i =>
+      val side = Gen.choose(0, 12).flatMap(len => Gen.listOfN(len,
+        Gen.frequency(1 -> Gen.const(null: java.lang.Long),
+          8 -> Gen.choose(-6L, 6L).map(x => x: java.lang.Long))))
+      (side.pureApply(Gen.Parameters.default, Seed(101L + i)),
+        side.pureApply(Gen.Parameters.default, Seed(701L + i)))
+    }.filter { case (a, b) => a.nonEmpty || b.nonEmpty }
+    val df = (cases ++ random).map { case (a, b) => (a.map(Option(_).map(_.longValue)),
+      b.map(Option(_).map(_.longValue))) }.toDF("a", "b")
+    val got = df.select(
+      VectorKernels.setJaccard(col("a"), col("b")),
+      size(array_intersect(col("a"), col("b"))).cast("double") /
+        size(array_union(col("a"), col("b"))).cast("double"))
+      .as[(Double, Double)].collect().toSeq
+    got.zipWithIndex.foreach { case ((k, c), i) => assert(k == c, s"case $i") }
+    // two empty arrays: the interpreted form divides by zero, the kernel is null
+    val empty = Seq((Seq.empty[Long], Seq.empty[Long])).toDF("a", "b")
+    assert(empty.select(VectorKernels.setJaccard(col("a"), col("b"))).head().isNullAt(0))
+    val e = intercept[Exception] {
+      empty.select(size(array_intersect(col("a"), col("b"))).cast("double") /
+        size(array_union(col("a"), col("b"))).cast("double")).collect()
+    }
+    assert(e.getMessage.contains("DIVIDE_BY_ZERO"), e.getMessage)
+  }
 }

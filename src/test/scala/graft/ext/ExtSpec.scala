@@ -769,6 +769,26 @@ class ExtSpec extends SparkSpec {
     assert(th.isCached); th.unpersist(blocking = true); assert(!th.isCached)
   }
 
+  test("minhash cache handle: unpersist drops the fingerprint RDD; a 20-op loop leaks none") {
+    val docs = (1 to 50).map(i =>
+      (i.toLong, s"some shared words plus unique token$i here")).toDF("doc_id", "text")
+    def op() = Dedup.minhashNearDupPairsWithHandle(
+      docs, "doc_id", "text", shingleSize = 1, numHashes = 16, bands = 8, threshold = 0.3)
+    val persistent = () => spark.sparkContext.getPersistentRDDs.keySet
+    val (pairs, handle) = op()
+    pairs.count()
+    assert(handle.rdds.nonEmpty && handle.rdds.forall(r => persistent().contains(r.id)))
+    handle.unpersist(blocking = true)
+    assert(handle.rdds.forall(r => !persistent().contains(r.id)))
+    val before = persistent()
+    val counts = (1 to 20).map { _ =>
+      val (p, h) = op()
+      try p.count() finally h.unpersist()
+    }
+    assert(counts.distinct == Seq(pairs.count()))
+    assert(persistent().subsetOf(before), persistent() -- before)
+  }
+
   // ------------------------------------------------------ multimodal
 
   test("multimodal: frame sampling slices binary in-plan") {

@@ -1,7 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, typedlit}
 
 import graft.SparkSpec
 
@@ -39,9 +39,13 @@ class KernelBindingSpec extends SparkSpec {
     "VectorKernels.srpSig" -> perRow(VectorKernels.srpSig(col("a"), 8, 1)),
     "VectorKernels.simhashL" -> perRow(VectorKernels.simhashL(col("h"), 64)),
     "VectorKernels.shingleHashes" -> perRow(VectorKernels.shingleHashes(tokens, 2)),
+    "VectorKernels.textShingleHashes" ->
+      perRow(VectorKernels.textShingleHashes(col("text"), 2)),
     "VectorKernels.shingleStrings" -> perRow(VectorKernels.shingleStrings(tokens, 2)),
     "VectorKernels.minhashSigL" -> perRow(VectorKernels.minhashSigL(col("h"), 8)),
     "VectorKernels.bandHashes" -> perRow(VectorKernels.bandHashes(col("h"), 2, 2)),
+    "VectorKernels.setJaccard" ->
+      perRow(VectorKernels.setJaccard(col("h"), typedlit(Seq(5L, 9L)))),
     "VectorKernels.gramBuckets" -> perRow(VectorKernels.gramBuckets(tokens, 2, 4)),
     "VectorKernels.negL2" -> perRow(VectorKernels.negL2(col("a"), col("b"))),
     "VectorKernels.pqEncodeCodes" -> perRow(VectorKernels.pqEncodeCodes(col("a"), codebooks)),

@@ -57,6 +57,21 @@ class MedallionSpec extends SparkSpec {
       .select("status").as[String].head() == "SUCCEEDED")
   }
 
+  test("two daily runs: every fact row joins dim_date, each date held once") {
+    val out = tempDir("graft-two-days")
+    for (day <- Seq("2024-03-05", "2024-03-06")) {
+      val res = Medallion.run(spark, Readers.jsonStrings(spark, bronzeJson(60)), out,
+        java.time.Instant.parse(s"${day}T12:00:00Z"))
+      assert(res.isRight, res.left.toOption.map(_.reason))
+    }
+    val fact = spark.read.parquet(s"$out/fact_crypto_daily")
+    val dimDate = spark.read.parquet(s"$out/dim_date")
+    assert(fact.count() == 120)
+    assert(fact.join(dimDate, Seq("date")).count() == 120)
+    assert(dimDate.select(col("date").cast("string")).as[String].collect().sorted.toSeq ==
+      Seq("2024-03-05", "2024-03-06"))
+  }
+
   test("the dedup window runs once per run; sink file counts unchanged") {
     val out = tempDir("graft-window-once")
     val bronze = Readers.jsonStrings(spark, endToEndRows)
