@@ -72,16 +72,6 @@ object Dedup {
         .otherwise(array(concat_ws(" ", toks)))
   }
 
-  /** LSH band keys: signature split into `bands` runs of
-    * `rowsPerBand` longs, each band folded to a 64-bit bucket id by
-    * the codegen'd [[LongArrayBandHashes]] kernel (`array<long>`, one
-    * per band). Documents sharing any (band, bucket) are candidates;
-    * distinct band values share a bucket with P ≈ 2⁻⁶⁴, and every
-    * caller verifies candidates by exact Jaccard.
-    */
-  def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    VectorKernels.bandHashes(sig, bands, rowsPerBand)
-
   /** Exact Jaccard similarity of two shingle-set columns, for string
     * shingles; hashed shingles use [[VectorKernels.setJaccard]].
     */
@@ -208,44 +198,6 @@ object Dedup {
       new CacheHandle(Nil, Seq(rows)))
   }
 
-  /** The 100 TB form of [[containmentPairs]]: shingles ride the
-    * inverted-index self-join as 64-bit hashes from the codegen'd
-    * [[VectorKernels.textShingleHashes]] kernel instead of strings — same
-    * pairs up to hash collisions (P ≈ shingles²/2⁶⁴ per doc,
-    * negligible; parity-tested), and the posting-list join keys shrink
-    * from gram strings to 8 bytes. Use the string form when an exact
-    * cross-engine oracle is needed, this one when the corpus is large.
-    */
-  def containmentPairsHashed(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int, minPct: Int): DataFrame =
-    containmentPairsHashedWithHandle(df, idCol, textCol, shingleSize, minPct)._1
-
-  /** [[containmentPairsHashed]] plus a [[CacheHandle]] over the shingle
-    * frame the operator persists internally (same contract as
-    * [[containmentPairsWithHandle]]), so long-lived sessions evict
-    * deterministically instead of accumulating LRU-held frames.
-    */
-  def containmentPairsHashedWithHandle(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int, minPct: Int): (DataFrame, CacheHandle) = {
-    require(minPct > 0 && minPct <= 100, "minPct must be in (0, 100]")
-    val sh = df.select(col(idCol).as("id"),
-      explode(VectorKernels.textShingleHashes(col(textCol), shingleSize)).as("s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("size_a"))
-    val pairs = sh.toDF("id_a", "s")
-      .join(sh.toDF("id_b", "s"), Seq("s"))
-      .filter(col("id_a") =!= col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .join(sizes.withColumnRenamed("id", "id_a"), Seq("id_a"))
-      .filter(col("n_shared") * 100 >= col("size_a") * minPct)
-      .withColumn("containment",
-        col("n_shared").cast("double") / col("size_a").cast("double"))
-    (pairs, new CacheHandle(Seq(sh)))
-  }
-
   /** INCREMENTAL near-dup: match a new BATCH of documents against an
     * existing CORPUS without re-pairing the corpus with itself — the
     * daily-ingest form of [[minhashNearDupPairs]]. At 100 TB nobody
@@ -264,6 +216,12 @@ object Dedup {
     * silently re-admits near-dups poisons the corpus forever, so the
     * extra false candidates are the right trade — the exact verify
     * discards them).
+    *
+    * Each side is fingerprinted once into persisted RDD blocks
+    * (`PersistedRows`, as in [[minhashNearDupPairsWithHandle]]) that
+    * the band join and the verify both read. Nothing enters the
+    * session's shared `CacheManager`; Spark's context cleaner drops the
+    * blocks once the returned frame is garbage-collected.
     */
   def minhashNearDupAgainst(
       corpus: DataFrame,
@@ -273,30 +231,18 @@ object Dedup {
       shingleSize: Int = 3,
       numHashes: Int = 32,
       bands: Int = 16,
-      threshold: Double = 0.6): DataFrame =
-    minhashNearDupAgainstWithHandle(corpus, batch, idCol, textCol,
-      shingleSize, numHashes, bands, threshold)._1
-
-  /** [[minhashNearDupAgainst]] plus a [[CacheHandle]] over the two
-    * persisted shingle frames (same contract as
-    * [[minhashNearDupPairsWithHandle]]). In a real incremental
-    * pipeline the CORPUS side's frame is the one to keep cached across
-    * batches — evict just the batch side between ingests.
-    */
-  def minhashNearDupAgainstWithHandle(
-      corpus: DataFrame,
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleSize: Int = 3,
-      numHashes: Int = 32,
-      bands: Int = 16,
-      threshold: Double = 0.6): (DataFrame, CacheHandle) = {
-    val idx = minhashIndexRows(corpus, idCol, textCol, shingleSize, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (matches, h) = minhashNearDupAgainstIndexWithHandle(
-      idx, batch, idCol, textCol, shingleSize, numHashes, bands, threshold)
-    (matches, new CacheHandle(h.frames :+ idx))
+      threshold: Double = 0.6): DataFrame = {
+    require(numHashes % bands == 0, "numHashes must divide into bands")
+    val rowsPerBand = numHashes / bands
+    def fingerprints(df: DataFrame): DataFrame = org.apache.spark.sql.PersistedRows(
+      minhashIndexRows(df, idCol, textCol, shingleSize, numHashes),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)._1
+    val corpusIdx = fingerprints(corpus)
+    val batchIdx = fingerprints(batch)
+    minhashVerifyCandidates(
+      minhashCandidatesAgainstBandRows(
+        minhashBandRows(corpusIdx, bands, rowsPerBand), batchIdx, bands, rowsPerBand),
+      corpusIdx, batchIdx, threshold)
   }
 
   /** The PERSISTABLE near-dup index rows for `df`: one row per doc
@@ -316,94 +262,34 @@ object Dedup {
       VectorKernels.textShingleHashes(col(textCol), shingleSize).as("sh"))
       .withColumn("sig", VectorKernels.minhashSigL(col("sh"), numHashes))
 
-  /** [[minhashNearDupAgainst]] against a PRECOMPUTED corpus index
-    * ([[minhashIndexRows]] schema) instead of corpus text. The
-    * corpus side of the per-batch plan is a parquet scan of
-    * `(id, sh, sig)` plus a band-key map — by construction there is
-    * no tokenize/shingle/minhash stage for the kept side (the API
-    * receives no corpus text at all), which is what makes the
-    * streaming ingest's per-trigger cost O(batch + index-scan)
-    * instead of O(re-fingerprint-the-corpus). Results are identical
-    * to the text form: same signatures, same band keys, same exact
-    * shingle-set Jaccard verify.
-    */
-  def minhashNearDupAgainstIndexWithHandle(
-      corpusIndex: DataFrame,
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleSize: Int = 3,
-      numHashes: Int = 32,
-      bands: Int = 16,
-      threshold: Double = 0.6): (DataFrame, CacheHandle) = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rowsPerBand = numHashes / bands
-    val shB = minhashIndexRows(batch, idCol, textCol, shingleSize, numHashes)
-      .select(col("id").as("batch_id"), col("sh").as("sh_b"), col("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val shC = corpusIndex
-      .select(col("id").as("corpus_id"), col("sh").as("sh_c"), col("sig"))
-    def bucketize(sh: DataFrame, idAs: String): DataFrame = sh
-      .select(col(idAs),
-        posexplode(lshBandKeys(col("sig"), bands, rowsPerBand))
-          .as(Seq("band", "bucket")))
-    val matches = bucketize(shB, "batch_id")
-      .join(bucketize(shC, "corpus_id"), Seq("band", "bucket"))
-      .select(col("batch_id"), col("corpus_id"))
-      .dropDuplicates("batch_id", "corpus_id")
-      .join(shB.select(col("batch_id"), col("sh_b")), "batch_id")
-      .join(shC.select(col("corpus_id"), col("sh_c")), "corpus_id")
-      .withColumn("jaccard_sim", round(VectorKernels.setJaccard(col("sh_b"), col("sh_c")), 6))
-      .filter(col("jaccard_sim") >= threshold)
-      .select(col("batch_id"), col("corpus_id"), col("jaccard_sim"))
-    (matches, new CacheHandle(Seq(shB)))
-  }
-
-  /** The PERSISTABLE band-key rows for an index frame
-    * ([[minhashIndexRows]] schema): one `(band, bucket, corpus_id)`
-    * row per (doc, band) — the exploded LSH posting list. Stored
-    * partitioned by `(band, bucket-prefix)` this is what lets an
-    * incremental consumer's per-trigger band join PRUNE the stored
-    * index scan to the batch's own buckets instead of reading every
-    * fingerprint ever admitted (the band join itself was already
-    * O(batch); the stored-side scan was the remaining O(corpus)
-    * per-trigger term).
+  /** The LSH band-key rows for an index frame ([[minhashIndexRows]]
+    * schema): one `(band, bucket, corpus_id)` row per (doc, band) —
+    * the exploded posting list. The signature splits into `bands` runs
+    * of `rowsPerBand` longs, each folded to a 64-bit bucket id by the
+    * codegen'd [[LongArrayBandHashes]] kernel; distinct band values
+    * share a bucket with P ≈ 2⁻⁶⁴, and every candidate is verified by
+    * exact Jaccard anyway. Stored sorted by `(band, bucket-prefix)`
+    * this is what lets an incremental consumer's per-trigger band join
+    * PRUNE the stored index scan to the batch's own buckets instead of
+    * reading every fingerprint ever admitted.
     */
   def minhashBandRows(
       index: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
     index.select(col("id").as("corpus_id"),
-      posexplode(lshBandKeys(col("sig"), bands, rowsPerBand))
+      posexplode(VectorKernels.bandHashes(col("sig"), bands, rowsPerBand))
         .as(Seq("band", "bucket")))
       .select(col("band"), col("bucket"), col("corpus_id"))
 
-  /** [[minhashNearDupAgainstIndexWithHandle]] against PRE-EXPLODED
-    * stored band rows ([[minhashBandRows]] schema) plus the stored
-    * doc shingle sets — the storage-layout-aware form: the caller
-    * reads `storedBands` with whatever partition pruning its layout
-    * affords (band / bucket-prefix partitions) and this join never
-    * widens the scan. `batchIdx` is the batch's own
-    * [[minhashIndexRows]] frame (caller persists it — it feeds both
-    * the band keys and the verify join). Results are identical to
-    * the text and index forms: same band keys, same exact
-    * shingle-set Jaccard verify.
-    */
-  def minhashNearDupAgainstBandRows(
-      storedBands: DataFrame, // (band, bucket, corpus_id)
-      corpusDocs: DataFrame,  // (id, sh)
-      batchIdx: DataFrame,    // (id, sh, sig)
-      bands: Int, rowsPerBand: Int, threshold: Double): DataFrame =
-    minhashVerifyCandidates(
-      minhashCandidatesAgainstBandRows(storedBands, batchIdx, bands, rowsPerBand),
-      corpusDocs, batchIdx, threshold)
-
-  /** Candidate-pair half of [[minhashNearDupAgainstBandRows]]: the
-    * banded join alone → distinct `(batch_id, corpus_id)` candidates,
-    * NO shingle verify yet. Split out so an incremental consumer can
-    * materialize the (small) candidate set first, derive which slice
-    * of the stored doc table the verify actually needs (a bounded
-    * prefix set), and hand [[minhashVerifyCandidates]] a PRUNED doc
-    * scan instead of the whole corpus — the docs-side twin of the
-    * stored-bands bucket pruning.
+  /** The one LSH band join: the batch's band keys meet `storedBands`
+    * ([[minhashBandRows]] schema) → distinct `(batch_id, corpus_id)`
+    * candidates, NO shingle verify yet. The caller reads `storedBands`
+    * with whatever pruning its layout affords; this join never widens
+    * the scan. Over the batch's own band rows (filtered
+    * `batch_id < corpus_id`) it is the self-join of
+    * [[minhashNearDupPairsFromIndex]]. Kept apart from
+    * [[minhashVerifyCandidates]] so an incremental consumer can
+    * materialize the (small) candidate set first and hand the verify
+    * a PRUNED doc scan instead of the whole corpus.
     */
   def minhashCandidatesAgainstBandRows(
       storedBands: DataFrame, // (band, bucket, corpus_id)
@@ -417,11 +303,11 @@ object Dedup {
       .dropDuplicates("batch_id", "corpus_id")
 
   /** Within-frame near-dup pairs over a PRECOMPUTED index frame
-    * ([[minhashIndexRows]] schema): the banded-candidates →
-    * exact-Jaccard-verify composition, minus the shingle/minhash
-    * stages — [[minhashNearDupPairsWithHandle]] runs it over its
-    * persisted fingerprints, and the streaming dedup's in-batch pass
-    * over the fingerprints it already holds. Because every candidate is
+    * ([[minhashIndexRows]] schema): the index's band rows joined
+    * against themselves, kept `id_a < id_b`, then verified —
+    * [[minhashNearDupPairsWithHandle]] runs it over its persisted
+    * fingerprints, and the streaming dedup's in-batch pass over the
+    * fingerprints it already holds. Because every candidate is
     * verified by exact shingle-set Jaccard, the result equals the
     * text form's whenever the banding finds every true pair; MORE
     * bands/hashes can only raise candidate recall, never change a
@@ -429,25 +315,18 @@ object Dedup {
     */
   def minhashNearDupPairsFromIndex(
       index: DataFrame, // (id, sh, sig)
-      bands: Int, rowsPerBand: Int, threshold: Double): DataFrame = {
-    val bk = minhashBandRows(index, bands, rowsPerBand)
-    bk.select(col("band"), col("bucket"), col("corpus_id").as("id_a"))
-      .join(bk.select(col("band"), col("bucket"), col("corpus_id").as("id_b")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-      .join(index.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(index.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("jaccard_sim", round(VectorKernels.setJaccard(col("sh_a"), col("sh_b")), 6))
-      .filter(col("jaccard_sim") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard_sim"))
-  }
+      bands: Int, rowsPerBand: Int, threshold: Double): DataFrame =
+    minhashVerifyCandidates(
+      minhashCandidatesAgainstBandRows(
+        minhashBandRows(index, bands, rowsPerBand), index, bands, rowsPerBand)
+        .filter(col("batch_id") < col("corpus_id")),
+      index, index, threshold)
+      .select(col("batch_id").as("id_a"), col("corpus_id").as("id_b"), col("jaccard_sim"))
 
-  /** Verify half of [[minhashNearDupAgainstBandRows]]: exact
-    * shingle-set Jaccard over the candidate pairs. `corpusDocs` may
-    * be any superset of the candidates' corpus rows — pruned scans
-    * change the I/O, never the answer.
+  /** The one verify: exact shingle-set Jaccard over the candidate
+    * pairs, kept at ≥ `threshold`. `corpusDocs` may be any superset of
+    * the candidates' corpus rows — pruned scans change the I/O, never
+    * the answer.
     */
   def minhashVerifyCandidates(
       candidates: DataFrame,  // (batch_id, corpus_id)

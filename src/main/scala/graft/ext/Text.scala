@@ -341,47 +341,6 @@ object Text {
         coalesce(col("dup_trigram_occ"), lit(0L)).as("dup_trigram_occ"))
   }
 
-  /** The 100 TB form of [[repetitionStats]]: n-grams are hashed
-    * map-side (`xxhash64`, codegen'd) so the (doc, k, gram) shuffle
-    * carries 8-byte keys instead of concatenated gram strings — same
-    * counts up to hash collisions (P ≈ grams²/2⁶⁴ per document,
-    * negligible; parity-tested in ExtSpec). Use the string form when
-    * an exact cross-engine oracle is needed, this one when the corpus
-    * is large.
-    */
-  def repetitionStatsHashed(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val base = df
-      .select(col(idCol), tokens(col(textCol)).as("toks"))
-      .withColumn("n_tokens", size(col("toks")))
-      .withColumn("n_distinct", size(array_distinct(col("toks"))))
-    def gramHashes(k: Int): Column =
-      transform(
-        sequence(lit(1), size(col("toks")) - (k - 1)),
-        i => xxhash64(concat_ws(" ", slice(col("toks"), i, lit(k)))))
-    val occurrences = base
-      .filter(col("n_tokens") >= 2)
-      .select(col(idCol),
-        explode(concat(
-          transform(gramHashes(2), h => struct(lit(2).as("k"), h.as("gram"))),
-          when(col("n_tokens") >= 3,
-            transform(gramHashes(3), h => struct(lit(3).as("k"), h.as("gram"))))
-            .otherwise(array().cast("array<struct<k:int,gram:bigint>>")))).as("g"))
-      .select(col(idCol), col("g.k").as("k"), col("g.gram").as("gram"))
-    val perDoc = occurrences
-      .groupBy(col(idCol), col("k"), col("gram"))
-      .agg(count(lit(1)).as("c"))
-      .groupBy(col(idCol))
-      .agg(
-        max(when(col("k") === 2, col("c"))).as("top_bigram_cnt"),
-        sum(when(col("k") === 3 && col("c") >= 2, col("c")).otherwise(lit(0L)))
-          .as("dup_trigram_occ"))
-    base.drop("toks")
-      .join(perDoc, Seq(idCol), "left_outer")
-      .select(col(idCol), col("n_tokens"), col("n_distinct"),
-        coalesce(col("top_bigram_cnt"), lit(0L)).as("top_bigram_cnt"),
-        coalesce(col("dup_trigram_occ"), lit(0L)).as("dup_trigram_occ"))
-  }
-
   // -------------------------------------------- linear quality classifier
 
   /** Logit of a linear quality classifier over four codegen'd text
@@ -800,9 +759,9 @@ object Text {
     // the unigram model trains on EVERY doc; only bigram extraction
     // needs ≥ 2 tokens (and Spark's sequence(1, 0) would DESCEND)
     val base = all.filter(size(col("toks")) >= 2)
-    // the first token rides beside the bigram (as in the hashed
-    // variant) so the unigram join keys on a plain column instead of
-    // re-splitting the bigram string per row
+    // the first token rides beside the bigram so the unigram join
+    // keys on a plain column instead of re-splitting the bigram
+    // string per row
     val bg = base.select(col("doc_id"),
       explode(transform(sequence(lit(1), size(col("toks")) - 1),
         i => struct(
@@ -816,39 +775,6 @@ object Text {
     val bc = bg.groupBy(col("bigram")).agg(count(lit(1)).as("cb"))
     bg.join(bc, "bigram")
       .join(uc, "tok")
-      .crossJoin(broadcast(v))
-      .withColumn("lp", log((col("cb") + lit(1.0)) / (col("cu") + col("vocab"))))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"), round(avg(col("lp")), 4).as("avg_lp"))
-  }
-
-  /** The 100 TB form of [[bigramLogProbScores]]: tokens hash once to
-    * 64 bits (`xxhash64`, codegen'd), bigram identity is an arithmetic
-    * mix of the two token hashes — so neither the count shuffles nor
-    * the scoring joins ever carry a string, only longs. Same model,
-    * same smoothing; equal output up to 64-bit hash collisions
-    * (P ≈ bigrams²/2⁶⁴ — negligible; parity-tested against the string
-    * form). Use the string form when an exact cross-engine oracle is
-    * needed, this one when the corpus is large.
-    */
-  def bigramLogProbScoresHashed(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val all = docs.select(col(idCol).as("doc_id"),
-      transform(tokens(lower(trim(col(textCol)))), t => xxhash64(t)).as("tk"))
-    val base = all.filter(size(col("tk")) >= 2)
-    // pair identity via variadic xxhash64 over the two token hashes —
-    // codegen'd, and no wrapping arithmetic (ANSI mode rejects overflow)
-    val bg = base.select(col("doc_id"),
-      explode(transform(sequence(lit(1), size(col("tk")) - 1),
-        i => struct(
-          xxhash64(element_at(col("tk"), i), element_at(col("tk"), i + 1)).as("bk"),
-          element_at(col("tk"), i).as("w1k")))).as("p"))
-      .select(col("doc_id"), col("p.bk").as("bk"), col("p.w1k").as("w1k"))
-    val uni = all.select(explode(col("tk")).as("w1k"))
-    val uc = uni.groupBy(col("w1k")).agg(count(lit(1)).as("cu"))
-    val v = uni.agg(countDistinct(col("w1k")).cast("double").as("vocab"))
-    val bc = bg.groupBy(col("bk")).agg(count(lit(1)).as("cb"))
-    bg.join(bc, "bk")
-      .join(uc, "w1k")
       .crossJoin(broadcast(v))
       .withColumn("lp", log((col("cb") + lit(1.0)) / (col("cu") + col("vocab"))))
       .groupBy(col("doc_id"))
@@ -917,12 +843,11 @@ object Text {
   }
 
   /** The 100 TB form of [[crossEntropyScores]]: token and bigram
-    * identity hash to 64 bits (`xxhash64`) before any join, so the
-    * corpus-side shuffle and both model joins carry only longs — the
-    * [[bigramLogProbScoresHashed]] discipline applied to the
-    * cross-corpus model. Same smoothing, equal output up to 64-bit
-    * hash collisions (parity-tested in ExtSpec; the string form is
-    * the oracle surface).
+    * identity hash to 64 bits (`xxhash64`; a bigram is the variadic
+    * hash of its two token hashes) before any join, so the corpus-side
+    * shuffle and both model joins carry only longs. Same smoothing,
+    * equal output up to 64-bit hash collisions (parity-tested in
+    * ExtSpec; the string form is the oracle surface).
     */
   def crossEntropyScoresHashed(
       docs: DataFrame, idCol: String, textCol: String,

@@ -934,7 +934,8 @@ object Jobs {
     * twin of the q88b batch composition: each micro-batch is checked
     * against the kept corpus's PERSISTED FINGERPRINT INDEX with the
     * directional high-recall band join
-    * ([[graft.ext.Dedup.minhashNearDupAgainstIndexWithHandle]] —
+    * ([[graft.ext.Dedup.minhashCandidatesAgainstBandRows]], then
+    * [[graft.ext.Dedup.minhashVerifyCandidates]] —
     * O(batch × bands) map work + a bucket join, never corpus²), then
     * deduped within itself (LSH pairs → clusters → min-id canonical),
     * and the survivors land APPEND-ONLY under their own v=<batchId>
@@ -1015,13 +1016,9 @@ object Jobs {
       val haveIndex = prevV >= 0 &&
         bandsHPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .exists(bandsHPath)
-      val matches = if (!haveIndex) {
-        val none = batchIdx.limit(0)
-        graft.ext.Dedup.minhashNearDupAgainstBandRows(
-          graft.ext.Dedup.minhashBandRows(none, bands, rowsPerBand),
-          none.select(col("id"), col("sh")), batchIdx,
-          bands, rowsPerBand, threshold = 0.5)
-      } else {
+      // with no stored index yet the whole batch survives the
+      // cross-batch pass: no band join, verify or anti-join to plan
+      val (s0, s0Idx) = if (!haveIndex) (batch, batchIdx) else {
         // the batch's distinct bp = band·256 + bucket-prefix
         // values — a BOUNDED driver hop (≤ bands·256 = 4096 rows
         // by construction, independent of batch or corpus size) —
@@ -1053,19 +1050,18 @@ object Jobs {
             cand, docs, batchIdx, threshold = 0.5)
             .localCheckpoint(eager = true)) // realize before cand unpersists
         cand.unpersist()
-        verified
+        val s0 = batch.join(
+          verified.select(col("batch_id").as("doc_id")).distinct(),
+          Seq("doc_id"), "left_anti")
+        // in-batch pairs ride the ALREADY-persisted batch fingerprints
+        // (semi-joined down to the cross-batch survivors) instead of
+        // re-tokenizing/re-shingling/re-minhashing the batch text —
+        // the 32-hash/16-band scheme has strictly higher candidate
+        // recall than the old standalone 16/8 pass and every pair is
+        // exact-Jaccard verified, so the pair set is unchanged
+        (s0, batchIdx.join(
+          s0.select(col("doc_id").as("id")), Seq("id"), "left_semi"))
       }
-      val s0 = batch.join(
-        matches.select(col("batch_id").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      // in-batch pairs ride the ALREADY-persisted batch fingerprints
-      // (semi-joined down to the cross-batch survivors) instead of
-      // re-tokenizing/re-shingling/re-minhashing the batch text —
-      // the 32-hash/16-band scheme has strictly higher candidate
-      // recall than the old standalone 16/8 pass and every pair is
-      // exact-Jaccard verified, so the pair set is unchanged
-      val s0Idx = batchIdx.join(
-        s0.select(col("doc_id").as("id")), Seq("id"), "left_semi")
       // min-id-per-cluster closure via the bounded driver
       // union-find (distributed dupClusters above the pair cap) —
       // verified pair sets are sparse, and the propagation loop's

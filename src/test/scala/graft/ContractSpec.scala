@@ -103,6 +103,20 @@ class ContractSpec extends SparkSpec {
     assert(composed.isEmpty, s"shingleHashes over Text.tokens in main sources: $composed")
   }
 
+  test("MinHash near-dup runs one band-row builder and one verify") {
+    // the self-join, the batch-vs-corpus join and the stream all compose
+    // minhashBandRows → minhashCandidatesAgainstBandRows →
+    // minhashVerifyCandidates; a second call site is a hand-copied twin
+    val dedup = "src/main/scala/graft/ext/Dedup.scala"
+    def onlyIn(token: String, fn: String): Unit = {
+      val found = hits(token).filterNot(_.contains("/ext/VectorKernels.scala:"))
+      assert(found.size == 1 && body(dedup, fn).contains(found.head),
+        s"expected $token only in $fn: $found")
+    }
+    onlyIn("VectorKernels.bandHashes(", "minhashBandRows")
+    onlyIn("VectorKernels.setJaccard(", "minhashVerifyCandidates")
+  }
+
   test("entry() returns rows (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -286,7 +286,7 @@ class ExtSpec extends SparkSpec {
         .filter(col("id_a") < col("id_b"))
         .select("id_a", "id_b").distinct().as[(Long, Long)].collect().toSet
     }
-    val keys = Dedup.lshBandKeys(col("sig"), bands, rows)
+    val keys = VectorKernels.bandHashes(col("sig"), bands, rows)
     assert(idx.select(keys).schema.head.dataType ==
       org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, false))
     val exact = candidates(array((0 until bands).map(b =>
@@ -756,14 +756,6 @@ class ExtSpec extends SparkSpec {
     val (cp, ch) = Dedup.containmentPairsWithHandle(docs, "doc_id", "text", 2, 30)
     cp.count()
     assert(ch.isCached); ch.unpersist(blocking = true); assert(!ch.isCached)
-    val (m, mh) = Dedup.minhashNearDupAgainstWithHandle(
-      docs.filter(col("doc_id") <= 25), docs.filter(col("doc_id") > 25),
-      "doc_id", "text")
-    m.count()
-    assert(mh.isCached); mh.unpersist(blocking = true); assert(!mh.isCached)
-    val (hp, hh) = Dedup.containmentPairsHashedWithHandle(docs, "doc_id", "text", 2, 30)
-    hp.count()
-    assert(hh.isCached); hh.unpersist(blocking = true); assert(!hh.isCached)
     val (tp, th) = Text.tfidfCosinePairsWithHandle(docs, "doc_id", "text", 0.5)
     tp.count()
     assert(th.isCached); th.unpersist(blocking = true); assert(!th.isCached)
@@ -787,6 +779,18 @@ class ExtSpec extends SparkSpec {
     }
     assert(counts.distinct == Seq(pairs.count()))
     assert(persistent().subsetOf(before), persistent() -- before)
+  }
+
+  test("minhashNearDupAgainst leaves nothing in the shared CacheManager") {
+    // q78 runs it inside Verify's pooled sessions, which share one
+    // CacheManager that nothing clears for the rest of the run
+    val docs = (1 to 50).map(i =>
+      (i.toLong, s"some shared words plus unique token$i here")).toDF("doc_id", "text")
+    spark.catalog.clearCache()
+    Dedup.minhashNearDupAgainst(
+      docs.filter(col("doc_id") <= 25), docs.filter(col("doc_id") > 25),
+      "doc_id", "text", threshold = 0.3).collect()
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   // ------------------------------------------------------ multimodal
@@ -970,15 +974,6 @@ class ExtSpec extends SparkSpec {
     assert(none == 0)
   }
 
-  test("hashed bigram scoring path agrees with the string path") {
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-    val s = Text.bigramLogProbScores(docs, "doc_id", "text")
-      .orderBy(col("doc_id")).as[(Long, Long, Double)].collect().toSeq
-    val h = Text.bigramLogProbScoresHashed(docs, "doc_id", "text")
-      .orderBy(col("doc_id")).as[(Long, Long, Double)].collect().toSeq
-    assert(s.nonEmpty && s == h)
-  }
-
   test("deletionNeighborhoodMatch: exact dist 0, one-deletion dist 1, others absent") {
     val clean = Seq((1L, "widget"), (2L, "gadget"), (3L, "sprocket"))
       .toDF("id", "name")
@@ -1010,15 +1005,6 @@ class ExtSpec extends SparkSpec {
     assert(r(4L) == ((6, 2, 3L, 4L)))
   }
 
-  test("repetitionStatsHashed agrees with the string path on real docs") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .limit(120)
-    def rows(d: org.apache.spark.sql.DataFrame) =
-      d.as[(Long, Int, Int, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(rows(Text.repetitionStatsHashed(docs, "doc_id", "text"))
-      == rows(Text.repetitionStats(docs, "doc_id", "text")))
-  }
-
   test("containmentPairs dfCap: exact dup still 1.0, hot-shingle pairs pruned") {
     // "x y z" is shared by every doc (hot); docs 1/2 are exact dups
     val docs = Seq(
@@ -1040,16 +1026,6 @@ class ExtSpec extends SparkSpec {
     val full = Dedup.containmentPairs(docs, "doc_id", "text", 3, 25)
       .select(col("id_a"), col("id_b")).as[(Long, Long)].collect().toSet
     assert(full.contains((3L, 4L)))
-  }
-
-  test("containmentPairsHashed agrees with the string path on real docs") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .limit(150)
-    def rows(d: org.apache.spark.sql.DataFrame) =
-      d.select(col("id_a"), col("id_b"), col("n_shared"), col("size_a"))
-        .as[(Long, Long, Long, Long)].collect().sortBy(t => (t._1, t._2)).toSeq
-    assert(rows(Dedup.containmentPairsHashed(docs, "doc_id", "text", 3, 30))
-      == rows(Dedup.containmentPairs(docs, "doc_id", "text", 3, 30)))
   }
 
   test("containmentPairs: subset doc contains fully, asymmetric, threshold cuts") {
@@ -1171,20 +1147,25 @@ class ExtSpec extends SparkSpec {
     val viaText = Dedup.minhashNearDupAgainst(corpus, batch, "doc_id", "text",
       shingleSize = 3, numHashes = 32, bands = 16, threshold = 0.5)
       .as[(Long, Long, Double)].collect().toSet
-    // round-trip the index THROUGH PARQUET and drop the text column
-    // entirely: the per-batch plan cannot contain a kept-side
+    // the stream's stored-index contract: the kept side's index rows
+    // and band rows round-trip THROUGH PARQUET with no text column, so
+    // the per-batch plan cannot contain a kept-side
     // tokenize/shingle/minhash stage because no kept text exists
     val tmp = java.nio.file.Files.createTempDirectory("graft-ndidx").toString
     Dedup.minhashIndexRows(corpus, "doc_id", "text",
       shingleSize = 3, numHashes = 32)
-      .write.mode("overwrite").parquet(tmp)
-    val idx = spark.read.parquet(tmp)
+      .write.mode("overwrite").parquet(s"$tmp/docs")
+    val idx = spark.read.parquet(s"$tmp/docs")
     assert(idx.columns.sorted.toSeq == Seq("id", "sh", "sig"))
-    val (viaIdxDf, h) = Dedup.minhashNearDupAgainstIndexWithHandle(
-      idx, batch, "doc_id", "text",
-      shingleSize = 3, numHashes = 32, bands = 16, threshold = 0.5)
-    val viaIdx = viaIdxDf.as[(Long, Long, Double)].collect().toSet
-    h.unpersist()
+    Dedup.minhashBandRows(idx, bands = 16, rowsPerBand = 2)
+      .write.mode("overwrite").parquet(s"$tmp/bands")
+    val storedBands = spark.read.parquet(s"$tmp/bands")
+    val batchIdx = Dedup.minhashIndexRows(batch, "doc_id", "text",
+      shingleSize = 3, numHashes = 32)
+    val viaIdx = Dedup.minhashVerifyCandidates(
+      Dedup.minhashCandidatesAgainstBandRows(storedBands, batchIdx, 16, 2),
+      idx, batchIdx, threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSet
     assert(viaIdx == viaText)
     assert(viaIdx.exists(t => t._1 == 1L && t._2 == 101L && t._3 == 1.0))
     assert(viaIdx.exists(t => t._1 == 3L && t._2 == 102L))
