@@ -8,6 +8,7 @@ import graft.dq.{Analyzers, ColumnValues, Rules}
 import graft.etl.Transform
 import graft.ext.{Dedup, Features, Multimodal, Similarity, Text, TextNorm}
 import graft.gold.Star
+import graft.pipeline.Pipeline
 import graft.stream.{Jobs, Validate}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -498,23 +499,6 @@ object SparkEntry {
       ()
     }
     in
-  }
-
-  /** Run `b` on a driver thread while `a` computes on this one
-    * (guide §2.6 — overlap independent jobs): both legs are
-    * deterministic action sequences with no data dependency, so the
-    * concurrent jobs back-fill each other's scheduling/planning gaps.
-    * Results are exactly what the sequential form computes — only the
-    * submission order changes. Used where a query's setup runs two or
-    * three independent driver-blocking legs back to back (quantizer
-    * trainings, slice-file writes, skew decides).
-    */
-  private def overlapped[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fb = Future(b)
-    val ra = a
-    (ra, Await.result(fb, scala.concurrent.duration.Duration.Inf))
   }
 
   /** O-59/O-61: the same validation executed as a REAL Structured
@@ -1094,23 +1078,20 @@ object SparkEntry {
     // hundreds of tiny hour= dirs on the bench path. The DLQ write is
     // independent of the fact-table writes (different dir, append mode;
     // their dynamic overwrite is a per-write option, not a session
-    // conf), so it overlaps them from a driver thread (guide §2.6): its
+    // conf), so it overlaps them as a second leg (guide §2.6): its
     // 168-dir commit was the single largest job in the query
-    import scala.concurrent.ExecutionContext.Implicits.global
     val errs = Tables.events(spark, dir).filter(col("event_type") === "error")
       .filter(col("ts") < lit("2024-01-08").cast(TimestampType))
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-    val dlqWritten = scala.concurrent.Future {
-      graft.sinks.Writers.badRecordsPartitioned(errs, "ts", s"$tmp/dlq")
-    }
-
-    graft.sinks.Writers.parquetDynamicOverwrite(orders, s"$tmp/fact", "o_orderstatus")
-    val patch = orders.filter(col("o_orderstatus") === "O")
-      .withColumn("o_totalprice", col("o_totalprice") * 0.9)
-    graft.sinks.Writers.parquetDynamicOverwrite(patch, s"$tmp/fact", "o_orderstatus")
-    val fact = spark.read.parquet(s"$tmp/fact")
-    scala.concurrent.Await.result(dlqWritten,
-      scala.concurrent.duration.Duration.Inf)
+    val (fact, _) = Pipeline.par(
+      {
+        graft.sinks.Writers.parquetDynamicOverwrite(orders, s"$tmp/fact", "o_orderstatus")
+        val patch = orders.filter(col("o_orderstatus") === "O")
+          .withColumn("o_totalprice", col("o_totalprice") * 0.9)
+        graft.sinks.Writers.parquetDynamicOverwrite(patch, s"$tmp/fact", "o_orderstatus")
+        spark.read.parquet(s"$tmp/fact")
+      },
+      graft.sinks.Writers.badRecordsPartitioned(errs, "ts", s"$tmp/dlq"))
     // explicit schema: no inference pass over the many small JSONL files
     val dlqSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("event_id", LongType),
@@ -1817,7 +1798,7 @@ object SparkEntry {
     // remaining passes was tried and REVERTED — the explode pipelines
     // off the parquet scan at ~nothing, while forced materialization
     // cost +5.6 s across two full bench runs (12.7/15.4 s vs 7.1 s).
-    val (bucketsHot, bucketsUni) = overlapped(
+    val (bucketsHot, bucketsUni) = Pipeline.par(
       graft.operators.SkewJoin.decide(
         hotFact, Seq("k"), threshold = 4, maxBuckets = 32),
       graft.operators.SkewJoin.decide(
@@ -2963,7 +2944,7 @@ object SparkEntry {
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // the two quantizer trainings are independent action sequences
     // over the same frame — overlap them (guide §2.6)
-    val (clustered, cbs) = overlapped(
+    val (clustered, cbs) = Pipeline.par(
       Similarity.kmeansLabels(base, "vec_id", "embedding",
         k = 10, iters = 3, scorer = graft.ext.VectorKernels.CosineF),
       graft.ext.Features.pqTrainCodebooks(
@@ -2991,7 +2972,7 @@ object SparkEntry {
   def q109bIvfAdcContract(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // independent trainings — overlap (guide §2.6), results unchanged
-    val (clustered, cbs) = overlapped(
+    val (clustered, cbs) = Pipeline.par(
       Similarity.kmeansLabels(base, "vec_id", "embedding",
         k = 10, iters = 3, scorer = graft.ext.VectorKernels.CosineF),
       graft.ext.Features.pqTrainCodebooks(
@@ -3080,7 +3061,7 @@ object SparkEntry {
   def q111AnnIndexRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // independent trainings — overlap (guide §2.6), results unchanged
-    val (clustered, cbs) = overlapped(
+    val (clustered, cbs) = Pipeline.par(
       Similarity.kmeansLabels(base, "vec_id", "embedding",
         k = 10, iters = 3, scorer = graft.ext.VectorKernels.CosineF),
       graft.ext.Features.pqTrainCodebooks(
@@ -3129,7 +3110,7 @@ object SparkEntry {
   def q114IvfPqRefinePipeline(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // independent trainings — overlap (guide §2.6), results unchanged
-    val (clustered, cbs) = overlapped(
+    val (clustered, cbs) = Pipeline.par(
       Similarity.kmeansLabels(base, "vec_id", "embedding",
         k = 10, iters = 3, scorer = graft.ext.VectorKernels.CosineF),
       graft.ext.Features.pqTrainCodebooks(
@@ -3174,7 +3155,7 @@ object SparkEntry {
   def q113StreamIndexIngest(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // independent trainings — overlap (guide §2.6), results unchanged
-    val (centroids, cbs) = overlapped(
+    val (centroids, cbs) = Pipeline.par(
       Similarity.trainKmeansCentroids(base, "vec_id", "embedding",
         k = 10, iters = 3, scorer = graft.ext.VectorKernels.CosineF),
       graft.ext.Features.pqTrainCodebooks(
@@ -3183,7 +3164,7 @@ object SparkEntry {
     val tmp = tempDir("graft-q113")
     // batch referee (same frozen quantizers, one shot) and the stream
     // input slice-file write are independent — overlap them too
-    val (_, in) = overlapped(
+    val (_, in) = Pipeline.par(
       {
         val batchCodes = graft.ext.Features.pqEncode(
           Similarity.assignCells(base, "vec_id", "embedding", centroids,
@@ -3233,10 +3214,10 @@ object SparkEntry {
     val tmp = tempDir("graft-q115")
     // three independent setup legs (kmeans training, PQ training, the
     // stream input slice-file write) — overlap all three (guide §2.6)
-    val (centroids, (cbs, in)) = overlapped(
+    val (centroids, (cbs, in)) = Pipeline.par(
       Similarity.trainKmeansCentroids(base, "vec_id", "embedding",
         k = 10, iters = 3, scorer = graft.ext.VectorKernels.CosineF),
-      overlapped(
+      Pipeline.par(
         graft.ext.Features.pqTrainCodebooks(
           base, "vec_id", "embedding", m = 16, k = 16, iters = 3),
         writeSliceFilesByExpr(base, pmod(col("vec_id"), lit(4)), tmp)))
@@ -3444,7 +3425,7 @@ object SparkEntry {
   def q121StreamQueryServe(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // independent trainings — overlap (guide §2.6), results unchanged
-    val (clustered, cbs) = overlapped(
+    val (clustered, cbs) = Pipeline.par(
       Similarity.kmeansLabels(base, "vec_id", "embedding",
         k = 10, iters = 3, scorer = graft.ext.VectorKernels.CosineF),
       graft.ext.Features.pqTrainCodebooks(
@@ -3458,7 +3439,7 @@ object SparkEntry {
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
     // the index write and the stream input slice-file write are
     // independent — overlap them too
-    val (_, in) = overlapped(
+    val (_, in) = Pipeline.par(
       graft.ext.AnnIndex.write(codes,
         Similarity.clusterCentroids(clustered), cbs, idxDir),
       writeSliceFilesByExpr(queries, pmod(col("query_id"), lit(4)), tmp))
@@ -5614,7 +5595,7 @@ object SparkEntry {
   def q200IndexDelete(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // independent trainings — overlap (guide §2.6), results unchanged
-    val (clustered, cbs) = overlapped(
+    val (clustered, cbs) = Pipeline.par(
       Similarity.kmeansLabels(base, "vec_id", "embedding",
         k = 10, iters = 3, scorer = graft.ext.VectorKernels.CosineF),
       graft.ext.Features.pqTrainCodebooks(
@@ -5643,7 +5624,7 @@ object SparkEntry {
     // touch disjoint dirs and only meet at the final set compares —
     // overlap the two chains (guide §2.6); each chain's internal
     // order (and results) is unchanged
-    val ((delSet, sweptSet), refSet) = overlapped(
+    val ((delSet, sweptSet), refSet) = Pipeline.par(
       {
         graft.ext.AnnIndex.write(codes, centroids, cbs, full)
         graft.ext.AnnIndex.delete(

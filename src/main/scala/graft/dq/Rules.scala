@@ -219,9 +219,11 @@ object Rules {
 
   /** O-41 routing: passed→Silver, failed→DLQ, bookkeeping cols dropped
     * from the passed side (O-14; ref: glue/data_quality_dqdl.py:110-129).
-    * Two complementary filters over one (cacheable) annotated frame —
-    * the reference's ThreadPoolExecutor concurrency (O-70) is
-    * unnecessary on Spark.
+    * Two complementary filters over one (cacheable) annotated frame
+    * need no threads. The reference's ThreadPoolExecutor (O-70) exists
+    * to overlap its independent sink writes; here that is
+    * [[graft.pipeline.Pipeline.par]], which `Medallion.run` forks its
+    * independent sinks on.
     */
   def route(annotated: DataFrame): (DataFrame, DataFrame) = {
     val passed = annotated

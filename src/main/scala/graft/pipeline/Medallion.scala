@@ -26,6 +26,17 @@ import graft.sinks.Writers
   * to, while a cached plan keeps every shuffle partition (AQE does not
   * coalesce cached plans by default), which doubles the files each
   * day's silver and fact writes commit.
+  *
+  * Independent sinks overlap through [[Pipeline.par]] at the two points
+  * where the DAG forks: in transform, the DLQ append runs beside the
+  * dedup checkpoint; in gold, the silver append, the fact overwrite,
+  * the `dim_coins` merge/overwrite and the `dim_date` overwrite run as
+  * four legs. The legs are safe to overlap because every leg writes
+  * its own path (`dlq`, `silver`, `fact_crypto_daily`, `dim_coins`,
+  * `dim_date`; only `dim_coins` reads a path, and it is its own) and
+  * dynamic partition overwrite is a per-write option, not a session
+  * conf. The DQ gate still runs before gold and the notification
+  * last; the plans, jobs and files are the sequential form's.
   */
 object Medallion {
 
@@ -81,21 +92,23 @@ object Medallion {
     var dimCoins: DataFrame = null
     var dimDate: DataFrame = null
 
-    // Transform: projection + metadata + schema-enforcement split + dedup
+    // Transform: projection + metadata + schema-enforcement split + dedup;
+    // the DLQ append and the dedup checkpoint read disjoint halves of
+    // the split, so they run as two legs
     val transform: Pipeline.Stage = df =>
-      if (df.isEmpty) Left(StageFailure("transform", "empty input"))
-      else {
+      Pipeline.nonEmpty("transform")(df).map { df =>
         val projected = Transform.withMetadata(
           Transform.castProjection(df, silverSpec), Some(now))
         val (valid, bad) = Transform.schemaSplit(
           projected, graft.schema.Schemas.cryptoRequired)
-        Writers.dlqAppend(bad, s"$outDir/dlq")
         dlq = bad
-        Right(Transform.dedupLatest(
-          valid,
-          partitionCols = Seq("coin_id", "update_date"),
-          orderCols = Seq(col("last_updated_ts").desc, col("market_cap_rank").asc_nulls_last))
-          .localCheckpoint(true))
+        Pipeline.par(
+          Writers.dlqAppend(bad, s"$outDir/dlq"),
+          Transform.dedupLatest(
+            valid,
+            partitionCols = Seq("coin_id", "update_date"),
+            orderCols = Seq(col("last_updated_ts").desc, col("market_cap_rank").asc_nulls_last))
+            .localCheckpoint(true))._2
       }
 
     // DQ gate (ref DQDL ruleset) on the deduped silver candidate
@@ -104,13 +117,12 @@ object Medallion {
         StageFailure("data_quality",
           failures.map(f => s"${f.rule} (observed=${f.observed})").mkString("; ")))
 
-    // Gold: fact with dynamic partition overwrite + dims merged
+    // Gold: silver append, fact with dynamic partition overwrite, dims
+    // merged — four legs, one output path each
     val gold: Pipeline.Stage = Pipeline.stage { s =>
       silver = s
-      Writers.parquetAppendPartitioned(s, s"$outDir/silver", "update_date")
       fact = s.withColumnRenamed("update_date", "date")
         .filter(col("coin_id").isNotNull)
-      Writers.parquetDynamicOverwrite(fact, s"$outDir/fact_crypto_daily", "date")
       dimCoins = Star.mergeDim(
         Pipeline.readOrEmpty(spark, s"$outDir/dim_coins",
           StructType(Seq(
@@ -120,12 +132,17 @@ object Medallion {
         // mergeDim's keyed dropDuplicates already removes repeats
         s.select("coin_id", "symbol", "name"),
         Seq("coin_id"))
-      Writers.parquetOverwrite(dimCoins, s"$outDir/dim_coins")
       // one partition per date: a run replaces only its own dates, so
       // earlier days keep their rows (the reference's union + distinct
       // at O(day) instead of O(history)), and a rerun is idempotent
       dimDate = Star.dimDate(fact, "date")
-      Writers.parquetDynamicOverwrite(dimDate, s"$outDir/dim_date", "date")
+      Pipeline.par(
+        Pipeline.par(
+          Writers.parquetAppendPartitioned(s, s"$outDir/silver", "update_date"),
+          Writers.parquetDynamicOverwrite(fact, s"$outDir/fact_crypto_daily", "date")),
+        Pipeline.par(
+          Writers.parquetOverwrite(dimCoins, s"$outDir/dim_coins"),
+          Writers.parquetDynamicOverwrite(dimDate, s"$outDir/dim_date", "date")))
       fact
     }
 

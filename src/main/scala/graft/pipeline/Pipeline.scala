@@ -37,6 +37,47 @@ object Pipeline {
   /** Lift a total transform into a stage. */
   def stage(f: DataFrame => DataFrame): Stage = df => Right(f(df))
 
+  /** Run two independent legs at once and return both results
+    * (O-70: the reference's `ThreadPoolExecutor` fan-out, ref:
+    * glue/data_quality_dqdl.py:21-31); nest calls for more legs. Each
+    * leg runs on its own new thread that carries the caller's active
+    * session and a copy of its SparkContext local properties, so
+    * `SQLConf.get`, a pooled `newSession()` and any job property the
+    * caller set resolve in the leg as they do on the caller. Both legs'
+    * jobs carry one per-call job tag: the first leg to fail cancels
+    * the tag's running jobs, the call waits for the other leg to end,
+    * then rethrows the failing leg's own error — no leg outlives the
+    * call. The legs must share no output path or session-wide conf.
+    */
+  def par[A, B](a: => A, b: => B): (A, B) = {
+    val session = SparkSession.active
+    val sc = session.sparkContext
+    val tag = s"graft-par-${java.util.UUID.randomUUID()}"
+    val firstError = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    final class Leg[T](body: => T) extends Thread(s"$tag-leg") {
+      setDaemon(true)
+      var result: T = _ // read after join(), which orders it
+      // a new thread inherits a copy of the creator's local properties
+      // (SparkContext.localProperties is inheritable); the session is set
+      // explicitly so the leg never depends on how its thread was made
+      override def run(): Unit = {
+        SparkSession.setActiveSession(session)
+        sc.addJobTag(tag)
+        try result = body
+        catch {
+          case e: Throwable =>
+            if (firstError.compareAndSet(null, e))
+              sc.cancelJobsWithTag(tag, "a sibling leg of Pipeline.par failed")
+        }
+      }
+    }
+    val (la, lb) = (new Leg(a), new Leg(b))
+    la.start(); lb.start()
+    la.join(); lb.join()
+    Option(firstError.get).foreach(e => throw e)
+    (la.result, lb.result)
+  }
+
   /** O-69: table-not-exists fallback
     * (ref: glue/data_aggregate_gold.py:73-91 try/except → start fresh).
     * Only a missing path means "start fresh"; any other read error

@@ -117,6 +117,19 @@ class ContractSpec extends SparkSpec {
     onlyIn("VectorKernels.setJaccard(", "minhashVerifyCandidates")
   }
 
+  test("independent legs overlap through Pipeline.par, never a global-pool Future") {
+    // a pool thread carries whichever session and local properties it
+    // was made with, and a Future left behind by a failed sibling leg is
+    // never cancelled or awaited
+    val banned = """scala\.concurrent\.(\{[^}]*)?\bFuture\b|Implicits\.global""".r
+    val found = mainSources.toSeq.sortBy(_._1).flatMap { case (f, ls) =>
+      ls.zipWithIndex.collect {
+        case (l, i) if banned.findFirstIn(l).isDefined => s"$f:${i + 1}"
+      }
+    }
+    assert(found.isEmpty, s"scala.concurrent.Future / Implicits.global in main sources: $found")
+  }
+
   test("entry() returns rows (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

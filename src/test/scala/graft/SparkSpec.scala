@@ -33,6 +33,20 @@ trait SparkSpec extends AnyFunSuite {
     finally spark.listenerManager.unregister(listener)
     plans.synchronized(plans.toVector)
   }
+
+  /** Active job ids once the listener bus has caught up. A cancelled
+    * job's end event is posted just after its waiter is released, so
+    * the bus is drained until the ids clear or 2 s pass.
+    */
+  def activeJobsSettled(): Seq[Int] = {
+    val sc = spark.sparkContext
+    var left = 40
+    ListenerBusAccess.drain(sc)
+    while (sc.statusTracker.getActiveJobIds().nonEmpty && left > 0) {
+      Thread.sleep(50); left -= 1; ListenerBusAccess.drain(sc)
+    }
+    sc.statusTracker.getActiveJobIds().toSeq
+  }
 }
 
 object SparkSpec {

@@ -72,6 +72,37 @@ class MedallionSpec extends SparkSpec {
       Seq("2024-03-05", "2024-03-06"))
   }
 
+  test("two days with different coins: dim_coins holds their union, each coin once") {
+    val out = tempDir("graft-dim-union")
+    // day 1 lands coins 1..60, day 2 coins 31..90: the merge reads the
+    // dim_coins path it then overwrites
+    val days = Seq("2024-03-05" -> bronzeJson(60), "2024-03-06" -> bronzeJson(90).drop(30))
+    for ((day, rows) <- days) {
+      val res = Medallion.run(spark, Readers.jsonStrings(spark, rows), out,
+        java.time.Instant.parse(s"${day}T12:00:00Z"))
+      assert(res.isRight, res.left.toOption.map(_.reason))
+    }
+    val ids = spark.read.parquet(s"$out/dim_coins").select("coin_id").as[String].collect()
+    assert(ids.length == 90 && ids.toSet == (1 to 90).map(i => s"coin_$i").toSet)
+  }
+
+  test("a failing gold sink fails the run with its own reason; no job outlives it") {
+    val out = tempDir("graft-gold-fail")
+    // a plain file where the dim_date table should be
+    Files.writeString(java.nio.file.Paths.get(s"$out/dim_date"), "not a table")
+    val res = Medallion.run(spark, Readers.jsonStrings(spark, bronzeJson(60)), out,
+      java.time.Instant.parse("2024-03-05T12:00:00Z"))
+    assert(activeJobsSettled().isEmpty, "a sibling sink's job outlived the run")
+    assert(res.isLeft)
+    val f = res.left.toOption.get
+    assert(f.stage == "gold")
+    // the dim_date write's own error, not a cancelled sibling's
+    assert(f.reason.startsWith("org.apache.hadoop.fs.ParentNotDirectoryException") &&
+      f.reason.contains(s"$out/dim_date"), f.reason)
+    assert(spark.read.json(s"$out/notifications")
+      .select("status", "stage").as[(String, String)].head() == ("FAILED", "gold"))
+  }
+
   test("the dedup window runs once per run; sink file counts unchanged") {
     val out = tempDir("graft-window-once")
     val bronze = Readers.jsonStrings(spark, endToEndRows)

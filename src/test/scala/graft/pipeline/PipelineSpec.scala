@@ -1,6 +1,9 @@
 package graft.pipeline
 
+import org.apache.spark.{JobExecutionStatus, TaskContext}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
@@ -66,6 +69,55 @@ class PipelineSpec extends SparkSpec {
     // a path no filesystem can serve is an error, not an empty table
     intercept[java.io.IOException] {
       Pipeline.readOrEmpty(spark, "nosuchfs://bucket/t", schema)
+    }
+  }
+
+  for (failing <- Seq("b", "a")) test(s"par: leg $failing fails, its sibling's job is cancelled, " +
+      "the caller gets the original error") {
+    val sc = spark.sparkContext
+    val boom = new IllegalStateException(s"leg $failing failed")
+    var longJob = -1
+    // 4 tasks that run until killed (or 30 s)
+    def long(): Long = sc.parallelize(1 to 4, 4).map { x =>
+      val deadline = System.nanoTime() + 30000000000L
+      while (!TaskContext.get().isInterrupted() && System.nanoTime() < deadline) Thread.sleep(10)
+      x
+    }.count()
+    // throw once the sibling's job is running
+    def fail(): Long = {
+      while (sc.statusTracker.getActiveJobIds().isEmpty) Thread.sleep(10)
+      longJob = sc.statusTracker.getActiveJobIds().head
+      throw boom
+    }
+    val t0 = System.nanoTime()
+    val thrown = intercept[IllegalStateException] {
+      if (failing == "b") Pipeline.par(long(), fail()) else Pipeline.par(fail(), long())
+    }
+    assert(thrown eq boom)
+    assert(activeJobsSettled().isEmpty, "a job outlived par")
+    assert(sc.statusTracker.getJobInfo(longJob).map(_.status) == Some(JobExecutionStatus.FAILED))
+    assert((System.nanoTime() - t0) / 1e9 < 20, "the sibling's job ran to its end")
+    assert(sc.getJobTags().isEmpty, "par tagged the caller's thread")
+  }
+
+  test("par: both legs see the calling thread's session, conf and local properties") {
+    val key = "graft.test.par"
+    def probe(): (SparkSession, String, String) =
+      (SparkSession.active, SQLConf.get.getConfString(key, "unset"),
+        spark.sparkContext.getLocalProperty(key))
+    // two callers in turn: a reused pool thread would still carry the first
+    for (i <- 1 to 2) {
+      val session = spark.newSession()
+      session.conf.set(key, s"conf-$i")
+      var seen: ((SparkSession, String, String), (SparkSession, String, String)) = null
+      val caller = new Thread(() => {
+        SparkSession.setActiveSession(session)
+        session.sparkContext.setLocalProperty(key, s"prop-$i")
+        seen = Pipeline.par(probe(), probe())
+      })
+      caller.start(); caller.join()
+      val want = (session, s"conf-$i", s"prop-$i")
+      assert(seen != null && seen._1 == want && seen._2 == want, s"caller $i: $seen")
     }
   }
 }
