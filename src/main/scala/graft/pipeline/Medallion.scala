@@ -29,14 +29,18 @@ import graft.sinks.Writers
   *
   * Independent sinks overlap through [[Pipeline.par]] at the two points
   * where the DAG forks: in transform, the DLQ append runs beside the
-  * dedup checkpoint; in gold, the silver append, the fact overwrite,
-  * the `dim_coins` merge/overwrite and the `dim_date` overwrite run as
-  * four legs. The legs are safe to overlap because every leg writes
-  * its own path (`dlq`, `silver`, `fact_crypto_daily`, `dim_coins`,
-  * `dim_date`; only `dim_coins` reads a path, and it is its own) and
-  * dynamic partition overwrite is a per-write option, not a session
-  * conf. The DQ gate still runs before gold and the notification
-  * last; the plans, jobs and files are the sequential form's.
+  * dedup checkpoint; in gold, the silver append, the fact overwrite
+  * and the `dim_date` overwrite run as three legs. The legs are safe
+  * to overlap because every leg writes its own path (`dlq`, `silver`,
+  * `fact_crypto_daily`, `dim_date`), dynamic partition overwrite is a
+  * per-write option, not a session conf, and each of these writes
+  * leaves its path as it was when a failing sibling cancels it (an
+  * append or a dynamic overwrite commits nothing until its job ends).
+  * The `dim_coins` merge/overwrite runs after them, alone: a static
+  * overwrite deletes the old files before its write job runs, so a
+  * cancel in that window would erase every earlier coin. The DQ gate
+  * still runs before gold and the notification last; the plans, jobs
+  * and files are the sequential form's.
   */
 object Medallion {
 
@@ -117,8 +121,8 @@ object Medallion {
         StageFailure("data_quality",
           failures.map(f => s"${f.rule} (observed=${f.observed})").mkString("; ")))
 
-    // Gold: silver append, fact with dynamic partition overwrite, dims
-    // merged — four legs, one output path each
+    // Gold: silver append, fact with dynamic partition overwrite and
+    // dim_date as three legs, one output path each; then dim_coins
     val gold: Pipeline.Stage = Pipeline.stage { s =>
       silver = s
       fact = s.withColumnRenamed("update_date", "date")
@@ -140,9 +144,9 @@ object Medallion {
         Pipeline.par(
           Writers.parquetAppendPartitioned(s, s"$outDir/silver", "update_date"),
           Writers.parquetDynamicOverwrite(fact, s"$outDir/fact_crypto_daily", "date")),
-        Pipeline.par(
-          Writers.parquetOverwrite(dimCoins, s"$outDir/dim_coins"),
-          Writers.parquetDynamicOverwrite(dimDate, s"$outDir/dim_date", "date")))
+        Writers.parquetDynamicOverwrite(dimDate, s"$outDir/dim_date", "date"))
+      // no leg: a cancel after the overwrite's delete would empty dim_coins
+      Writers.parquetOverwrite(dimCoins, s"$outDir/dim_coins")
       fact
     }
 

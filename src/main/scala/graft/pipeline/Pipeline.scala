@@ -44,10 +44,14 @@ object Pipeline {
     * session and a copy of its SparkContext local properties, so
     * `SQLConf.get`, a pooled `newSession()` and any job property the
     * caller set resolve in the leg as they do on the caller. Both legs'
-    * jobs carry one per-call job tag: the first leg to fail cancels
-    * the tag's running jobs, the call waits for the other leg to end,
-    * then rethrows the failing leg's own error — no leg outlives the
-    * call. The legs must share no output path or session-wide conf.
+    * jobs carry one per-call job tag. Once a leg fails, the call cancels
+    * the tag's jobs again and again until the other leg has ended — a
+    * cancel reaches only the jobs running at that moment, and a leg of
+    * several jobs in a row would otherwise submit its next one — then
+    * rethrows the failing leg's own error; no leg outlives the call.
+    * The legs must share no output path or session-wide conf, and a
+    * cancelled leg must leave its output as it was (a static overwrite
+    * deletes the old files before its write job runs, so it is no leg).
     */
   def par[A, B](a: => A, b: => B): (A, B) = {
     val session = SparkSession.active
@@ -64,16 +68,16 @@ object Pipeline {
         SparkSession.setActiveSession(session)
         sc.addJobTag(tag)
         try result = body
-        catch {
-          case e: Throwable =>
-            if (firstError.compareAndSet(null, e))
-              sc.cancelJobsWithTag(tag, "a sibling leg of Pipeline.par failed")
-        }
+        catch { case e: Throwable => firstError.compareAndSet(null, e) }
       }
     }
     val (la, lb) = (new Leg(a), new Leg(b))
     la.start(); lb.start()
-    la.join(); lb.join()
+    for (leg <- Seq(la, lb)) while (leg.isAlive) {
+      leg.join(20)
+      if (firstError.get != null)
+        sc.cancelJobsWithTag(tag, "a sibling leg of Pipeline.par failed")
+    }
     Option(firstError.get).foreach(e => throw e)
     (la.result, lb.result)
   }

@@ -2,7 +2,12 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
@@ -72,18 +77,39 @@ class MedallionSpec extends SparkSpec {
       Seq("2024-03-05", "2024-03-06"))
   }
 
-  test("two days with different coins: dim_coins holds their union, each coin once") {
+  test("two days with different coins: dim_coins holds their union, each coin once, " +
+      "written in no par leg") {
     val out = tempDir("graft-dim-union")
     // day 1 lands coins 1..60, day 2 coins 31..90: the merge reads the
     // dim_coins path it then overwrites
     val days = Seq("2024-03-05" -> bronzeJson(60), "2024-03-06" -> bronzeJson(90).drop(30))
-    for ((day, rows) <- days) {
+    // the job tags of each execution that writes dim_coins
+    val dimCoinsTags = new java.util.concurrent.ConcurrentLinkedQueue[Set[String]]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("Execute InsertIntoHadoopFsRelationCommand") &&
+              s.physicalPlanDescription.contains(s"$out/dim_coins") =>
+          dimCoinsTags.add(s.jobTags)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try for ((day, rows) <- days) {
       val res = Medallion.run(spark, Readers.jsonStrings(spark, rows), out,
         java.time.Instant.parse(s"${day}T12:00:00Z"))
       assert(res.isRight, res.left.toOption.map(_.reason))
+    } finally {
+      ListenerBusAccess.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
     }
     val ids = spark.read.parquet(s"$out/dim_coins").select("coin_id").as[String].collect()
     assert(ids.length == 90 && ids.toSet == (1 to 90).map(i => s"coin_$i").toSet)
+    // a par leg's job is cancelled when a sibling fails, and a cancel
+    // after the static overwrite's delete would empty dim_coins
+    assert(dimCoinsTags.size == 2, dimCoinsTags)
+    assert(dimCoinsTags.asScala.forall(!_.exists(_.startsWith("graft-par-"))),
+      s"dim_coins was written in a Pipeline.par leg: $dimCoinsTags")
   }
 
   test("a failing gold sink fails the run with its own reason; no job outlives it") {
@@ -101,6 +127,22 @@ class MedallionSpec extends SparkSpec {
       f.reason.contains(s"$out/dim_date"), f.reason)
     assert(spark.read.json(s"$out/notifications")
       .select("status", "stage").as[(String, String)].head() == ("FAILED", "gold"))
+  }
+
+  test("a gold sink failing on a later day leaves dim_coins as the earlier day wrote it") {
+    val out = tempDir("graft-gold-fail-day2")
+    def day(d: String, rows: Seq[String]) = Medallion.run(spark, Readers.jsonStrings(spark, rows),
+      out, java.time.Instant.parse(s"${d}T12:00:00Z"))
+    assert(day("2024-03-05", bronzeJson(60)).isRight)
+    // a plain file where day 1's dim_date table was; day 2 brings coins 31..90
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$out/dim_date"))
+    Files.writeString(java.nio.file.Paths.get(s"$out/dim_date"), "not a table")
+    val res = day("2024-03-06", bronzeJson(90).drop(30))
+    assert(activeJobsSettled().isEmpty, "a sibling sink's job outlived the run")
+    assert(res.left.toOption.map(_.stage) == Some("gold"), res)
+    // the failed day never reached the dim_coins overwrite: day 1's coins, each once
+    val ids = spark.read.parquet(s"$out/dim_coins").select("coin_id").as[String].collect()
+    assert(ids.sorted.toSeq == (1 to 60).map(i => s"coin_$i").sorted)
   }
 
   test("the dedup window runs once per run; sink file counts unchanged") {

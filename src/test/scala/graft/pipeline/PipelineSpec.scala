@@ -100,6 +100,34 @@ class PipelineSpec extends SparkSpec {
     assert(sc.getJobTags().isEmpty, "par tagged the caller's thread")
   }
 
+  test("par: a sibling failing between two of a leg's jobs still stops the leg's next job") {
+    val sc = spark.sparkContext
+    val boom = new IllegalStateException("leg b failed")
+    val between = new java.util.concurrent.CountDownLatch(1)
+    val ranAfter = new java.util.concurrent.atomic.AtomicInteger
+    // one quick job, a driver-side pause with no job running, then ten
+    // 1 s jobs in a row
+    def several(): Unit = {
+      sc.parallelize(1 to 4, 4).count()
+      between.countDown()
+      Thread.sleep(300)
+      for (_ <- 1 to 10) {
+        sc.parallelize(1 to 4, 4).map { x =>
+          val deadline = System.nanoTime() + 1000000000L
+          while (!TaskContext.get().isInterrupted() && System.nanoTime() < deadline) Thread.sleep(10)
+          x
+        }.count()
+        ranAfter.incrementAndGet()
+      }
+    }
+    // fail in the pause, when the tag has no job to cancel yet
+    def fail(): Unit = { between.await(); throw boom }
+    val thrown = intercept[IllegalStateException](Pipeline.par(several(), fail()))
+    assert(thrown eq boom)
+    assert(ranAfter.get == 0, s"${ranAfter.get} of the leg's jobs ran to their end after the failure")
+    assert(activeJobsSettled().isEmpty, "a job outlived par")
+  }
+
   test("par: both legs see the calling thread's session, conf and local properties") {
     val key = "graft.test.par"
     def probe(): (SparkSession, String, String) =
