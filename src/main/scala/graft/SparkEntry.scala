@@ -1223,7 +1223,8 @@ object SparkEntry {
       case Right(o) => o
       case Left(f) => sys.error(s"medallion pipeline failed at ${f.stage}: ${f.reason}")
     }
-    require(out.fact != null) // Outputs fully populated on Right
+    // Outputs (silver, dlq, fact) fully populated on Right
+    require(Seq(out.silver, out.dlq, out.fact).forall(_ != null))
 
     // aggregate what landed on disk, not the in-memory frames
     val goldAgg = spark.read.parquet(s"$tmp/out/fact_crypto_daily")

@@ -1,6 +1,7 @@
 package graft.dq
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** DQDL-style rule engine (ref: glue/data_quality_dqdl.py:67-129) +
@@ -13,12 +14,17 @@ import org.apache.spark.sql.functions._
   *  - row-level outcomes + routing (O-41): each row annotated
   *    Passed/Failed with the failing rule names, then split.
   *
-  * Every rule evaluates in ONE query and one collect (the reference's
-  * DQDL engine also single-passes): the scan aggregates and the
-  * uniqueness-family fractions (one stacked two-level aggregate
-  * covering every uniqueness column — N rules ≠ N scans) are crossed
-  * as two single-row frames. The metric row that reaches the driver is
-  * O(#rules), never O(data).
+  * Dataset-level verdicts take one pass over the data for the whole
+  * ruleset, as the reference's DQDL engine does, in either of two forms
+  * over the same metric definitions and the same verdict function:
+  *  - [[Rules.evaluate]]: one query and one collect. The scan
+  *    aggregates and the uniqueness-family fractions (one stacked
+  *    two-level aggregate covering every uniqueness column — N rules ≠
+  *    N scans) are crossed as two single-row frames.
+  *  - [[Rules.observe]]: no query at all. The metrics ride, as one
+  *    `Observation`, on a plan the caller runs anyway (the medallion's
+  *    dedup checkpoint), like Deequ's analyzers sharing one scan.
+  * The metric row that reaches the driver is O(#rules), never O(data).
   */
 sealed trait DqRule {
   def name: String
@@ -94,73 +100,118 @@ object Rules {
         UniquenessAbove("coin_id", 0.99))
   }
 
+  /** The scanned metrics a ruleset needs, one aggregate per key (rules
+    * that need the same metric share it). Both evaluation modes
+    * aggregate exactly these columns.
+    */
+  private def scanMetrics(rules: Seq[DqRule]): Seq[(String, Column)] = {
+    // try_divide: completeness of empty input is NULL (→ NaN), not an
+    // ANSI divide-by-zero error
+    def completeness(c: String) =
+      s"compl_$c" -> try_divide(count(col(c)).cast("double"), count(lit(1)))
+    rules.flatMap {
+      case ColumnExists(_) | UniquenessAbove(_, _) => Nil
+      case IsComplete(c) => Seq(completeness(c))
+      case CompletenessAbove(c, _) => Seq(completeness(c))
+      case ColumnValues(c, p, d) =>
+        Seq(s"cv_${c}_$d" -> sum(when(p(col(c)), 0L).otherwise(1L)).cast("double"))
+      case RowCountBetween(_, _) => Seq("size" -> count(lit(1)).cast("double"))
+      case IsPrimaryKey(c) => Seq(completeness(c))
+    }.distinctBy(_._1)
+  }
+
+  private def uniquenessColumns(rules: Seq[DqRule]): Seq[String] =
+    rules.collect {
+      case UniquenessAbove(c, _) => c
+      case IsPrimaryKey(c) => c
+    }.distinct
+
+  /** The verdict of every rule, from the metrics by key: the scanned
+    * ones, and each uniqueness fraction as `uniq_<column>`. A metric
+    * that is missing or null reads as over zero rows: size 0, the
+    * others NaN.
+    */
+  private def verdicts(
+      rules: Seq[DqRule], schemaCols: Set[String], metrics: Map[String, Any]): Seq[RuleResult] = {
+    def metric(k: String): Double = metrics.get(k).flatMap(Option(_))
+      .fold(if (k == "size") 0.0 else Double.NaN)(_.asInstanceOf[Double])
+    def uniqueness(c: String) = metric(s"uniq_$c")
+    rules.map { rule =>
+      val (passed, observed) = rule match {
+        case ColumnExists(c) => (schemaCols.contains(c), if (schemaCols.contains(c)) 1.0 else 0.0)
+        case IsComplete(c) =>
+          val v = metric(s"compl_$c"); (v == 1.0, v)
+        case CompletenessAbove(c, t) =>
+          val v = metric(s"compl_$c"); (v > t, v)
+        case ColumnValues(c, _, d) =>
+          val bad = metric(s"cv_${c}_$d"); (bad == 0.0, bad)
+        case RowCountBetween(lo, hi) =>
+          val n = metric("size"); (n >= lo && n <= hi, n)
+        case IsPrimaryKey(c) =>
+          val compl = metric(s"compl_$c"); val u = uniqueness(c)
+          (compl == 1.0 && u == 1.0, u)
+        case UniquenessAbove(c, t) =>
+          val u = uniqueness(c); (u > t, u)
+      }
+      RuleResult(rule.name, rule.description, passed, observed)
+    }
+  }
+
   /** Dataset-level evaluation (O-39/O-40). One query computes every
     * metric: the single-row scan aggregate crossed with the uniqueness
     * fractions folded into one `column → fraction` map row. Returns
     * RuleResults (driver-side, O(#rules)).
     */
   def evaluate(df: DataFrame, rules: Seq[DqRule]): Seq[RuleResult] = {
-    val schemaCols = df.columns.toSet
-
-    // scanned metrics needed, keyed for dedup across rules
-    case class Need(key: String, agg: Column)
-    // try_divide: completeness of empty input is NULL (→ NaN), not an
-    // ANSI divide-by-zero error
-    def completeness(c: String) =
-      Need(s"compl_$c", try_divide(count(col(c)).cast("double"), count(lit(1))))
-    val needs = rules.flatMap {
-      case ColumnExists(_) => Nil
-      case IsComplete(c) => Seq(completeness(c))
-      case CompletenessAbove(c, _) => Seq(completeness(c))
-      case ColumnValues(c, p, d) =>
-        Seq(Need(s"cv_${c}_$d", sum(when(p(col(c)), 0L).otherwise(1L)).cast("double")))
-      case RowCountBetween(_, _) => Seq(Need("size", count(lit(1)).cast("double")))
-      case IsPrimaryKey(c) => Seq(completeness(c))
-      case UniquenessAbove(_, _) => Nil
-    }.distinct
-
-    val uniqCols = rules.collect {
-      case UniquenessAbove(c, _) => c
-      case IsPrimaryKey(c) => c
-    }.distinct
+    val scans = scanMetrics(rules)
+    val uniqCols = uniquenessColumns(rules)
 
     // one single-row frame per metric family; crossing them keeps the
     // whole ruleset to one query and one collect of one row
-    val scanRow = Option.when(needs.nonEmpty)(df.agg(
-      needs.head.agg.as(needs.head.key), needs.tail.map(n => n.agg.as(n.key)): _*))
+    val scanRow = Option.when(scans.nonEmpty)(df.agg(
+      scans.head._2.as(scans.head._1), scans.tail.map { case (k, m) => m.as(k) }: _*))
     val uniqRow = Option.when(uniqCols.nonEmpty)(
       Analyzers.uniquenessFractions(df, uniqCols)
         .agg(map_from_entries(collect_list(struct(col("c"), col("u")))).as("__uniq")))
     val row = (scanRow ++ uniqRow).reduceOption(_.crossJoin(_)).map(_.head())
 
-    def orNaN(v: Any): Double = Option(v).map(_.asInstanceOf[Double]).getOrElse(Double.NaN)
-    val metricRow: Map[String, Double] = row.fold(Map.empty[String, Double])(r =>
-      needs.map(n => n.key -> orNaN(r.getAs[Any](n.key))).toMap)
-    // empty input → empty map; a missing or null fraction reads as NaN
-    val uniqueness: Map[String, Double] =
-      row.filter(_ => uniqCols.nonEmpty)
-        .fold(Map.empty[String, Double])(r => r.getMap[String, Any](r.fieldIndex("__uniq"))
-          .toMap.map { case (c, u) => c -> orNaN(u) })
-        .withDefaultValue(Double.NaN)
+    val metrics = row.fold(Map.empty[String, Any]) { r =>
+      val uniq = if (uniqCols.isEmpty) Map.empty[String, Any]
+        else r.getMap[String, Any](r.fieldIndex("__uniq"))
+      r.getValuesMap[Any](scans.map(_._1)) ++ uniq.map { case (c, u) => s"uniq_$c" -> u }
+    }
+    verdicts(rules, df.columns.toSet, metrics)
+  }
 
-    rules.map { rule =>
-      val (passed, observed) = rule match {
-        case ColumnExists(c) => (schemaCols.contains(c), if (schemaCols.contains(c)) 1.0 else 0.0)
-        case IsComplete(c) =>
-          val v = metricRow(s"compl_$c"); (v == 1.0, v)
-        case CompletenessAbove(c, t) =>
-          val v = metricRow(s"compl_$c"); (v > t, v)
-        case ColumnValues(c, _, d) =>
-          val bad = metricRow(s"cv_${c}_$d"); (bad == 0.0, bad)
-        case RowCountBetween(lo, hi) =>
-          val n = metricRow("size"); (n >= lo && n <= hi, n)
-        case IsPrimaryKey(c) =>
-          val compl = metricRow(s"compl_$c"); val u = uniqueness(c)
-          (compl == 1.0 && u == 1.0, u)
-        case UniquenessAbove(c, t) =>
-          val u = uniqueness(c); (u > t, u)
-      }
-      RuleResult(rule.name, rule.description, passed, observed)
+  /** Observed evaluation: the ruleset's metrics ride on `df`'s own plan
+    * through one [[org.apache.spark.sql.Observation]], so the action that
+    * runs the returned frame (a checkpoint, a write) computes them and no
+    * query of its own is needed. Uniqueness comes from a per-row
+    * `count(1) over (partition by cast(c as string))` helper column,
+    * dropped again above the observation; it gives the value of
+    * [[evaluate]]'s stacked group-by. Call the returned reader only after
+    * an action over the frame has succeeded: an observation whose plan
+    * never ran blocks its reader forever.
+    */
+  def observe(df: DataFrame, rules: Seq[DqRule]): (DataFrame, () => Seq[RuleResult]) = {
+    val schemaCols = df.columns.toSet
+    val uniq = uniquenessColumns(rules).zipWithIndex.map { case (c, i) => c -> s"__dq_n$i" }
+    val metrics = scanMetrics(rules) ++ uniq.map { case (c, n) =>
+      s"uniq_$c" -> try_divide(
+        sum(when(col(n) === 1, 1L).otherwise(0L)).cast("double"), count(lit(1)).cast("double"))
+    }
+    if (metrics.isEmpty) (df, () => verdicts(rules, schemaCols, Map.empty))
+    else {
+      val observation = Observation()
+      val observed = uniq.foldLeft(df) { case (d, (c, n)) =>
+          d.withColumn(n, count(lit(1)).over(Window.partitionBy(col(c).cast("string"))))
+        }
+        .observe(observation, metrics.head._2.as(metrics.head._1),
+          metrics.tail.map { case (k, m) => m.as(k) }: _*)
+        .drop(uniq.map(_._2): _*)
+      // an action the optimizer proved empty drops the observation, and
+      // the map comes back empty: zero rows
+      (observed, () => verdicts(rules, schemaCols, observation.get))
     }
   }
 
@@ -188,11 +239,11 @@ object Rules {
   }
 
   /** DQ gate (O-71; ref: glue/data_quality_pydeequ.py:101-133 raises on
-    * failure): Left(failed results) halts the pipeline, Right passes
-    * the frame through.
+    * failure) over results from either mode: Left(failed results) halts
+    * the pipeline, Right passes the frame through.
     */
-  def gate(df: DataFrame, rules: Seq[DqRule]): Either[Seq[RuleResult], DataFrame] = {
-    val failed = evaluate(df, rules).filterNot(_.passed)
+  def gate(df: DataFrame, results: Seq[RuleResult]): Either[Seq[RuleResult], DataFrame] = {
+    val failed = results.filterNot(_.passed)
     if (failed.isEmpty) Right(df) else Left(failed)
   }
 

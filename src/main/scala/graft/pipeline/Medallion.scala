@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,14 +18,18 @@ import graft.sinks.Writers
   *
   * The deduplicated Silver candidate is the single materialization
   * point: the transform stage computes it once with
-  * `localCheckpoint(true)`, and the DQ gate, the silver append, the
-  * fact overwrite, `dim_coins` and `dim_date` all read that one frame
-  * instead of each re-running the Bronze scan, the casts, the schema
-  * split and the dedup window. `localCheckpoint`, not `persist`: the
-  * checkpoint keeps the partitioning AQE coalesced the dedup shuffle
-  * to, while a cached plan keeps every shuffle partition (AQE does not
-  * coalesce cached plans by default), which doubles the files each
-  * day's silver and fact writes commit.
+  * `localCheckpoint(true)`, and the silver append, the fact overwrite,
+  * `dim_coins` and `dim_date` all read that one frame instead of each
+  * re-running the Bronze scan, the casts, the schema split and the
+  * dedup window. The DQ gate runs no query at all: the ruleset's
+  * metrics and the input row count ride on the checkpoint's own plan
+  * as observations ([[Rules.observe]]), so the checkpoint job computes
+  * them, and the gate and the empty-input guard read them from there.
+  * `localCheckpoint`, not `persist`: the checkpoint keeps the
+  * partitioning AQE coalesced the dedup shuffle to, while a cached plan
+  * keeps every shuffle partition (AQE does not coalesce cached plans by
+  * default), which doubles the files each day's silver and fact writes
+  * commit.
   *
   * Independent sinks overlap through [[Pipeline.par]] at the two points
   * where the DAG forks: in transform, the DLQ append runs beside the
@@ -44,12 +48,9 @@ import graft.sinks.Writers
   */
 object Medallion {
 
-  final case class Outputs(
-      silver: DataFrame,
-      dlq: DataFrame,
-      fact: DataFrame,
-      dimCoins: DataFrame,
-      dimDate: DataFrame)
+  /** The run's in-process frames. No dims: a plan over `dim_coins` reads
+    * files the run's overwrite deletes; read the written tables instead. */
+  final case class Outputs(silver: DataFrame, dlq: DataFrame, fact: DataFrame)
 
   /** Cast projection spec Bronze → Silver
     * (ref: glue/data_transform_s3.py:113-126).
@@ -88,36 +89,50 @@ object Medallion {
       dqRules: Seq[graft.dq.DqRule] = Rules.referenceCryptoRuleset)
       : Either[StageFailure, Outputs] = {
     // Pipeline.run threads ONE frame through the DAG; the medallion
-    // layers that fork off it (DLQ, dims) are captured as the stages
-    // run and assembled into Outputs at the end.
+    // layers that fork off it (DLQ, the DQ verdicts) are captured as the
+    // stages run and assembled into Outputs at the end.
     var dlq: DataFrame = null
     var silver: DataFrame = null
     var fact: DataFrame = null
-    var dimCoins: DataFrame = null
-    var dimDate: DataFrame = null
+    var dqResults: () => Seq[graft.dq.RuleResult] = null
 
     // Transform: projection + metadata + schema-enforcement split + dedup;
     // the DLQ append and the dedup checkpoint read disjoint halves of
     // the split, so they run as two legs
     val transform: Pipeline.Stage = df =>
-      Pipeline.nonEmpty("transform")(df).map { df =>
+      // no Bronze files: no schema to project and nothing to scan
+      // (O-68, ref: glue/data_transform_s3.py:63-66)
+      if (df.schema.isEmpty) Left(StageFailure("transform", "empty input"))
+      else {
         val projected = Transform.withMetadata(
           Transform.castProjection(df, silverSpec), Some(now))
-        val (valid, bad) = Transform.schemaSplit(
-          projected, graft.schema.Schemas.cryptoRequired)
+        val required = graft.schema.Schemas.cryptoRequired
+        // only the dedup leg's half carries the count, so only the
+        // checkpoint's query fills the observation
+        val inputRows = Observation()
+        val (valid, _) = Transform.schemaSplit(
+          projected.observe(inputRows, count(lit(1)).as("n")), required)
+        val (_, bad) = Transform.schemaSplit(projected, required)
         dlq = bad
-        Pipeline.par(
-          Writers.dlqAppend(bad, s"$outDir/dlq"),
+        val (deduped, results) = Rules.observe(
           Transform.dedupLatest(
-            valid,
+            // one shuffle on coin_id serves both the dedup window and the
+            // primary-key window (a run holds one update_date)
+            valid.repartition(col("coin_id")),
             partitionCols = Seq("coin_id", "update_date"),
-            orderCols = Seq(col("last_updated_ts").desc, col("market_cap_rank").asc_nulls_last))
-            .localCheckpoint(true))._2
+            orderCols = Seq(col("last_updated_ts").desc, col("market_cap_rank").asc_nulls_last)),
+          dqRules)
+        val candidate = Pipeline.par(
+          Writers.dlqAppend(bad, s"$outDir/dlq"), deduped.localCheckpoint(true))._2
+        // par returned, so the checkpoint ran and filled both observations;
+        // where planning or AQE proved the input empty, no count is reported
+        if (inputRows.get.getOrElse("n", 0L) == 0L) Left(StageFailure("transform", "empty input"))
+        else { dqResults = results; Right(candidate) }
       }
 
-    // DQ gate (ref DQDL ruleset) on the deduped silver candidate
+    // DQ gate (ref DQDL ruleset) on the metrics the checkpoint observed
     val dataQuality: Pipeline.Stage = df =>
-      Rules.gate(df, dqRules).left.map(failures =>
+      Rules.gate(df, dqResults()).left.map(failures =>
         StageFailure("data_quality",
           failures.map(f => s"${f.rule} (observed=${f.observed})").mkString("; ")))
 
@@ -127,7 +142,7 @@ object Medallion {
       silver = s
       fact = s.withColumnRenamed("update_date", "date")
         .filter(col("coin_id").isNotNull)
-      dimCoins = Star.mergeDim(
+      val dimCoins = Star.mergeDim(
         Pipeline.readOrEmpty(spark, s"$outDir/dim_coins",
           StructType(Seq(
             StructField("coin_id", StringType),
@@ -139,7 +154,7 @@ object Medallion {
       // one partition per date: a run replaces only its own dates, so
       // earlier days keep their rows (the reference's union + distinct
       // at O(day) instead of O(history)), and a rerun is idempotent
-      dimDate = Star.dimDate(fact, "date")
+      val dimDate = Star.dimDate(fact, "date")
       Pipeline.par(
         Pipeline.par(
           Writers.parquetAppendPartitioned(s, s"$outDir/silver", "update_date"),
@@ -153,6 +168,6 @@ object Medallion {
     Pipeline.runNotified(spark, "medallion", bronze,
       Seq("transform" -> transform, "data_quality" -> dataQuality, "gold" -> gold),
       s"$outDir/notifications")
-      .map(_ => Outputs(silver, dlq, fact, dimCoins, dimDate))
+      .map(_ => Outputs(silver, dlq, fact))
   }
 }

@@ -28,12 +28,6 @@ object Pipeline {
       case (left, _) => left
     }
 
-  /** O-68: empty-input early exit (ref: glue/data_transform_s3.py:63-66)
-    * — `isEmpty` (limit-1 scan) instead of the reference's full count.
-    */
-  def nonEmpty(name: String): Stage = df =>
-    if (df.isEmpty) Left(StageFailure(name, "empty input")) else Right(df)
-
   /** Lift a total transform into a stage. */
   def stage(f: DataFrame => DataFrame): Stage = df => Right(f(df))
 

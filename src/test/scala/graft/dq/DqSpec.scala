@@ -1,5 +1,8 @@
 package graft.dq
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.CollectMetricsExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -99,9 +102,59 @@ class DqSpec extends SparkSpec {
       (false, 0.0), (false, 0.0)))
   }
 
+  test("Rules.observe: observed metrics equal Rules.evaluate, bit for bit") {
+    object Plans extends AdaptiveSparkPlanHelper
+    val rules = Seq(
+      ColumnExists("coin_id"), ColumnExists("nope"),
+      IsComplete("coin_id"), IsComplete("current_price"),
+      CompletenessAbove("current_price", 0.5),
+      ColumnValues("current_price", _ > 0, "gt_0"),
+      ColumnValues("market_cap", _ >= 500, "ge_500"),
+      RowCountBetween(1, 10),
+      UniquenessAbove("coin_id", 0.5), IsPrimaryKey("coin_id"),
+      // uniqueness over non-key columns
+      UniquenessAbove("market_cap", 0.5), IsPrimaryKey("current_price"))
+    def bits(rs: Seq[RuleResult]) =
+      rs.map(r => (r.rule, r.passed, java.lang.Double.doubleToLongBits(r.observed)))
+    def observedPlans(run: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+      val plans = executedPlans(run)
+      assert(plans.size == 1, s"${plans.size} query executions")
+      plans.filter(Plans.find(_)(_.isInstanceOf[CollectMetricsExec]).isDefined)
+    }
+    def check(what: String, df: DataFrame): Unit = {
+      val (observed, results) = Rules.observe(df, rules)
+      assert(observed.columns.toSeq == df.columns.toSeq, what)
+      var rows = 0L
+      // the metrics fire in the caller's own action
+      assert(observedPlans { rows = observed.collect().length.toLong }.size == 1, what)
+      assert(rows == df.count(), what)
+      assert(bits(results()) == bits(Rules.evaluate(df, rules)), what)
+    }
+
+    check("coins", coins)
+    check("all-null key", coins.withColumn("coin_id", lit(null).cast("string")))
+    // every row filtered out at run time: the metrics fire over zero rows
+    check("zero rows", coins.localCheckpoint().filter(col("market_cap") > 1000000L))
+    check("provably empty input", coins.filter(lit(false)))
+    // the caller's action is provably empty: the optimizer drops the
+    // observation, no metric fires, and the reader sees zero rows
+    val (observed, results) = Rules.observe(coins, rules)
+    assert(observedPlans(observed.limit(0).collect()).isEmpty)
+    assert(bits(results()) == bits(Rules.evaluate(coins.limit(0), rules)))
+    for (seed <- 1 to 6) {
+      val r = new scala.util.Random(seed)
+      def maybe[T](v: => T): Option[T] = if (r.nextInt(6) == 0) None else Some(v)
+      // few distinct values, so duplicates and once-only values mix
+      val rows = Seq.fill(1 + r.nextInt(60))((
+        maybe(s"c${r.nextInt(25)}"), maybe(r.nextInt(40) - 5.0), maybe(r.nextInt(30) * 100L)))
+      check(s"seed $seed", rows.toDF("coin_id", "current_price", "market_cap"))
+    }
+  }
+
   test("Rules.gate: fails the pipeline on violated Error-level rules") {
-    assert(Rules.gate(coins, Seq(RowCountBetween(1, 10))).isRight)
-    val left = Rules.gate(coins, Seq(ColumnValues("current_price", _ > 0, "gt_0")))
+    assert(Rules.gate(coins, Rules.evaluate(coins, Seq(RowCountBetween(1, 10)))).isRight)
+    val left = Rules.gate(coins,
+      Rules.evaluate(coins, Seq(ColumnValues("current_price", _ > 0, "gt_0"))))
     assert(left.isLeft)
     assert(left.left.toOption.get.head.rule == "ColumnValues_current_price_gt_0")
   }
@@ -136,10 +189,11 @@ class DqSpec extends SparkSpec {
     // 60 clean unique coins → every rule passes (RowCount 50..150)
     val clean = (1 to 60).map(i => (s"coin_$i", s"c$i", s"name$i", i * 1.0, i * 1000000L))
       .toDF("coin_id", "symbol", "name", "current_price", "market_cap")
-    assert(Rules.gate(clean, Rules.referenceCryptoRuleset).isRight)
+    assert(Rules.gate(clean, Rules.evaluate(clean, Rules.referenceCryptoRuleset)).isRight)
     // too few rows → RowCount rule fails
     val small = clean.limit(10)
-    val failures = Rules.gate(small, Rules.referenceCryptoRuleset).left.toOption.get
+    val failures =
+      Rules.gate(small, Rules.evaluate(small, Rules.referenceCryptoRuleset)).left.toOption.get
     assert(failures.exists(_.rule == "RowCount_50_150"))
   }
 

@@ -6,7 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.{CollectMetricsExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
@@ -162,6 +165,73 @@ class MedallionSpec extends SparkSpec {
       finally walk.close()
     }
     assert(Seq("silver", "fact_crypto_daily", "dim_coins").map(dataFiles) == Seq(1L, 1L, 1L))
+  }
+
+  test("DQ metrics ride the dedup checkpoint: one observed plan, no gate query") {
+    val out = tempDir("graft-observed-gate")
+    val bronze = Readers.jsonStrings(spark, endToEndRows)
+    var res: Either[StageFailure, Medallion.Outputs] = null
+    val plans = executedPlans {
+      res = Medallion.run(spark, bronze, out, java.time.Instant.parse("2024-03-05T12:00:00Z"))
+    }
+    assert(res.isRight, res.left.toOption.map(_.reason))
+    object Plans extends AdaptiveSparkPlanHelper
+    def has(p: SparkPlan)(f: SparkPlan => Boolean) = Plans.find(p)(f).isDefined
+    val observed = plans.filter(has(_)(_.isInstanceOf[CollectMetricsExec]))
+    assert(observed.size == 1, s"${observed.size} executions observe metrics")
+    assert(has(observed.head)(_.isInstanceOf[WindowExec]), "the observation is not on the dedup")
+    // a gate query: aggregates over the checkpoint and writes nothing
+    val gates = plans.filter(p => has(p)(_.isInstanceOf[RDDScanExec]) &&
+      has(p)(_.isInstanceOf[BaseAggregateExec]) && !has(p)(_.isInstanceOf[DataWritingCommandExec]))
+    assert(gates.isEmpty, gates.map(_.treeString).mkString("\n"))
+  }
+
+  test("empty input, with or without a schema, stops at transform") {
+    val dlqSchema = "raw_data STRING, error_reason STRING, timestamp STRING, validation_type STRING"
+    val shapes = Seq(
+      // no Bronze files: nothing to infer a schema from
+      "no schema" -> Readers.jsonStrings(spark, Nil),
+      // provably empty: AQE swaps the plan over the input for an empty
+      // relation, and the input count goes unreported
+      "pruned" -> Readers.jsonStrings(spark, bronzeJson(5)).limit(0),
+      // empty only at run time: the observed count is zero
+      "zero rows" -> Readers.jsonStrings(spark, bronzeJson(5)).filter(col("market_cap_rank") < 0))
+    for ((shape, bronze) <- shapes) {
+      val out = tempDir("graft-empty")
+      var res: Either[StageFailure, Medallion.Outputs] = null
+      val plans = executedPlans {
+        res = Medallion.run(spark, bronze, out, java.time.Instant.parse("2024-03-05T12:00:00Z"))
+      }
+      assert(res == Left(StageFailure("transform", "empty input")), shape)
+      if (shape == "no schema") assert(plans.size == 1, s"$shape: only the notification runs")
+      for (t <- Seq("silver", "fact_crypto_daily", "dim_coins", "dim_date"))
+        assert(!new java.io.File(s"$out/$t").exists(), s"$shape wrote $t")
+      // the DLQ leg may land a zero-row file, never a row
+      if (new java.io.File(s"$out/dlq").exists())
+        assert(spark.read.schema(dlqSchema).json(s"$out/dlq").count() == 0, shape)
+      assert(spark.read.json(s"$out/notifications").select("status", "stage")
+        .as[(String, String)].collect().toSeq == Seq(("FAILED", "transform")), shape)
+    }
+  }
+
+  test("a failing DLQ sink fails transform; no DQ observation is awaited") {
+    val out = tempDir("graft-dlq-fail")
+    // a plain file where the DLQ table should be: the DLQ leg fails and
+    // cancels the checkpoint leg, so its observations may never fill
+    Files.writeString(java.nio.file.Paths.get(s"$out/dlq"), "not a table")
+    var res: Either[StageFailure, Medallion.Outputs] = null
+    val run = new Thread(() => res = Medallion.run(spark, Readers.jsonStrings(spark, endToEndRows),
+      out, java.time.Instant.parse("2024-03-05T12:00:00Z")))
+    run.setDaemon(true)
+    run.start()
+    run.join(120000)
+    assert(!run.isAlive, "the run still waits after 120 s")
+    assert(activeJobsSettled().isEmpty, "a sibling's job outlived the run")
+    val f = res.left.toOption.get
+    assert(f.stage == "transform" && f.reason.contains(s"$out/dlq"), f)
+    assert(!new java.io.File(s"$out/fact_crypto_daily").exists())
+    assert(spark.read.json(s"$out/notifications")
+      .select("status", "stage").as[(String, String)].head() == ("FAILED", "transform"))
   }
 
   test("silver output is viewable as a typed Dataset[CryptoTick]") {

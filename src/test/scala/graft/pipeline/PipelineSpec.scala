@@ -14,7 +14,7 @@ class PipelineSpec extends SparkSpec {
   test("run composes stages and short-circuits on failure") {
     val df = Seq(1, 2, 3).toDF("v")
     val ok = Pipeline.run(df, Seq(
-      "nonEmpty" -> Pipeline.nonEmpty("nonEmpty"),
+      "keep" -> (df => Right(df)),
       "double" -> Pipeline.stage(_.withColumn("v", col("v") * 2))))
     assert(ok.isRight)
     assert(ok.toOption.get.agg(sum("v")).as[Long].head() == 12)
@@ -32,11 +32,6 @@ class PipelineSpec extends SparkSpec {
     assert(out.isLeft)
     assert(out.left.toOption.get.stage == "boom")
     assert(out.left.toOption.get.reason.contains("kaput"))
-  }
-
-  test("nonEmpty gates empty inputs") {
-    val empty = spark.emptyDataFrame
-    assert(Pipeline.nonEmpty("s")(empty).isLeft)
   }
 
   test("runNotified appends a SUCCEEDED/FAILED record per run") {
