@@ -51,14 +51,6 @@ object Star {
   /** O-43/O-46: dim dedupe-merge. Keyed `dropDuplicates` keeps the
     * first-seen row per key deterministically given `orderCols`; the
     * reference's `union().distinct()` is the keyless special case.
-    *
-    * `Medallion.run` reads `existing` from the same path it overwrites
-    * with the result. Spark 4.1 allows that only because AQE runs the
-    * `dropDuplicates` exchange — which scans every old file — as its
-    * own stage before the write command deletes the old files; a plan
-    * with no exchange between the scan and the write would read files
-    * the overwrite already removed. `MedallionSpec`'s two-day union
-    * test pins it.
     */
   def mergeDim(existing: DataFrame, incoming: DataFrame, keyCols: Seq[String]): DataFrame =
     existing.unionByName(incoming).dropDuplicates(keyCols)

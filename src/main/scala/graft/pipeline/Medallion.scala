@@ -33,23 +33,25 @@ import graft.sinks.Writers
   *
   * Independent sinks overlap through [[Pipeline.par]] at the two points
   * where the DAG forks: in transform, the DLQ append runs beside the
-  * dedup checkpoint; in gold, the silver append, the fact overwrite
-  * and the `dim_date` overwrite run as three legs. The legs are safe
-  * to overlap because every leg writes its own path (`dlq`, `silver`,
-  * `fact_crypto_daily`, `dim_date`), dynamic partition overwrite is a
-  * per-write option, not a session conf, and each of these writes
-  * leaves its path as it was when a failing sibling cancels it (an
-  * append or a dynamic overwrite commits nothing until its job ends).
-  * The `dim_coins` merge/overwrite runs after them, alone: a static
-  * overwrite deletes the old files before its write job runs, so a
-  * cancel in that window would erase every earlier coin. The DQ gate
-  * still runs before gold and the notification last; the plans, jobs
-  * and files are the sequential form's.
+  * dedup checkpoint; in gold, the silver append, the fact overwrite,
+  * the `dim_date` overwrite and the `dim_coins` merge run as four legs.
+  * The legs are safe to overlap because every leg writes its own path
+  * (`dlq`, `silver`, `fact_crypto_daily`, `dim_date`, `dim_coins`),
+  * dynamic partition overwrite is a per-write option, not a session
+  * conf, and each of these writes leaves its path as it was when a
+  * failing sibling cancels it: an append or a dynamic overwrite
+  * commits nothing until its job ends, and `dim_coins` is written into
+  * a staging directory and swapped in ([[Writers.stagedOverwrite]]),
+  * so its write never deletes the table it merges from. The DQ gate
+  * still runs before gold. The notification record is the last step
+  * and runs no Spark job: it is written in-process as one file
+  * ([[Pipeline.runNotified]]), so the run ends when its last sink
+  * commits.
   */
 object Medallion {
 
   /** The run's in-process frames. No dims: a plan over `dim_coins` reads
-    * files the run's overwrite deletes; read the written tables instead. */
+    * files the run's swap moves away; read the written tables instead. */
   final case class Outputs(silver: DataFrame, dlq: DataFrame, fact: DataFrame)
 
   /** Cast projection spec Bronze → Silver
@@ -136,14 +138,20 @@ object Medallion {
         StageFailure("data_quality",
           failures.map(f => s"${f.rule} (observed=${f.observed})").mkString("; ")))
 
-    // Gold: silver append, fact with dynamic partition overwrite and
-    // dim_date as three legs, one output path each; then dim_coins
+    // Gold: silver append, fact and dim_date by dynamic partition
+    // overwrite, and the staged dim_coins merge as four legs, one output
+    // path each
     val gold: Pipeline.Stage = Pipeline.stage { s =>
       silver = s
       fact = s.withColumnRenamed("update_date", "date")
         .filter(col("coin_id").isNotNull)
+      val dimCoinsPath = s"$outDir/dim_coins"
+      // finish a swap a crash interrupted before the merge plans its
+      // read: mid-swap the root is missing, the read would come back
+      // empty, and the merge would drop every earlier coin
+      Writers.recoverStagedSwap(spark, dimCoinsPath)
       val dimCoins = Star.mergeDim(
-        Pipeline.readOrEmpty(spark, s"$outDir/dim_coins",
+        Pipeline.readOrEmpty(spark, dimCoinsPath,
           StructType(Seq(
             StructField("coin_id", StringType),
             StructField("symbol", StringType),
@@ -159,9 +167,9 @@ object Medallion {
         Pipeline.par(
           Writers.parquetAppendPartitioned(s, s"$outDir/silver", "update_date"),
           Writers.parquetDynamicOverwrite(fact, s"$outDir/fact_crypto_daily", "date")),
-        Writers.parquetDynamicOverwrite(dimDate, s"$outDir/dim_date", "date"))
-      // no leg: a cancel after the overwrite's delete would empty dim_coins
-      Writers.parquetOverwrite(dimCoins, s"$outDir/dim_coins")
+        Pipeline.par(
+          Writers.parquetDynamicOverwrite(dimDate, s"$outDir/dim_date", "date"),
+          Writers.stagedOverwrite(dimCoins, dimCoinsPath)))
       fact
     }
 

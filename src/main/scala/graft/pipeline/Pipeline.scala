@@ -44,8 +44,11 @@ object Pipeline {
     * several jobs in a row would otherwise submit its next one — then
     * rethrows the failing leg's own error; no leg outlives the call.
     * The legs must share no output path or session-wide conf, and a
-    * cancelled leg must leave its output as it was (a static overwrite
-    * deletes the old files before its write job runs, so it is no leg).
+    * cancelled leg must leave its output as it was: an append and a
+    * dynamic overwrite commit nothing until their job ends, while a
+    * static overwrite deletes the old files before its write job runs,
+    * so it is no leg — [[graft.sinks.Writers.stagedOverwrite]] is its
+    * leg-safe form.
     */
   def par[A, B](a: => A, b: => B): (A, B) = {
     val session = SparkSession.active
@@ -98,7 +101,10 @@ object Pipeline {
   /** Run the DAG, then append one notification record to a JSON sink —
     * the notify-topic analogue; downstream consumers tail the path the
     * way the reference's subscribers consume the SNS topic. Returns the
-    * run result unchanged so callers still branch on it.
+    * run result so callers still branch on it; a record that cannot be
+    * written turns a successful run into `Left(StageFailure("notify",
+    * …))` and leaves a failed run's own `Left` as it was, so the call
+    * never throws after the stages committed their sinks.
     */
   def runNotified(
       spark: SparkSession,
@@ -107,12 +113,37 @@ object Pipeline {
       stages: Seq[(String, Stage)],
       notifyPath: String): Either[StageFailure, DataFrame] = {
     val result = run(input, stages)
-    import spark.implicits._
     val note = result match {
       case Right(_) => RunNotification(pipelineName, "SUCCEEDED", "", "")
       case Left(f) => RunNotification(pipelineName, "FAILED", f.stage, f.reason)
     }
-    Seq(note).toDS().coalesce(1).write.mode("append").json(notifyPath)
-    result
+    Try(appendNotification(spark, note, notifyPath)).toEither match {
+      case Left(e) if result.isRight => Left(StageFailure("notify", e.toString))
+      case _ => result
+    }
+  }
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** One JSON line per record, written in-process through the Hadoop
+    * `FileSystem` API — no Spark job. The line lands under an
+    * `_`-prefixed name and is renamed to `part-<uuid>.json` once
+    * closed; Spark's file listing skips `_` names, so a reader sees
+    * the whole record or none.
+    */
+  private def appendNotification(
+      spark: SparkSession, note: RunNotification, dir: String): Unit = {
+    val record = json.createObjectNode()
+      .put("pipeline", note.pipeline).put("status", note.status)
+      .put("stage", note.stage).put("reason", note.reason)
+    val name = s"part-${java.util.UUID.randomUUID()}.json"
+    val tmp = new Path(dir, s"_$name")
+    val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(tmp, false)
+    try out.write((json.writeValueAsString(record) + "\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    if (!fs.rename(tmp, new Path(dir, name)))
+      throw new java.io.IOException(s"notification: rename $tmp failed")
   }
 }

@@ -19,6 +19,31 @@ object Writers {
   def parquetOverwrite(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("compression", "snappy").parquet(path)
 
+  /** O-52, staged: the same snappy overwrite written into
+    * `<root>__staging` and then swapped in — rename root → `<root>__old`,
+    * rename staging → root, delete old — the [[recoverStagedSwap]]
+    * protocol with no survivors. The write never touches the path it
+    * replaces, so `df` may read `root`, and a failed or cancelled write
+    * leaves `root` readable and whole: this is the form of a static
+    * overwrite that may run as a [[graft.pipeline.Pipeline.par]] leg.
+    * A caller that reads `root` calls [[recoverStagedSwap]] before it
+    * plans that read: mid-swap the root is missing and the read would
+    * come back empty.
+    */
+  def stagedOverwrite(df: DataFrame, root: String): Unit = {
+    val spark = df.sparkSession
+    recoverStagedSwap(spark, root)
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = new org.apache.hadoop.fs.Path(root + "__staging")
+    val old = new org.apache.hadoop.fs.Path(root + "__old")
+    // overwrite clears a staging a crashed earlier write left behind
+    parquetOverwrite(df, staging.toString)
+    if (fs.exists(rootPath)) mustRename(fs, rootPath, old)
+    mustRename(fs, staging, rootPath)
+    mustDelete(fs, old)
+  }
+
   /** O-53: snappy parquet, append, partitioned by a date column
     * (ref: glue/data_quality_dqdl.py:150-160).
     */
@@ -129,11 +154,17 @@ object Writers {
     *    then rename staging → root and clean up. If staging vanished
     *    (it cannot under the protocol, but be safe) roll BACK by
     *    renaming old → root: the fold is lost, the table is not.
-    *  - root missing, staging exists, old missing → a pre-manifest
-    *    on-disk layout's final-step crash (staging complete): rename
-    *    staging → root.
+    *  - root missing, staging exists, old missing → a crash between a
+    *    complete staging and its rename: [[stagedOverwrite]]'s first
+    *    write of a table, or a pre-manifest fold's last step. Rename
+    *    staging → root, but only a staging whose writes committed
+    *    ([[isCommitted]]). Any other staging is a write that crashed
+    *    before any table existed; it stays where it is, and the next
+    *    write replaces it.
     *
-    * A crash during (1) leaves root untouched and staging partial;
+    * [[stagedOverwrite]] runs the same protocol with no manifest and
+    * no survivors, so its crash states are the ones above. A crash
+    * during (1) leaves root untouched and staging partial;
     * the next fold deletes staging and starts over — staging is never
     * the sole copy of anything until (2) has happened, and from (2) on
     * `old` exists to mark it. Every staged-swap writer and stream
@@ -158,10 +189,31 @@ object Writers {
       mustDelete(fs, old)
       fs.delete(new org.apache.hadoop.fs.Path(rootPath, ManifestName), false)
       ()
-    } else if (!fs.exists(rootPath) && fs.exists(staging)) {
+    } else if (!fs.exists(rootPath) && fs.exists(staging) && isCommitted(fs, staging)) {
       mustRename(fs, staging, rootPath)
       fs.delete(new org.apache.hadoop.fs.Path(rootPath, ManifestName), false)
       ()
+    }
+  }
+
+  /** Whether every write in `dir` committed: a single write carries
+    * its own `_SUCCESS` (as [[Versioned.publish]] checks); a partitioned
+    * store, such as a fold's, is one write per `<col>=<v>` directory,
+    * each with its own. A crashed write leaves data files or a
+    * `_temporary` directory and no marker.
+    */
+  private def isCommitted(
+      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path): Boolean = {
+    def marked(d: org.apache.hadoop.fs.Path) =
+      fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS"))
+    marked(dir) || {
+      // checksum files and the fold manifest are no part of a write
+      val entries = fs.listStatus(dir).filterNot { st =>
+        val n = st.getPath.getName
+        n.startsWith(".") || n == ManifestName
+      }
+      entries.nonEmpty && entries.forall(st =>
+        st.isDirectory && st.getPath.getName.contains("=") && marked(st.getPath))
     }
   }
 
@@ -280,9 +332,9 @@ object Writers {
     * per micro-batch from `foreachBatch`.
     */
   def kvUpsert(spark: SparkSession, batch: DataFrame, keyCols: Seq[String], path: String): Unit = {
-    // a crash between the delete and rename below leaves the merged
-    // snapshot stranded in __staging — complete it before reading, or
-    // the read-miss would silently drop every previously-stored key
+    // a crash mid-swap can leave the table's root missing — complete
+    // the swap before reading, or the read-miss would silently drop
+    // every previously-stored key
     recoverStagedSwap(spark, path)
     val dst = new org.apache.hadoop.fs.Path(path)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -292,10 +344,7 @@ object Writers {
       if (fs.exists(dst))
         graft.gold.Star.upsert(spark.read.schema(batch.schema).parquet(path), batch, keyCols)
       else batch
-    // write to a temp dir then swap — parquet can't overwrite its own input
-    val tmp = path + "__staging"
-    merged.write.mode("overwrite").parquet(tmp)
-    mustDelete(fs, dst)
-    mustRename(fs, new org.apache.hadoop.fs.Path(tmp), dst)
+    // staged: parquet can't overwrite its own input
+    stagedOverwrite(merged, path)
   }
 }

@@ -130,6 +130,15 @@ class ContractSpec extends SparkSpec {
     assert(found.isEmpty, s"scala.concurrent.Future / Implicits.global in main sources: $found")
   }
 
+  test("every medallion sink is an append, a dynamic overwrite or staged") {
+    // a static overwrite deletes the old files before its write job
+    // runs: cancelled as a Pipeline.par leg, or failing mid-job, it
+    // leaves the table empty
+    assert(mainSources.contains("src/main/scala/graft/pipeline/Medallion.scala"))
+    val found = hits("parquetOverwrite(").filter(_.contains("/pipeline/Medallion.scala:"))
+    assert(found.isEmpty, s"static overwrite in the medallion: $found")
+  }
+
   test("entry() returns rows (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -2,15 +2,11 @@ package graft.pipeline
 
 import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.execution.{CollectMetricsExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
@@ -80,39 +76,37 @@ class MedallionSpec extends SparkSpec {
       Seq("2024-03-05", "2024-03-06"))
   }
 
+  private def dimCoinIds(out: String): Seq[String] =
+    spark.read.parquet(s"$out/dim_coins").select("coin_id").as[String].collect().toSeq
+
+  private def coins(range: Range): Set[String] = range.map(i => s"coin_$i").toSet
+
   test("two days with different coins: dim_coins holds their union, each coin once, " +
-      "written in no par leg") {
+      "and is only ever written into its staging directory") {
     val out = tempDir("graft-dim-union")
     // day 1 lands coins 1..60, day 2 coins 31..90: the merge reads the
-    // dim_coins path it then overwrites
+    // dim_coins table its staged write then replaces
     val days = Seq("2024-03-05" -> bronzeJson(60), "2024-03-06" -> bronzeJson(90).drop(30))
-    // the job tags of each execution that writes dim_coins
-    val dimCoinsTags = new java.util.concurrent.ConcurrentLinkedQueue[Set[String]]
-    val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart
-            if s.physicalPlanDescription.contains("Execute InsertIntoHadoopFsRelationCommand") &&
-              s.physicalPlanDescription.contains(s"$out/dim_coins") =>
-          dimCoinsTags.add(s.jobTags)
-        case _ =>
+    val plans = executedPlans {
+      for ((day, rows) <- days) {
+        val res = Medallion.run(spark, Readers.jsonStrings(spark, rows), out,
+          java.time.Instant.parse(s"${day}T12:00:00Z"))
+        assert(res.isRight, res.left.toOption.map(_.reason))
       }
     }
-    spark.sparkContext.addSparkListener(listener)
-    try for ((day, rows) <- days) {
-      val res = Medallion.run(spark, Readers.jsonStrings(spark, rows), out,
-        java.time.Instant.parse(s"${day}T12:00:00Z"))
-      assert(res.isRight, res.left.toOption.map(_.reason))
-    } finally {
-      ListenerBusAccess.drain(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    val ids = spark.read.parquet(s"$out/dim_coins").select("coin_id").as[String].collect()
-    assert(ids.length == 90 && ids.toSet == (1 to 90).map(i => s"coin_$i").toSet)
-    // a par leg's job is cancelled when a sibling fails, and a cancel
-    // after the static overwrite's delete would empty dim_coins
-    assert(dimCoinsTags.size == 2, dimCoinsTags)
-    assert(dimCoinsTags.asScala.forall(!_.exists(_.startsWith("graft-par-"))),
-      s"dim_coins was written in a Pipeline.par leg: $dimCoinsTags")
+    val ids = dimCoinIds(out)
+    assert(ids.length == 90 && ids.toSet == coins(1 to 90))
+    // a par leg's job is cancelled when a sibling fails; a write that
+    // targeted dim_coins itself would delete the table it merges from
+    object Plans extends AdaptiveSparkPlanHelper
+    val targets = plans.flatMap(p => Plans.collect(p) {
+      case w: DataWritingCommandExec => w.cmd
+    }).collect { case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString }
+    val dimCoinsWrites = targets.filter(_.contains("/dim_coins"))
+    assert(dimCoinsWrites.size == 2 && dimCoinsWrites.forall(_.endsWith("/dim_coins__staging")),
+      targets)
+    assert(!new java.io.File(s"$out/dim_coins__staging").exists())
+    assert(!new java.io.File(s"$out/dim_coins__old").exists())
   }
 
   test("a failing gold sink fails the run with its own reason; no job outlives it") {
@@ -132,20 +126,91 @@ class MedallionSpec extends SparkSpec {
       .select("status", "stage").as[(String, String)].head() == ("FAILED", "gold"))
   }
 
-  test("a gold sink failing on a later day leaves dim_coins as the earlier day wrote it") {
+  test("a gold sink failing on a later day leaves dim_coins whole; the rerun gives the union") {
     val out = tempDir("graft-gold-fail-day2")
     def day(d: String, rows: Seq[String]) = Medallion.run(spark, Readers.jsonStrings(spark, rows),
       out, java.time.Instant.parse(s"${d}T12:00:00Z"))
     assert(day("2024-03-05", bronzeJson(60)).isRight)
     // a plain file where day 1's dim_date table was; day 2 brings coins 31..90
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$out/dim_date"))
-    Files.writeString(java.nio.file.Paths.get(s"$out/dim_date"), "not a table")
+    val dimDate = java.nio.file.Paths.get(s"$out/dim_date")
+    org.apache.commons.io.FileUtils.deleteDirectory(dimDate.toFile)
+    Files.writeString(dimDate, "not a table")
     val res = day("2024-03-06", bronzeJson(90).drop(30))
     assert(activeJobsSettled().isEmpty, "a sibling sink's job outlived the run")
     assert(res.left.toOption.map(_.stage) == Some("gold"), res)
-    // the failed day never reached the dim_coins overwrite: day 1's coins, each once
-    val ids = spark.read.parquet(s"$out/dim_coins").select("coin_id").as[String].collect()
-    assert(ids.sorted.toSeq == (1 to 60).map(i => s"coin_$i").sorted)
+    // the dim_coins leg was cancelled (day 1's coins) or had committed
+    // (the union): never fewer than day 1's coins, each coin once
+    val ids = dimCoinIds(out)
+    assert(ids.distinct == ids, ids)
+    assert(ids.toSet == coins(1 to 60) || ids.toSet == coins(1 to 90), ids.sorted)
+    // remove the fault and run day 2 again
+    Files.delete(dimDate)
+    assert(day("2024-03-06", bronzeJson(90).drop(30)).isRight)
+    val rerun = dimCoinIds(out)
+    assert(rerun.length == 90 && rerun.toSet == coins(1 to 90))
+    assert(!new java.io.File(s"$out/dim_coins__staging").exists())
+    assert(!new java.io.File(s"$out/dim_coins__old").exists())
+  }
+
+  /** One dim_coins row per coin of `range`, shaped as the merge writes it. */
+  private def dimCoinRows(range: Range) =
+    range.map(i => (s"coin_$i", s"c$i", s"Coin $i")).toDF("coin_id", "symbol", "name")
+
+  // Each state is where the staged swap of a day's dim_coins can crash;
+  // the next day must roll it forward (or past it) to the union of the
+  // coins of every day that committed, with no staging or old left over.
+  // Day 1 lands coins 1..60, the crashed day 2 coins 31..90.
+  private val crashStates: Seq[(String, String => Set[String])] = Seq(
+    "(a) root renamed aside, complete staging not yet renamed in" -> { dim =>
+      assert(new java.io.File(dim).renameTo(new java.io.File(s"${dim}__old")))
+      dimCoinRows(1 to 90).write.parquet(s"${dim}__staging")
+      coins(1 to 90)
+    },
+    "(b) staging renamed in, old not yet deleted" -> { dim =>
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(dim), new java.io.File(s"${dim}__old"))
+      dimCoinRows(1 to 90).write.mode("overwrite").parquet(dim)
+      coins(1 to 90)
+    },
+    "(c) first day's write crashed: no root, staging without _SUCCESS" -> { dim =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dim))
+      dimCoinRows(1 to 10).write.parquet(s"${dim}__staging")
+      for (f <- Seq("_SUCCESS", "._SUCCESS.crc"))
+        Files.deleteIfExists(java.nio.file.Paths.get(s"${dim}__staging", f))
+      // day 1's dim_coins never committed; its partial rows must not count
+      Set.empty
+    })
+
+  for ((state, build) <- crashStates)
+    test(s"dim_coins crash state $state: the next day ends with the union, each coin once") {
+      val out = tempDir("graft-dim-crash")
+      assert(Medallion.run(spark, Readers.jsonStrings(spark, bronzeJson(60)), out,
+        java.time.Instant.parse("2024-03-05T12:00:00Z")).isRight)
+      val committed = build(s"$out/dim_coins")
+      // day 3 brings coins 91..150
+      val res = Medallion.run(spark, Readers.jsonStrings(spark, bronzeJson(150).drop(90)), out,
+        java.time.Instant.parse("2024-03-07T12:00:00Z"))
+      assert(res.isRight, res.left.toOption.map(_.reason))
+      val ids = dimCoinIds(out)
+      assert(ids.distinct == ids, ids)
+      assert(ids.toSet == committed ++ coins(91 to 150), ids.sorted)
+      assert(!new java.io.File(s"$out/dim_coins__staging").exists())
+      assert(!new java.io.File(s"$out/dim_coins__old").exists())
+    }
+
+  test("a notification that cannot be written fails the run as notify; every sink committed") {
+    val out = tempDir("graft-notify-fail")
+    // a plain file where the notification directory should be
+    Files.writeString(java.nio.file.Paths.get(s"$out/notifications"), "not a directory")
+    val res = Medallion.run(spark, Readers.jsonStrings(spark, endToEndRows), out,
+      java.time.Instant.parse("2024-03-05T12:00:00Z"))
+    val f = res.left.toOption.get
+    assert(f.stage == "notify" && f.reason.contains(s"$out/notifications"), f)
+    assert(spark.read.parquet(s"$out/silver").count() == 60)
+    assert(spark.read.parquet(s"$out/fact_crypto_daily").count() == 60)
+    assert(spark.read.parquet(s"$out/dim_date").count() == 1)
+    assert(dimCoinIds(out).toSet == coins(1 to 60))
+    assert(spark.read.json(s"$out/dlq").count() == 1)
   }
 
   test("the dedup window runs once per run; sink file counts unchanged") {
@@ -203,7 +268,8 @@ class MedallionSpec extends SparkSpec {
         res = Medallion.run(spark, bronze, out, java.time.Instant.parse("2024-03-05T12:00:00Z"))
       }
       assert(res == Left(StageFailure("transform", "empty input")), shape)
-      if (shape == "no schema") assert(plans.size == 1, s"$shape: only the notification runs")
+      // the notification is an in-process file write, not a query
+      if (shape == "no schema") assert(plans.isEmpty, s"$shape: ${plans.size} queries ran")
       for (t <- Seq("silver", "fact_crypto_daily", "dim_coins", "dim_date"))
         assert(!new java.io.File(s"$out/$t").exists(), s"$shape wrote $t")
       // the DLQ leg may land a zero-row file, never a row

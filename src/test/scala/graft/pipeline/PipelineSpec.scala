@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.{JobExecutionStatus, TaskContext}
+import org.apache.spark.{JobExecutionStatus, ListenerBusAccess, TaskContext}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -45,6 +46,64 @@ class PipelineSpec extends SparkSpec {
     val notes = spark.read.json(s"$tmp/notify")
       .select("status", "stage").as[(String, String)].collect().toSet
     assert(notes == Set(("SUCCEEDED", ""), ("FAILED", "gate")))
+  }
+
+  test("runNotified: a reason with quotes, escapes and non-ASCII text reads back unchanged") {
+    val tmp = tempDir("graft-notify-escape")
+    val reason = "quote \" backslash \\ newline \n tab \t non-ASCII é ✓ 日本 \uD83D\uDE80"
+    val res = Pipeline.runNotified(spark, "etl", Seq(1).toDF("v"),
+      Seq("gate" -> (_ => Left(StageFailure("gate", reason)))), s"$tmp/notify")
+    assert(res == Left(StageFailure("gate", reason)))
+    val notes = spark.read.json(s"$tmp/notify")
+      .select("pipeline", "status", "stage", "reason").as[(String, String, String, String)]
+      .collect().toSeq
+    assert(notes == Seq(("etl", "FAILED", "gate", reason)))
+  }
+
+  test("runNotified writes its record without a Spark job") {
+    val tmp = tempDir("graft-notify-nojob")
+    val df = Seq(1).toDF("v")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    ListenerBusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(Pipeline.runNotified(spark, "etl", df,
+        Seq("id" -> Pipeline.stage(identity)), s"$tmp/notify").isRight)
+      ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, s"${jobs.get} jobs ran")
+    val names = new java.io.File(s"$tmp/notify").list().filterNot(_.startsWith(".")).toSeq
+    assert(names.size == 1 && names.head.matches("part-[0-9a-f-]{36}\\.json"), names)
+  }
+
+  test("runNotified: an orphaned temp record is invisible to readers") {
+    val tmp = tempDir("graft-notify-orphan")
+    assert(Pipeline.runNotified(spark, "etl", Seq(1).toDF("v"),
+      Seq("ok" -> Pipeline.stage(identity)), s"$tmp/notify").isRight)
+    // a record whose writer died before the rename
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$tmp/notify/_part-${java.util.UUID.randomUUID()}.json"),
+      """{"pipeline":"etl","status":"FAILED","stage":"half","reason":"""")
+    val notes = spark.read.json(s"$tmp/notify").select("status", "stage")
+      .as[(String, String)].collect().toSeq
+    assert(notes == Seq(("SUCCEEDED", "")))
+  }
+
+  test("runNotified never throws: an unwritable record fails only a successful run") {
+    val tmp = tempDir("graft-notify-unwritable")
+    // a plain file where the notification directory should be
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$tmp/notify"), "not a directory")
+    val df = Seq(1).toDF("v")
+    val ok = Pipeline.runNotified(spark, "etl", df,
+      Seq("ok" -> Pipeline.stage(identity)), s"$tmp/notify")
+    assert(ok.left.toOption.map(_.stage) == Some("notify"), ok)
+    assert(ok.left.toOption.get.reason.contains(s"$tmp/notify"), ok)
+    val failed = Pipeline.runNotified(spark, "etl", df,
+      Seq("gate" -> (_ => Left(StageFailure("gate", "dq failed")))), s"$tmp/notify")
+    assert(failed == Left(StageFailure("gate", "dq failed")))
   }
 
   test("readOrEmpty falls back to an empty frame with the right schema") {

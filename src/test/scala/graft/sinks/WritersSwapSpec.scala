@@ -142,4 +142,24 @@ class WritersSwapSpec extends SparkSpec {
     val got = spark.read.parquet(path).as[(Int, String)].collect().sorted.toSeq
     assert(got == Seq((1, "a"), (2, "B"), (3, "c")))
   }
+
+  test("stagedOverwrite replaces the table it reads; a failed write leaves it whole") {
+    val tmp = tempDir("graft-staged")
+    val root = s"$tmp/t"
+    Writers.stagedOverwrite(Seq(1, 2).toDF("k"), root)
+    // the new table is read from the root it replaces
+    Writers.stagedOverwrite(spark.read.parquet(root).union(Seq(3).toDF("k")), root)
+    def ks = spark.read.parquet(root).as[Int].collect().sorted.toSeq
+    assert(ks == Seq(1, 2, 3))
+    val boom = org.apache.spark.sql.functions.udf((k: Int) =>
+      if (k == 2) throw new IllegalStateException("boom") else k)
+    intercept[Exception] {
+      Writers.stagedOverwrite(spark.read.parquet(root).select(boom($"k").as("k")), root)
+    }
+    assert(ks == Seq(1, 2, 3))
+    assert(!new File(root + "__old").exists())
+    // the failed write's staging is not a table: recovery leaves root as it is
+    Writers.recoverStagedSwap(spark, root)
+    assert(ks == Seq(1, 2, 3))
+  }
 }
