@@ -8470,8 +8470,7 @@ object SparkEntry {
     val qrels = qs.map { case (qid, ts) =>
       val termArr = typedLit(ts)
       docs.select(lit(qid).as("query_id"), col("doc_id"))
-        .where(size(filter(array_distinct(Text.tokens(col("text"))),
-          t => array_contains(termArr, t))) >= 2)
+        .where(size(array_intersect(Text.tokens(col("text")), termArr)) >= 2)
     }.reduce(_ unionByName _)
     Text.retrievalEval(results, qrels, k = 10)
       .orderBy(col("query_id"))

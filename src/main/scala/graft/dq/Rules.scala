@@ -251,7 +251,9 @@ object Rules {
     * `DataQualityEvaluationResult` ("Passed"/"Failed") and the array of
     * failing row-rule names (ref: glue/data_quality_dqdl.py:89-106).
     * Only per-row rules (ColumnValues, IsComplete) participate — dataset
-    * rules have no row granularity, as in DQDL.
+    * rules have no row granularity, as in DQDL. A null predicate passes.
+    * The verdict reads the predicates, not the array, so [[route]]'s
+    * passed side prunes the higher-order array and stays in codegen.
     */
   def rowOutcomes(df: DataFrame, rules: Seq[DqRule]): DataFrame = {
     val rowRules: Seq[(String, Column)] = rules.collect {
@@ -262,10 +264,9 @@ object Rules {
     val failArr = filter(
       array(rowRules.map { case (n, pass) => when(!pass, lit(n)) }: _*),
       _.isNotNull)
+    val passed = rowRules.map { case (_, pass) => coalesce(pass, lit(true)) }.reduce(_ && _)
     df.withColumn("DataQualityRulesFail", failArr)
-      .withColumn(
-        "DataQualityEvaluationResult",
-        when(size(col("DataQualityRulesFail")) === 0, lit("Passed")).otherwise(lit("Failed")))
+      .withColumn("DataQualityEvaluationResult", when(passed, lit("Passed")).otherwise(lit("Failed")))
   }
 
   /** O-41 routing: passed→Silver, failed→DLQ, bookkeeping cols dropped

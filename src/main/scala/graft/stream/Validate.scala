@@ -11,8 +11,9 @@ import graft.sinks.Writers
   * Pure `DataFrame => DataFrame` column logic — usable identically in
   * batch and Structured Streaming (SURVEY.md §7.1 stream/Validate). The
   * reference evaluates these rules row-at-a-time in Python; here they
-  * are Catalyst predicates inside whole-stage codegen. [[routeBatch]]
-  * is the one streaming body that lands the split.
+  * are plain Catalyst predicates with no higher-order function (see
+  * [[Validate.annotate]]), so they run inside whole-stage codegen.
+  * [[routeBatch]] is the one streaming body that lands the split.
   */
 final case class ValidationRule(reason: String, bad: Column)
 
@@ -34,20 +35,16 @@ object Validate {
   /** Alert predicate (ref: streaming/consumer.py:86): 24h change > +10%. */
   def cryptoAlert: Column = col("price_change_percentage_24h") > lit(new java.math.BigDecimal("10"))
 
-  /** O-60: annotate rows with accumulated failure reasons
-    * (" | "-joined, ref: streaming/consumer.py:63) and validity.
-    * `filter(arr, !isNull)` drops non-matching `when`s, mirroring the
-    * reference's `error_reasons` list append.
+  /** O-60: annotate rows with validity and the failure reasons, " | "-joined
+    * in rule order (ref: streaming/consumer.py:63); a null rule does not fire.
+    * `concat_ws` skips the non-matching `when`s, as the reference's
+    * `error_reasons` list append does. There is no reason array: its
+    * higher-order `filter` would keep the split's filter and projection
+    * out of whole-stage codegen (ValidateSpec pins the plan).
     */
-  def annotate(df: DataFrame, rules: Seq[ValidationRule]): DataFrame = {
-    val reasons = filter(
-      array(rules.map(r => when(r.bad, lit(r.reason))): _*),
-      _.isNotNull)
-    df.withColumn("__reasons", reasons)
-      .withColumn("is_valid", size(col("__reasons")) === 0)
-      .withColumn("error_reason", concat_ws(" | ", col("__reasons")))
-      .drop("__reasons")
-  }
+  def annotate(df: DataFrame, rules: Seq[ValidationRule]): DataFrame =
+    df.withColumn("is_valid", !rules.foldLeft(lit(false))((any, r) => any || coalesce(r.bad, lit(false))))
+      .withColumn("error_reason", concat_ws(" | ", rules.map(r => when(r.bad, lit(r.reason))): _*))
 
   /** O-61: good/bad routing — two complementary filters over one
     * (cacheable) annotated frame; in streaming, called inside

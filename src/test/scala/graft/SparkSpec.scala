@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.ListenerBusAccess
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+import org.apache.spark.sql.execution.{InputAdapter, QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,6 +34,26 @@ trait SparkSpec extends AnyFunSuite {
     try { f; ListenerBusAccess.drain(spark.sparkContext) }
     finally spark.listenerManager.unregister(listener)
     plans.synchronized(plans.toVector)
+  }
+
+  /** Where `df`'s physical plan leaves whole-stage codegen: the
+    * operators above the leaf scans that sit outside every
+    * `WholeStageCodegenExec`, and the higher-order functions among the
+    * plan's expressions (one takes its operator out of codegen). Both
+    * are empty for a plan that runs as compiled code end to end. An
+    * adaptive plan is read as it stands, so run it first.
+    */
+  def codegenGaps(df: DataFrame): (Seq[String], Seq[String]) = {
+    def outside(p: SparkPlan, inStage: Boolean): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => outside(a.executedPlan, inStage)
+      case w: WholeStageCodegenExec => outside(w.child, inStage = true)
+      case i: InputAdapter => outside(i.child, inStage = false)
+      case leaf if leaf.children.isEmpty => Nil
+      case op => (if (inStage) Nil else Seq(op.nodeName)) ++ op.children.flatMap(outside(_, inStage))
+    }
+    val plan = df.queryExecution.executedPlan
+    val hofs = plan.flatMap(_.expressions.flatMap(_.collect { case h: HigherOrderFunction => h.prettyName }))
+    (outside(plan, inStage = false), hofs)
   }
 
   /** Active job ids once the listener bus has caught up. A cancelled

@@ -175,6 +175,38 @@ class DqSpec extends SparkSpec {
     assert(!passed.columns.contains("DataQualityEvaluationResult"))
   }
 
+  test("rowOutcomes: the verdict equals the one derived from the failing-rule array") {
+    // `a < b` is null where either side is: a null predicate passes
+    val nullable = Seq(None, Some(-1), Some(0), Some(1), Some(5))
+    val rulesets = Seq(
+      Seq(ColumnValues("a", _ > 0, "gt_0"), ColumnValues("a", _ < col("b"), "lt_b")),
+      Seq(ColumnValues("a", _ < col("b"), "lt_b"), IsComplete("b")))
+    for (seed <- Seq(1, 2, 3); rules <- rulesets) {
+      val rnd = new scala.util.Random(seed)
+      val df = (1 to 200).map(i => (i, nullable(rnd.nextInt(5)), nullable(rnd.nextInt(5))))
+        .toDF("id", "a", "b")
+      val fromArray = when(size(col("DataQualityRulesFail")) === 0, "Passed").otherwise("Failed")
+      val verdicts = Rules.rowOutcomes(df, rules)
+        .select(col("DataQualityEvaluationResult"), fromArray.as("from_array"))
+        .as[(String, String)].collect().toSeq
+      assert(verdicts.forall { case (v, a) => v == a }, s"seed $seed, ${rules.map(_.name)}")
+      assert(verdicts.map(_._1).toSet == Set("Passed", "Failed"))
+    }
+  }
+
+  test("route: the passed side runs inside whole-stage codegen") {
+    val lineitem = Seq((1, 2.0, 0.01), (2, 50.0, 0.09), (3, -1.0, 0.0))
+      .toDF("id", "l_quantity", "l_discount").persist()
+    try {
+      val (passed, _) = Rules.route(Rules.rowOutcomes(lineitem, Seq(
+        ColumnValues("l_quantity", _ > 0, "gt_0"),
+        ColumnValues("l_quantity", _ <= 45, "le_45"),
+        ColumnValues("l_discount", _ <= 0.05, "le_005"))))
+      assert(codegenGaps(passed) == ((Nil, Nil)), passed.queryExecution.executedPlan.toString)
+      assert(passed.as[(Int, Double, Double)].collect().toSeq == Seq((1, 2.0, 0.01)))
+    } finally { lineitem.unpersist(); () }
+  }
+
   test("robustOutlierStats: MAD ignores the outlier the mean/stddev would absorb") {
     // group g: values clustered at 10 ± 1 plus one wild point. median=10,
     // adevs = {1,0,1,0,1,990} → mad=1; only the wild point exceeds 3*mad
